@@ -544,7 +544,10 @@ object DedupOps {
     // propagation is duplicate-insensitive (every aggregation below is a
     // min) and this codebase's pair producers emit distinct (a < b)
     // pairs by construction — the distinct was a pure extra shuffle.
-    val edges = pairs.select(explode(array(
+    // An edge with a null endpoint joins nothing: drop it here, once, so
+    // both branches below see the same graph.
+    val edges = pairs.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .select(explode(array(
         struct(col(aCol).as("x"), col(bCol).as("y")),
         struct(col(bCol).as("x"), col(aCol).as("y")))).as("e"))
       .select(col("e.x").as("x"), col("e.y").as("y"))

@@ -533,56 +533,85 @@ object IceLite {
         .withColumn("_deleted", lit(false))
         .withColumn("_bucket",
           graft.functions.Salt.bucket(col(keyName), m.numBuckets)),
-      bucketCol = Some("_bucket"), schemaId = m.currentSchemaId)
+      m.currentSchemaId)
     commit(dir, epochKey, "append", newFiles = staged, catalog = catalog)
   }
 
-  /** Write `df` (which must already contain the internal columns, and a
-    * `_bucket` column when `bucketCol` is set) into staged immutable data
-    * files under `data/`, returning their entries. Nothing is visible until
-    * `commit` publishes them in metadata — a crash leaves only orphans.
+  /** The one read-then-replace commit: stage `df` (internal columns plus
+    * `_bucket`) and publish it as the new content of `buckets`, validated
+    * against `base` — the metadata the rows were computed from — so a
+    * concurrent commit into any of those buckets makes this one throw
+    * [[CommitConflictException]] instead of clobbering it (callers wrap
+    * the whole read-compute-replace in [[retryOnConflict]]). Files are
+    * written under `newSchema` when the commit evolves the schema, else
+    * under `base`'s current schema.
+    */
+  def replaceBuckets(dir: String, epochKey: String, operation: String,
+      base: Metadata, df: DataFrame, buckets: Set[Int],
+      newSchema: Option[Schema] = None): Metadata = {
+    val staged = stageFiles(dir, epochKey, df,
+      newSchema.fold(base.currentSchemaId)(_.schemaId))
+    graft.util.Phase("stage.commit") {
+      commit(dir, epochKey, operation, newFiles = staged,
+        replacedBuckets = buckets, newSchema = newSchema,
+        baseVersion = Some(base.version))
+    }
+  }
+
+  /** Run `body` — one whole read-then-replace — again when its commit
+    * loses to a concurrent state-changing commit: re-executing against
+    * the new current version is always sound, because the body re-reads
+    * everything it replaces. Gives up after three conflicts, rethrowing
+    * the last.
+    */
+  def retryOnConflict[A](body: => A): A = {
+    var left = 3
+    while (true) {
+      try return body
+      catch {
+        case e: CommitConflictException =>
+          left -= 1
+          if (left <= 0) throw e
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** Write `df` (which must already contain the internal columns and a
+    * `_bucket` column) into staged immutable data files under `data/`,
+    * returning their entries. Nothing is visible until `commit` publishes
+    * them in metadata — a crash leaves only orphans.
     */
   def stageFiles(dir: String, epochKey: String, df: DataFrame,
-      bucketCol: Option[String], schemaId: Int): Seq[DataFileEntry] = {
+      schemaId: Int): Seq[DataFileEntry] = {
     val safe = epochKey.replaceAll("[^A-Za-z0-9._-]", "_")
     val staging = Paths.get(dir, "data", s".staging-$safe-${System.nanoTime()}")
     graft.util.Phase("stage.write-job") {
-      bucketCol match {
-        case Some(bc) =>
-          df.write.partitionBy(bc).mode("overwrite").parquet(staging.toString)
-        case None =>
-          df.write.mode("overwrite").parquet(staging.toString)
-      }
+      df.write.partitionBy("_bucket").mode("overwrite").parquet(staging.toString)
     }
     // harvest part files into data/, named by epoch+bucket (collision-free:
     // one staging dir per attempt; final names carry a sequence number)
     val entries = scala.collection.mutable.ArrayBuffer[DataFileEntry]()
     var seq = 0
-    def harvest(src: Path, bucket: Int): Unit = {
-      val it = Files.list(src).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.startsWith("part-") && n.endsWith(".parquet")) {
-          val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
-          Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-          entries += DataFileEntry(dst.toString, bucket, schemaId, -1L)
-          seq += 1
-        }
-      }
-    }
     graft.util.Phase("stage.harvest") {
-      bucketCol match {
-        case Some(bc) =>
-          val it = Files.list(staging).iterator()
+      val dirs = Files.list(staging).iterator()
+      while (dirs.hasNext) {
+        val d = dirs.next()
+        val dn = d.getFileName.toString
+        if (dn.startsWith("_bucket=")) {
+          val bucket = dn.substring("_bucket=".length).toInt
+          val it = Files.list(d).iterator()
           while (it.hasNext) {
-            val d = it.next()
-            val n = d.getFileName.toString
-            if (n.startsWith(s"$bc=")) {
-              harvest(d, n.substring(bc.length + 1).toInt)
+            val p = it.next()
+            val n = p.getFileName.toString
+            if (n.startsWith("part-") && n.endsWith(".parquet")) {
+              val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
+              Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
+              entries += DataFileEntry(dst.toString, bucket, schemaId, -1L)
+              seq += 1
             }
           }
-        case None => harvest(staging, 0)
+        }
       }
     }
     // remove staging leftovers (_SUCCESS etc.)

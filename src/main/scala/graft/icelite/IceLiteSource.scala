@@ -231,8 +231,7 @@ object IceLiteSource {
       val bucketed = withInternals(data).withColumn("_bucket",
         graft.functions.Salt.bucket(
           org.apache.spark.sql.functions.col(keyName), m.numBuckets))
-      val staged = IceLite.stageFiles(dir, epoch, bucketed,
-        bucketCol = Some("_bucket"), schemaId = m.currentSchemaId)
+      val staged = IceLite.stageFiles(dir, epoch, bucketed, m.currentSchemaId)
       IceLite.commit(dir, epoch, "overwrite", newFiles = staged,
         replacedBuckets = (0 until m.numBuckets).toSet)
     }

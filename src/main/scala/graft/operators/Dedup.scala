@@ -36,30 +36,6 @@ object Dedup {
       .select(col("_w.*"))
   }
 
-  /** Winning event per url, payload-light variant for HIGH-DUPLICATION
-    * replays (a full binlog replay sees every historical version of every
-    * url — 10–100+ events per key). [[latestPerKey]] funnels the whole
-    * payload (html, ~KB/row) through a SortAggregate buffer: the map-side
-    * sort + combine touches every payload byte, which is memory-bandwidth
-    * bound and scales poorly with threads. This variant:
-    *
-    *  1. aggregates only `(url → max (warc_ts, offset, partition))` —
-    *     a fixed-width ~50-byte row per event through the agg,
-    *  2. LEFT SEMI joins events against the winner set on (url, version) —
-    *     AQE turns this into a broadcast semi join whenever the distinct
-    *     key set fits (a replay's key set ≪ its event count), so payloads
-    *     are filtered IN PLACE, never shuffled,
-    *  3. drops exact wire-duplicate copies of the winner (tiny shuffle,
-    *     one row per key).
-    *
-    * Same result as [[latestPerKey]] (identical win order; wire duplicates
-    * are byte-identical copies, so either copy is the same row). When the
-    * winner set is too big to broadcast, AQE keeps a shuffled semi join —
-    * payload shuffle equal to the agg form, never worse.
-    */
-  def latestPerKeyViaWinners(events: DataFrame): DataFrame =
-    latestPerKeyAdaptive(events)
-
   /** [[latestPerKeyAdaptive]] that also reports the winner count when the
     * broadcast path ran (None on the large-key fallback). The count is
     * free — the adaptive size check already computes it — and callers
@@ -76,7 +52,15 @@ object Dedup {
     (df, n)
   }
 
-  /** Size-checked payload-light dedup for batch replays. The winner set
+  /** Winning event per url, payload-light variant for HIGH-DUPLICATION
+    * replays (a full binlog replay sees every historical version of every
+    * url — 10–100+ events per key), where [[latestPerKey]] would funnel
+    * the whole payload (html, ~KB/row) through a SortAggregate buffer.
+    * Same result as [[latestPerKey]] (identical win order; wire
+    * duplicates are byte-identical copies, so either copy is the same
+    * row).
+    *
+    * Size-checked for batch replays: the winner set
     * `(url → max (warc_ts, offset, partition))` is computed over four
     * pruned fixed-width columns, cached, and counted; when it fits
     * (`maxBroadcastKeys`) the events are LEFT SEMI joined against an

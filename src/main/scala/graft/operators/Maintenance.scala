@@ -29,24 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** Re-run `body` when its read-then-replace commit loses to a concurrent
-    * state-changing commit (the [[graft.icelite.CommitConflictException]]
-    * validation): maintenance is state-preserving, so re-executing against
-    * the new current version is always the right response.
-    */
-  private def retryOnConflict[A](attempts: Int = 3)(body: => A): A = {
-    var left = attempts
-    while (true) {
-      try return body
-      catch {
-        case e: graft.icelite.CommitConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** Rewrite every bucket with more than `maxFilesPerBucket` live files.
     * Returns the number of buckets compacted. Safe to run CONCURRENTLY
     * with ingest: the commit is validated against the version the rows
@@ -54,7 +36,7 @@ object Maintenance {
     * conflict and re-execute rather than clobber the merge's rows.
     */
   def compact(spark: SparkSession, dir: String, epochKey: String,
-      maxFilesPerBucket: Int = 4): Int = retryOnConflict() {
+      maxFilesPerBucket: Int = 4): Int = IceLite.retryOnConflict {
     val m = IceLite.load(dir)
     if (m.committedEpoch(epochKey)) return 0
     val crowded = m.filesPerBucket.filter(_._2 > maxFilesPerBucket).keySet
@@ -63,11 +45,8 @@ object Maintenance {
       .withColumn("_bucket",
         graft.functions.Salt.bucket(col(m.currentSchema.fields.head.name),
           m.numBuckets))
-    val staged = IceLite.stageFiles(dir, epochKey,
-      rows.repartition(col("_bucket")), bucketCol = Some("_bucket"),
-      schemaId = m.currentSchemaId)
-    IceLite.commit(dir, epochKey, "compact", newFiles = staged,
-      replacedBuckets = crowded, baseVersion = Some(m.version))
+    IceLite.replaceBuckets(dir, epochKey, "compact", m,
+      rows.repartition(col("_bucket")), crowded)
     crowded.size
   }
 
@@ -98,7 +77,7 @@ object Maintenance {
     * arrival after that would resurrect a deleted url.
     */
   def expireTombstones(spark: SparkSession, dir: String, epochKey: String,
-      olderThan: java.sql.Timestamp): Long = retryOnConflict() {
+      olderThan: java.sql.Timestamp): Long = IceLite.retryOnConflict {
     val m = IceLite.load(dir)
     if (m.committedEpoch(epochKey)) return 0L
     val tsName = m.currentSchema.fields.find(_.id == Merge.versionFieldId)
@@ -118,12 +97,10 @@ object Maintenance {
     val dropped = stats.getLong(0)
     if (dropped == 0) return 0L
     val touched = stats.getSeq[Int](1).toSet
-    val staged = IceLite.stageFiles(dir, epochKey,
+    IceLite.replaceBuckets(dir, epochKey, "expire-tombstones", m,
       withBucket(IceLite.readInternal(spark, dir, buckets = Some(touched)))
         .filter(!expired).repartition(col("_bucket")),
-      bucketCol = Some("_bucket"), schemaId = m.currentSchemaId)
-    IceLite.commit(dir, epochKey, "expire-tombstones", newFiles = staged,
-      replacedBuckets = touched, baseVersion = Some(m.version))
+      touched)
     dropped
   }
 

@@ -171,14 +171,9 @@ object Merge {
               col("_bucket")): _*)
         case None => salted
       }
-      val staged = graft.util.Phase("merge.ctas-write") {
-        IceLite.stageFiles(tableDir, epochKey, withText,
-          bucketCol = Some("_bucket"), schemaId = schema.schemaId)
-      }
-      val post = graft.util.Phase("merge.commit") {
-        IceLite.commit(tableDir, epochKey, "merge",
-          newFiles = staged, replacedBuckets = (0 until nBuckets).toSet,
-          baseVersion = Some(pre.version))
+      val post = graft.util.Phase("merge.ctas-write") {
+        IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, withText,
+          (0 until nBuckets).toSet)
       }
       return CommitResult(epochKey, committed = post.epochKey == epochKey,
         post.snapshotId, (0 until nBuckets).toSet, eventsIn = -1L,
@@ -233,16 +228,12 @@ object Merge {
     val mergeSalts = effectiveSalts(affected.size, Some(applied))
     val salted = merged.repartition(
       col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(mergeSalts.toLong)))
-    val staged = IceLite.stageFiles(tableDir, epochKey, salted,
-      bucketCol = Some("_bucket"), schemaId = schema.schemaId)
-    newRows.unpersist()
-
-    // baseVersion: the merged content was computed from `pre`'s bucket
-    // files — a concurrent commit into an affected bucket means those rows
-    // are stale and the commit must conflict, not clobber
-    val post = IceLite.commit(tableDir, epochKey, "merge",
-      newFiles = staged, replacedBuckets = affected,
-      baseVersion = Some(pre.version))
+    // validated against `pre`: the merged content was computed from its
+    // bucket files — a concurrent commit into an affected bucket means
+    // those rows are stale and the commit must conflict, not clobber
+    val post =
+      try IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, salted, affected)
+      finally newRows.unpersist()
     CommitResult(epochKey, committed = post.epochKey == epochKey,
       post.snapshotId, affected, eventsIn = -1L,
       rowsUpserted = applied - deletes, rowsDeleted = deletes, lineage,

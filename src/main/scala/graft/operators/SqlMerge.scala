@@ -3,7 +3,7 @@ package graft.operators
 import scala.annotation.tailrec
 
 import graft.functions.Salt
-import graft.icelite.{CommitConflictException, IceLite, IceLiteRelation}
+import graft.icelite.{IceLite, IceLiteRelation}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, EqualTo, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
@@ -131,15 +131,12 @@ object SqlMerge {
   private def cc(e: Expression): Column = ColumnBridge.column(e)
 
   /** Execute once against the current table version; throws
-    * [[CommitConflictException]] if a concurrent commit invalidates the
-    * read (the command's retry loop re-executes).
+    * [[graft.icelite.CommitConflictException]] if a concurrent commit
+    * invalidates the read (the command's retry loop re-executes).
     */
   def execute(spark: SparkSession, merge: MergeIntoTable): Unit = {
-    val rel = iceTarget(merge.targetTable).getOrElse(
-      sys.error("SqlMerge on a non-icelite target"))
-    val dir = rel.dir
-    val tgtAttrs = merge.targetTable.output.map(_.asInstanceOf[AttributeReference])
-    val pre = IceLite.load(dir)
+    val t = target(merge.targetTable, evolving = merge.withSchemaEvolution)
+    val (pre, tgtAttrs, keyAttr, nB) = (t.pre, t.attrs, t.keyAttr, t.nB)
     // WITH SCHEMA EVOLUTION: the resolution rule widened the analyzed
     // target with the source's new columns. The TABLE is NOT altered up
     // front — the new columns ride the merge's OWN commit
@@ -150,28 +147,19 @@ object SqlMerge {
     // no-ops — leaves the table schema untouched. The pinned target scan
     // null-fills the not-yet-existing columns, exactly what a post-ALTER
     // read of the old files would produce, so the dataflow is unchanged.
-    val existingNames = pre.currentSchema.fields.map(_.name).toSet
-    val evolveAttrs: Seq[AttributeReference] =
-      if (merge.withSchemaEvolution)
-        tgtAttrs.filterNot(a => existingNames.contains(a.name))
-      else Nil
-    schemaGuard(pre, tgtAttrs.filterNot(evolveAttrs.contains), dir)
-    // new field ids are minted above every id EVER used (all schemas,
+    // New field ids are minted above every id EVER used (all schemas,
     // not just current): after a dropColumn, max(current)+1 would REUSE
     // the dropped id and the by-field-id read reconciliation would
     // resurrect the dropped column's stored values into the new column
     val usedIds = pre.schemas.flatMap(_.fields.map(_.id)).toSet
     val newSchema: Option[IceLite.Schema] =
-      if (evolveAttrs.isEmpty) None
+      if (t.evolved.isEmpty) None
       else Some(IceLite.Schema(
         pre.schemas.map(_.schemaId).max + 1,
-        evolveAttrs.zipWithIndex.foldLeft(pre.currentSchema.fields) {
+        t.evolved.zipWithIndex.foldLeft(pre.currentSchema.fields) {
           case (fs, (a, k)) => fs :+ IceLite.Field(usedIds.max + 1 + k,
             a.name, a.dataType, nullable = true)
         }))
-    val keyAttr = tgtAttrs.head
-    val keyName = keyAttr.name
-    val nB = pre.numBuckets
 
     val matched = clauses(merge.matchedActions, tgtAttrs)
     val inserts = clauses(merge.notMatchedActions, tgtAttrs)
@@ -227,9 +215,7 @@ object SqlMerge {
     // aliases, so the merge condition and assignment expressions resolve
     // against it unchanged
     def mergedFrame(buckets: Option[Set[Int]]): DataFrame = {
-      val tgtDF = pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets)
-
-      val tb = tgtDF
+      val tb = pinnedTarget(spark, t, buckets)
         .withColumn("__rid", monotonically_increasing_id())
         .withColumn("__t_ex", lit(true))
       val sb = srcDF
@@ -302,30 +288,9 @@ object SqlMerge {
           .otherwise(clauseValue(nmbs, col("__tact"), j, old))
       }
 
-      withCard.select(
-        tgtAttrs.indices.map(j => finalValue(j).as(tgtAttrs(j).name)) ++ Seq(
-          keep.as("__keep"), changed.as("__changed"),
-          when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB))
-            .as("__oldb"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-        .withColumn("__newb",
-          when(col("__keep"), Salt.bucket(col(keyName), nB)))
+      marked(withCard, t, tgtAttrs.indices.map(finalValue), keep, changed,
+        when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB)))
     }
-
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__changed"))
-        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
-        .filter(col("b").isNotNull)
-        .distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(col("__keep") && col("__newb").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__newb").as("_bucket")): _*)
-    // inserts (incl. duplicate source keys) and key-reassigning updates
-    // can put a new key into a bucket — those need the uniqueness guard
-    // and the tombstone re-insert anti-join (see commitRewrite)
-    val introducesKeys = inserts.nonEmpty || !updatesPreserveKey
 
     // plan REPEATABILITY across two evaluations (the affected-bucket probe
     // and the write): same bar as scan pruning — nondeterministic clause
@@ -335,63 +300,60 @@ object SqlMerge {
       repeatableExpr(merge.mergeCondition) &&
       (matched ++ inserts ++ nmbs).forall(c =>
         c.cond.forall(repeatableExpr) && c.assigns.values.forall(repeatableExpr))
-
-    if (scanBuckets.isEmpty && deterministicPlan) {
-      // ---- UNPRUNED, repeatable statement: two-pass — an aggregate-only
-      // probe over the full join finds the affected buckets, then the
-      // write re-derives the merge, with the TARGET scan pruned to those
-      // buckets WHEN that is provably sound. Cost: join evaluated twice,
-      // but the table is never spooled to executor-local disk (the
-      // checkpoint path writes the whole table once to local disk and
-      // again to the table — 2x write; at 100 TB the 2x read is the
-      // right trade).
-      //
-      // Pass-2 target-pruning soundness: every changed row's old AND new
-      // bucket is in `affected`, so pruning only hides UNCHANGED matched
-      // target rows — whose source partners then look unmatched in pass
-      // 2 and can fire a spurious INSERT. That insert is harmless only
-      // when its key provably equals the hidden match's key (the merge
-      // condition pins the key and every insert uses it): the spurious
-      // row then aims at the hidden row's UNaffected bucket and the
-      // `__newb IN affected` filter in outOf drops it. With an insert
-      // key unrelated to the match key, the spurious row could land
-      // INSIDE an affected bucket — so those statements re-scan the full
-      // target in pass 2 (still no checkpoint spool).
-      val affected = affectedOf(mergedFrame(None))
-      if (affected.isEmpty) return // every clause missed: a no-op
-      val pass2Buckets =
-        if (inserts.isEmpty || (srcKeyExpr.isDefined && insertsUseKey))
-          Some(affected)
-        else None
-      val out = outOf(mergedFrame(pass2Buckets), affected)
-      commitRewrite(spark, dir, pre, out, affected, keyName, nB, "sqlmerge",
-        introducesKeys, newSchema)
-    } else {
-      // ---- pruned (cheap: only the source keys' buckets) or
-      // nondeterministic: ONE materialization feeds the probe AND the
-      // write, and freezes the nondeterministic row ids (CLAUDE.md:
-      // checkpoint, not cache, so per-statement frames don't pin the
-      // CacheManager). try/finally: the no-op return, a cardinality
-      // violation and a commit conflict must all release the checkpoint.
-      val merged = mergedFrame(scanBuckets).localCheckpoint()
-      try {
-        val affected = affectedOf(merged)
-        if (affected.isEmpty) return // every clause missed: a no-op
-        scanBuckets.foreach { sbs =>
-          if (!affected.subsetOf(sbs)) sys.error(
-            s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
-        }
-        commitRewrite(spark, dir, pre, outOf(merged, affected), affected,
-          keyName, nB, "sqlmerge", introducesKeys, newSchema)
-      } finally merged.unpersist()
-    }
+    // Pass-2 target-pruning soundness: every changed row's old AND new
+    // bucket is affected, so pruning only hides UNCHANGED matched target
+    // rows — whose source partners then look unmatched in pass 2 and can
+    // fire a spurious INSERT. That insert is harmless only when its key
+    // provably equals the hidden match's key (the merge condition pins
+    // the key and every insert uses it): the spurious row then aims at
+    // the hidden row's UNaffected bucket and the rewrite drops it. With
+    // an insert key unrelated to the match key, the spurious row could
+    // land INSIDE an affected bucket — so those statements re-scan the
+    // full target in pass 2 (still no checkpoint spool).
+    // Inserts, duplicate source keys and key-reassigning updates can put
+    // a new key into a bucket (see commitRewrite).
+    rewrite(spark, t, "sqlmerge", mergedFrame, scanBuckets,
+      repeatable = deterministicPlan,
+      pass2Pruned = inserts.isEmpty || insertsUseKey,
+      introducesKeys = inserts.nonEmpty || !updatesPreserveKey, newSchema)
   }
 
   // ------------------------------------------------------------ shared
   // machinery for the three DML surfaces (MERGE / UPDATE / DELETE)
 
-  private[operators] val oOff = "__graft_t_offset"
-  private[operators] val oPart = "__graft_t_partition"
+  private val oOff = "__graft_t_offset"
+  private val oPart = "__graft_t_partition"
+
+  /** A DML statement's target: the icelite table's directory, its
+    * metadata as read (every scan pins `pre.version`, the commit validates
+    * against it) and the analyzed target columns, key first. `evolved`:
+    * the columns MERGE WITH SCHEMA EVOLUTION adds with its commit.
+    */
+  private case class Target(dir: String, pre: IceLite.Metadata,
+      attrs: Seq[AttributeReference], evolved: Seq[AttributeReference]) {
+    def keyAttr: AttributeReference = attrs.head
+    def nB: Int = pre.numBuckets
+  }
+
+  /** Load the table beneath an analyzed DML target and check the schema
+    * it was analyzed against is still current. With `evolving`, target
+    * columns the table lacks are exempt: they evolve with the commit.
+    */
+  private def target(plan: LogicalPlan, evolving: Boolean = false): Target = {
+    val dir = iceTarget(plan).getOrElse(
+      sys.error("icelite SQL DML on a non-icelite target")).dir
+    val pre = IceLite.load(dir)
+    val attrs = plan.output.map(_.asInstanceOf[AttributeReference])
+    val existing = pre.currentSchema.fields.map(_.name).toSet
+    val evolved = if (evolving) attrs.filterNot(a => existing(a.name)) else Nil
+    if (pre.currentSchema.struct.fields.map(f => (f.name, f.dataType)).toSeq !=
+        attrs.filterNot(evolved.contains).map(a => (a.name, a.dataType))) {
+      throw new IllegalStateException(
+        s"icelite SQL DML: $dir schema changed since the statement was " +
+          "analyzed — re-run the statement")
+    }
+    Target(dir, pre, attrs, evolved)
+  }
 
   /** Version-pinned, optionally bucket-pruned scan of the target's LIVE
     * rows whose user columns carry the analyzer's attribute ids
@@ -399,32 +361,100 @@ object SqlMerge {
     * assignment expressions resolve against this frame unchanged), plus
     * the stored CDC position as [[oOff]]/[[oPart]].
     */
-  private def pinnedTarget(spark: SparkSession, dir: String, version: Int,
-      tgtAttrs: Seq[AttributeReference],
+  private def pinnedTarget(spark: SparkSession, t: Target,
       scanBuckets: Option[Set[Int]]): DataFrame = {
-    val base = IceLite.readInternal(spark, dir, Some(version), scanBuckets)
+    val base = IceLite.readInternal(spark, t.dir, Some(t.pre.version),
+        scanBuckets)
       .filter(!col("_deleted"))
     val basePlan = PlanBridge.analyzed(base)
     val byName = basePlan.output.map(a => a.name -> a).toMap
     val projectList: Seq[NamedExpression] =
-      tgtAttrs.map(t => byName.get(t.name) match {
-        case Some(a) => Alias(a, t.name)(exprId = t.exprId)
+      t.attrs.map(a => byName.get(a.name) match {
+        case Some(b) => Alias(b, a.name)(exprId = a.exprId)
         // WITH SCHEMA EVOLUTION: the column does not exist in the table
         // yet (it evolves atomically with the statement's commit) — every
         // stored row null-fills it, exactly as a post-ALTER read would
         case None => Alias(org.apache.spark.sql.catalyst.expressions
-          .Literal(null, t.dataType), t.name)(exprId = t.exprId)
+          .Literal(null, a.dataType), a.name)(exprId = a.exprId)
       }) ++
         Seq(Alias(byName("_offset"), oOff)(),
           Alias(byName("_partition"), oPart)())
     PlanBridge.ofRows(spark, Project(projectList, basePlan))
   }
 
+  /** A statement's marked frame, the one shape [[rewrite]] consumes: the
+    * final target column values, `__keep` (the row survives), `__changed`
+    * (a clause fired on it), `__oldb` (its bucket before the statement,
+    * null for inserted rows), `__newb` (its final key's bucket, null for
+    * removed rows) and the stored CDC position as `_offset`/`_partition`.
+    */
+  private def marked(df: DataFrame, t: Target, values: Seq[Column],
+      keep: Column, changed: Column, oldb: Column): DataFrame =
+    df.select(values.zip(t.attrs).map { case (v, a) => v.as(a.name) } ++ Seq(
+        keep.as("__keep"), changed.as("__changed"), oldb.as("__oldb"),
+        col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
+      .withColumn("__newb",
+        when(col("__keep"), Salt.bucket(col(t.keyAttr.name), t.nB)))
+
+  /** The statement skeleton shared by MERGE, UPDATE and DELETE: find the
+    * affected buckets (old and new bucket of every changed row) and
+    * rewrite exactly those, each as the statement's surviving rows.
+    * `stmt(buckets)` builds the statement's [[marked]] frame over a
+    * target scan pruned to `buckets` (None: the whole table).
+    *
+    *  - Unpruned (`scanBuckets` None) and `repeatable` across two
+    *    evaluations: two-pass — an aggregate-only probe over the full
+    *    statement finds the affected buckets, then the write re-derives
+    *    it, with the target scan pruned to them when `pass2Pruned` (every
+    *    row the rewrite needs lives there). The table is read twice but
+    *    never spooled to executor-local disk — at 100 TB the 2x read is
+    *    the right trade against the checkpoint's 2x write.
+    *  - Pruned (cheap: only the key's buckets) or not repeatable: ONE
+    *    local checkpoint feeds the probe AND the write, and freezes the
+    *    nondeterministic values (checkpoint, not cache, so per-statement
+    *    frames don't pin the CacheManager). The no-op return, a
+    *    cardinality violation and a commit conflict all release it.
+    */
+  private def rewrite(spark: SparkSession, t: Target, opName: String,
+      stmt: Option[Set[Int]] => DataFrame, scanBuckets: Option[Set[Int]],
+      repeatable: Boolean, pass2Pruned: Boolean, introducesKeys: Boolean,
+      newSchema: Option[IceLite.Schema] = None): Unit = {
+    def affectedOf(df: DataFrame): Set[Int] =
+      df.filter(col("__changed"))
+        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
+        .filter(col("b").isNotNull)
+        .distinct().collect().map(_.getInt(0)).toSet
+    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
+      df.filter(col("__keep") && col("__newb").isInCollection(affected))
+        .select(t.attrs.map(a => col(a.name)) ++ Seq(col("_offset"),
+          col("_partition"), lit(false).as("_deleted"),
+          col("__newb").as("_bucket")): _*)
+    def commit(df: DataFrame, affected: Set[Int]): Unit =
+      commitRewrite(spark, t, outOf(df, affected), affected, opName,
+        introducesKeys, newSchema)
+    if (scanBuckets.isEmpty && repeatable) {
+      val affected = affectedOf(stmt(None))
+      if (affected.isEmpty) return // nothing changed: a no-op
+      commit(stmt(if (pass2Pruned) Some(affected) else None), affected)
+    } else {
+      val frozen = stmt(scanBuckets).localCheckpoint()
+      try {
+        val affected = affectedOf(frozen)
+        if (affected.isEmpty) return // nothing changed: a no-op
+        scanBuckets.foreach { sbs =>
+          if (!affected.subsetOf(sbs)) sys.error(
+            s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
+        }
+        commit(frozen, affected)
+      } finally frozen.unpersist()
+    }
+  }
+
   /** Commit `out` (user columns + `_offset`/`_partition`/`_deleted`/
     * `_bucket`) as the new content of the `affected` buckets: those
     * buckets' CDC tombstones are preserved (late-data fencing) unless the
     * statement re-inserted the key, and the commit validates against
-    * `pre`'s version so a concurrent committer CONFLICTS, never clobbers.
+    * `t.pre` so a concurrent committer CONFLICTS, never clobbers.
     * The epoch key gets a non-numeric suffix (uuid slice keeps a '-'):
     * never folded into the epoch high-water mark, so concurrent DML
     * statements can't mask each other.
@@ -440,11 +470,10 @@ object SqlMerge {
     * keys cannot collide with a tombstoned key (live and tombstoned key
     * sets are disjoint), so both steps are skipped entirely then.
     */
-  private def commitRewrite(spark: SparkSession, dir: String,
-      pre: IceLite.Metadata, out: DataFrame, affected: Set[Int],
-      keyName: String, nB: Int, opName: String,
-      introducesKeys: Boolean = false,
-      newSchema: Option[IceLite.Schema] = None): Unit = {
+  private def commitRewrite(spark: SparkSession, t: Target, out: DataFrame,
+      affected: Set[Int], opName: String, introducesKeys: Boolean,
+      newSchema: Option[IceLite.Schema]): Unit = {
+    val keyName = t.keyAttr.name
     val guarded =
       if (!introducesKeys) out
       else {
@@ -460,7 +489,7 @@ object SqlMerge {
             .otherwise(lit(true)))
           .drop("__kc")
       }
-    val tombs0 = IceLite.readInternal(spark, dir, Some(pre.version),
+    val tombs0 = IceLite.readInternal(spark, t.dir, Some(t.pre.version),
         Some(affected))
       .filter(col("_deleted"))
     // one cheap existence probe (bucket-pruned scan, pushed `_deleted`
@@ -478,7 +507,7 @@ object SqlMerge {
         val tombs1 = (if (introducesKeys)
             tombs0.join(out.select(col(keyName)), Seq(keyName), "left_anti")
           else tombs0)
-          .withColumn("_bucket", Salt.bucket(col(keyName), nB))
+          .withColumn("_bucket", Salt.bucket(col(keyName), t.nB))
         // atomic evolution: tombstones were read under the pre-statement
         // schema — null-fill the statement's new columns, as any
         // post-evolution read of old files would
@@ -490,24 +519,11 @@ object SqlMerge {
       }
     // one file per rewritten bucket (not one per task per bucket): DML
     // statements must not crowd buckets into needing compaction
-    val toWrite = withTombs.repartition(col("_bucket"))
     val epoch =
       s"$opName.${java.util.UUID.randomUUID().toString.substring(0, 13)}"
-    val staged = IceLite.stageFiles(dir, epoch, toWrite, Some("_bucket"),
-      newSchema.map(_.schemaId).getOrElse(pre.currentSchemaId))
-    IceLite.commit(dir, epoch, opName, newFiles = staged,
-      replacedBuckets = affected, baseVersion = Some(pre.version),
-      newSchema = newSchema)
+    IceLite.replaceBuckets(t.dir, epoch, opName, t.pre,
+      withTombs.repartition(col("_bucket")), affected, newSchema)
   }
-
-  private def schemaGuard(pre: IceLite.Metadata,
-      tgtAttrs: Seq[AttributeReference], dir: String): Unit =
-    if (pre.currentSchema.struct.fields.map(f => (f.name, f.dataType)).toSeq
-        != tgtAttrs.map(a => (a.name, a.dataType))) {
-      throw new IllegalStateException(
-        s"icelite SQL DML: $dir schema changed since the statement was " +
-          "analyzed — re-run the statement")
-    }
 
   /** Buckets implied by a condition's key conjuncts (`key = lit`,
     * `key IN (lits)`): sound whatever the rest of the condition does,
@@ -536,72 +552,30 @@ object SqlMerge {
     * the key is not reassigned.
     */
   def executeUpdate(spark: SparkSession, update: UpdateTable): Unit = {
-    val rel = iceTarget(update.table).getOrElse(
-      sys.error("SqlUpdate on a non-icelite target"))
-    val dir = rel.dir
-    val pre = IceLite.load(dir)
-    val tgtAttrs = update.table.output.map(_.asInstanceOf[AttributeReference])
-    schemaGuard(pre, tgtAttrs, dir)
-    val keyAttr = tgtAttrs.head
-    val nB = pre.numBuckets
-    val assigns = assignMap(update.assignments, tgtAttrs)
+    val t = target(update.table)
+    val assigns = assignMap(update.assignments, t.attrs)
     val cond = update.condition
       .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val keyReassigned = assigns.get(0).exists(!_.semanticEquals(keyAttr))
-    val scanBuckets =
-      if (keyReassigned) None // moved rows need their NEW bucket read too
-      else bucketsFromCondition(cond, keyAttr, nB)
-
+    val keyReassigned = assigns.get(0).exists(!_.semanticEquals(t.keyAttr))
     val hit = coalesce(cc(cond), lit(false))
     def finalValue(j: Int): Column = {
-      val old = cc(tgtAttrs(j))
+      val old = cc(t.attrs(j))
       assigns.get(j).map(e =>
-        when(hit, cc(e).cast(tgtAttrs(j).dataType)).otherwise(old))
+        when(hit, cc(e).cast(t.attrs(j).dataType)).otherwise(old))
         .getOrElse(old)
     }
-    def markedFrame(buckets: Option[Set[Int]]): DataFrame =
-      pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets).select(
-        tgtAttrs.indices.map(j => finalValue(j).as(tgtAttrs(j).name)) ++ Seq(
-          hit.as("__hit"), Salt.bucket(cc(keyAttr), nB).as("__oldb"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-        .withColumn("__newb", Salt.bucket(col(keyAttr.name), nB))
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__hit"))
-        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
-        .filter(col("b").isNotNull)
-        .distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(col("__newb").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__newb").as("_bucket")): _*)
-
     // repeatability bar for the two-evaluation path: the WHERE and (when
     // the key moves) the key assignment must be deterministic — other
     // assignment values are only ever evaluated once, in the write pass
-    val repeatable = repeatableExpr(cond) &&
-      (!keyReassigned || assigns.get(0).forall(repeatableExpr))
-    if (scanBuckets.isEmpty && repeatable) {
-      // unpruned full-table statement: aggregate-only probe, then the
-      // write re-scans ONLY the affected buckets — the table is read
-      // twice, never spooled to executor-local checkpoint disk (hit rows'
-      // old and new buckets are both in `affected`, so the restricted
-      // scan covers every row the rewrite needs)
-      val affected = affectedOf(markedFrame(None))
-      if (affected.isEmpty) return
-      commitRewrite(spark, dir, pre,
-        outOf(markedFrame(Some(affected)), affected), affected,
-        keyAttr.name, nB, "sqlupdate", introducesKeys = keyReassigned)
-    } else {
-      val marked = markedFrame(scanBuckets)
-        .localCheckpoint() // freeze: one evaluation feeds probe AND write
-      try {
-        val affected = affectedOf(marked)
-        if (affected.isEmpty) return
-        commitRewrite(spark, dir, pre, outOf(marked, affected), affected,
-          keyAttr.name, nB, "sqlupdate", introducesKeys = keyReassigned)
-      } finally marked.unpersist()
-    }
+    rewrite(spark, t, "sqlupdate",
+      b => marked(pinnedTarget(spark, t, b), t, t.attrs.indices.map(finalValue),
+        keep = lit(true), changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
+      // moved rows need their NEW bucket read too: no scan pruning
+      scanBuckets = if (keyReassigned) None
+        else bucketsFromCondition(cond, t.keyAttr, t.nB),
+      repeatable = repeatableExpr(cond) &&
+        (!keyReassigned || assigns.get(0).forall(repeatableExpr)),
+      pass2Pruned = true, introducesKeys = keyReassigned)
   }
 
   // ------------------------------------------------------------ DELETE
@@ -612,49 +586,14 @@ object SqlMerge {
     * rewritten buckets are preserved.
     */
   def executeDelete(spark: SparkSession, delete: DeleteFromTable): Unit = {
-    val rel = iceTarget(delete.table).getOrElse(
-      sys.error("SqlDelete on a non-icelite target"))
-    val dir = rel.dir
-    val pre = IceLite.load(dir)
-    val tgtAttrs = delete.table.output.map(_.asInstanceOf[AttributeReference])
-    schemaGuard(pre, tgtAttrs, dir)
-    val keyAttr = tgtAttrs.head
-    val nB = pre.numBuckets
-    val scanBuckets = bucketsFromCondition(delete.condition, keyAttr, nB)
-
-    def markedFrame(buckets: Option[Set[Int]]): DataFrame =
-      pinnedTarget(spark, dir, pre.version, tgtAttrs, buckets)
-        .select(tgtAttrs.map(a => cc(a).as(a.name)) ++ Seq(
-          coalesce(cc(delete.condition), lit(false)).as("__hit"),
-          Salt.bucket(cc(keyAttr), nB).as("__b"),
-          col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__hit"))
-        .select(col("__b")).distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(!col("__hit") && col("__b").isInCollection(affected))
-        .select(tgtAttrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__b").as("_bucket")): _*)
-
-    if (scanBuckets.isEmpty && repeatableExpr(delete.condition)) {
-      // unpruned full-table statement: aggregate-only probe, then the
-      // write re-scans only the affected buckets (no checkpoint spool)
-      val affected = affectedOf(markedFrame(None))
-      if (affected.isEmpty) return
-      commitRewrite(spark, dir, pre,
-        outOf(markedFrame(Some(affected)), affected), affected,
-        keyAttr.name, nB, "sqldelete")
-    } else {
-      val marked = markedFrame(scanBuckets)
-        .localCheckpoint() // freeze: one evaluation feeds probe AND write
-      try {
-        val affected = affectedOf(marked)
-        if (affected.isEmpty) return
-        commitRewrite(spark, dir, pre, outOf(marked, affected), affected,
-          keyAttr.name, nB, "sqldelete")
-      } finally marked.unpersist()
-    }
+    val t = target(delete.table)
+    val hit = coalesce(cc(delete.condition), lit(false))
+    rewrite(spark, t, "sqldelete",
+      b => marked(pinnedTarget(spark, t, b), t, t.attrs.map(cc),
+        keep = !hit, changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
+      scanBuckets = bucketsFromCondition(delete.condition, t.keyAttr, t.nB),
+      repeatable = repeatableExpr(delete.condition),
+      pass2Pruned = true, introducesKeys = false)
   }
 }
 
@@ -666,15 +605,7 @@ object SqlMerge {
 sealed trait SqlDmlCommand extends LeafRunnableCommand {
   protected def executeOnce(spark: SparkSession): Unit
   override def run(spark: SparkSession): Seq[Row] = {
-    var left = 3
-    while (true) {
-      try { executeOnce(spark); return Seq.empty }
-      catch {
-        case e: CommitConflictException =>
-          left -= 1
-          if (left <= 0) throw e
-      }
-    }
+    IceLite.retryOnConflict(executeOnce(spark))
     Seq.empty
   }
 }

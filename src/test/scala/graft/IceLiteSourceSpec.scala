@@ -21,7 +21,7 @@ class IceLiteSourceSpec extends SparkTestBase {
   private def mkTable(name: String, n: Int): String = {
     val dir = tmpDir(name)
     IceLite.create(dir, Model.pagesSchema, 4)
-    val staged = IceLite.stageFiles(dir, "e1", mkRows(n), Some("_bucket"), 1)
+    val staged = IceLite.stageFiles(dir, "e1", mkRows(n), 1)
     IceLite.commit(dir, "e1", "merge", staged, replacedBuckets = (0 until 4).toSet)
     dir
   }
@@ -29,7 +29,7 @@ class IceLiteSourceSpec extends SparkTestBase {
   test("format(icelite): current read, time travel option, column pruning") {
     val dir = mkTable("dsv1", 10)
     val v1 = IceLite.currentVersion(dir)
-    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), Some("_bucket"), 1)
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
 
     val cur = spark.read.format("icelite").load(dir)
@@ -154,7 +154,7 @@ class IceLiteSourceSpec extends SparkTestBase {
       .map(_.getString(0)).toSet == Set("insert"))
     // a new commit replaces everything with rows 1..3 (identical version
     // tuples) -> net delta is exactly the 7 disappearing urls as deletes
-    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), Some("_bucket"), 1)
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
     drain()
     val all = spark.read.parquet(out)
@@ -187,7 +187,7 @@ class IceLiteSourceSpec extends SparkTestBase {
       // whole-stage codegen renders as "*(n)" operator prefixes
       assert(physical.contains("*(1)"), s"no codegen span:\n$physical")
       // time travel stays correct through substitution
-      val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), Some("_bucket"), 1)
+      val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
       IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
       assert(spark.read.format("icelite").option("version", 2).load(dir)
         .count() == 12)
@@ -211,7 +211,7 @@ class IceLiteSourceSpec extends SparkTestBase {
     }
     drain() // first start: current version persisted as the baseline
     // while the query is DOWN, a commit replaces everything with 3 rows
-    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), Some("_bucket"), 1)
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
     drain() // restart MUST offer the pending version (pre-fix: stalled)
     // first drain had nothing (baseline = current); the while-down commit
@@ -240,7 +240,7 @@ class IceLiteSourceSpec extends SparkTestBase {
       mkRows(2, "new").withColumn("score", lit(7L)) // new urls -> inserts
         .select("url", "warc_ts", "html", "text", "lang", "score",
           "_offset", "_partition", "_deleted", "_bucket"),
-      Some("_bucket"), IceLite.load(dir).currentSchemaId)
+      IceLite.load(dir).currentSchemaId)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
     val out2 = tmpDir("dalter_out2")
     drain(out2) // restart: schema re-frozen at the evolved definition
@@ -254,9 +254,9 @@ class IceLiteSourceSpec extends SparkTestBase {
   test("change-stream admission control: maxVersionsPerBatch bounds each " +
       "micro-batch during catch-up (3 capped batches, not one giant delta)") {
     val dir = mkTable("dcap", 10) // v2 = rows 1..10
-    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), Some("_bucket"), 1)
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet) // v3: rows 1..3
-    val s3 = IceLite.stageFiles(dir, "e3", mkRows(2, "cap"), Some("_bucket"), 1)
+    val s3 = IceLite.stageFiles(dir, "e3", mkRows(2, "cap"), 1)
     IceLite.commit(dir, "e3", "merge", s3, (0 until 4).toSet) // v4: 2 cap rows
     val out = tmpDir("dcap_out")
     val q = spark.readStream.format("icelite")

@@ -21,7 +21,7 @@ class IceLiteSpec extends SparkTestBase {
   test("create + commit + read roundtrip") {
     val dir = tmpDir("ice1")
     IceLite.create(dir, Model.pagesSchema, 4)
-    val staged = IceLite.stageFiles(dir, "e1", mkRows(10), Some("_bucket"), 1)
+    val staged = IceLite.stageFiles(dir, "e1", mkRows(10), 1)
     IceLite.commit(dir, "e1", "merge", staged, replacedBuckets = (0 until 4).toSet)
     val got = IceLite.read(spark, dir)
     assert(got.count() == 10)
@@ -31,7 +31,7 @@ class IceLiteSpec extends SparkTestBase {
   test("epoch-keyed commits are idempotent (exactly-once replay)") {
     val dir = tmpDir("ice2")
     IceLite.create(dir, Model.pagesSchema, 4)
-    val staged = IceLite.stageFiles(dir, "e1", mkRows(5), Some("_bucket"), 1)
+    val staged = IceLite.stageFiles(dir, "e1", mkRows(5), 1)
     val m1 = IceLite.commit(dir, "e1", "merge", staged, (0 until 4).toSet)
     // replayed commit of the same epoch: metadata unchanged
     val m2 = IceLite.commit(dir, "e1", "merge", staged, (0 until 4).toSet)
@@ -43,10 +43,10 @@ class IceLiteSpec extends SparkTestBase {
   test("time travel: old versions stay readable; hint is atomic pointer") {
     val dir = tmpDir("ice3")
     IceLite.create(dir, Model.pagesSchema, 4)
-    val s1 = IceLite.stageFiles(dir, "e1", mkRows(3), Some("_bucket"), 1)
+    val s1 = IceLite.stageFiles(dir, "e1", mkRows(3), 1)
     IceLite.commit(dir, "e1", "merge", s1, (0 until 4).toSet)
     val vAfterFirst = IceLite.currentVersion(dir)
-    val s2 = IceLite.stageFiles(dir, "e2", mkRows(8), Some("_bucket"), 1)
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(8), 1)
     IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet)
     assert(IceLite.read(spark, dir).count() == 8)
     assert(IceLite.read(spark, dir, Some(vAfterFirst)).count() == 3)
@@ -55,7 +55,7 @@ class IceLiteSpec extends SparkTestBase {
   test("schema evolution is metadata-only: add, rename, widen, no rewrite") {
     val dir = tmpDir("ice4")
     IceLite.create(dir, Model.pagesSchema, 4)
-    val s1 = IceLite.stageFiles(dir, "e1", mkRows(4), Some("_bucket"), 1)
+    val s1 = IceLite.stageFiles(dir, "e1", mkRows(4), 1)
     IceLite.commit(dir, "e1", "merge", s1, (0 until 4).toSet)
     val filesBefore = IceLite.load(dir).files.map(_.path).toSet
 
@@ -166,7 +166,7 @@ class IceLiteSpec extends SparkTestBase {
       (0 until commitsPerBucket).foreach { k =>
         (0 until 8).foreach { b =>
           val staged = IceLite.stageFiles(dir, s"load.$b.$k",
-            mkRowsInBucket(2, b), Some("_bucket"), 1)
+            mkRowsInBucket(2, b), 1)
           IceLite.commit(dir, s"load.$b.$k", "append", staged)
         }
       }
@@ -176,7 +176,7 @@ class IceLiteSpec extends SparkTestBase {
     val big = build("man_big", 16)    // 128 live files
     def oneBucketCommit(dir: String): Long = metadataBytesWritten(dir) {
       val staged = IceLite.stageFiles(dir, "probe.0",
-        mkRowsInBucket(1, 0), Some("_bucket"), 1)
+        mkRowsInBucket(1, 0), 1)
       IceLite.commit(dir, "probe.0", "merge", staged,
         replacedBuckets = Set(0))
     }
@@ -217,7 +217,7 @@ class IceLiteSpec extends SparkTestBase {
     val cat = new graft.icelite.CasCatalog
     val dir = tmpDir("icecas")
     IceLite.create(dir, Model.pagesSchema, 4, cat)
-    val staged = IceLite.stageFiles(dir, "e1", mkRows(5), Some("_bucket"), 1)
+    val staged = IceLite.stageFiles(dir, "e1", mkRows(5), 1)
     IceLite.commit(dir, "e1", "merge", staged, (0 until 4).toSet, catalog = cat)
     // replay no-op + read both work against the object-store catalog
     val v = IceLite.currentVersion(dir, cat)
@@ -258,5 +258,47 @@ class IceLiteSpec extends SparkTestBase {
       dir, "metadata", s"v$before.metadata.json"))
     assert(metaBytes < 16 * 1024,
       s"metadata file is $metaBytes bytes after 1000 commits")
+  }
+
+  test("replaceBuckets validates against its base: a stale rewrite of a " +
+      "bucket another commit changed conflicts instead of clobbering") {
+    val dir = tmpDir("ice-replace")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    val base = IceLite.replaceBuckets(dir, "e1", "merge",
+      IceLite.load(dir), mkRows(8), (0 until 4).toSet)
+    assert(base.operation == "merge" && IceLite.read(spark, dir).count() == 8)
+    // a concurrent commit lands in every bucket after `base` was read
+    IceLite.replaceBuckets(dir, "e2", "merge", base, mkRows(6),
+      (0 until 4).toSet)
+    intercept[graft.icelite.CommitConflictException] {
+      IceLite.replaceBuckets(dir, "stale", "compact", base, mkRows(8),
+        (0 until 4).toSet)
+    }
+    assert(IceLite.read(spark, dir).count() == 6, "concurrent commit intact")
+  }
+
+  test("retryOnConflict re-runs a conflicting body up to three attempts") {
+    import graft.icelite.CommitConflictException
+    var calls = 0
+    val v = IceLite.retryOnConflict {
+      calls += 1
+      if (calls < 3) throw new CommitConflictException(s"conflict $calls")
+      "done"
+    }
+    assert(v == "done" && calls == 3)
+    calls = 0
+    val e = intercept[CommitConflictException] {
+      IceLite.retryOnConflict {
+        calls += 1
+        throw new CommitConflictException(s"conflict $calls")
+      }
+    }
+    assert(calls == 3 && e.getMessage == "conflict 3")
+    // any other failure is not retried
+    calls = 0
+    intercept[IllegalStateException] {
+      IceLite.retryOnConflict { calls += 1; throw new IllegalStateException }
+    }
+    assert(calls == 1)
   }
 }

@@ -168,7 +168,7 @@ class MaintenanceSpec extends SparkTestBase {
       .withColumn("_bucket",
         graft.functions.Salt.bucket(col(keyName), m.numBuckets))
     val staged = IceLite.stageFiles(table, "slow-compact", rows,
-      Some("_bucket"), m.currentSchemaId)
+      m.currentSchemaId)
     // ... while a merge lands NEW rows into the same buckets
     import spark.implicits._
     val more = Ledger.events(spark, cfg.copy(seed = 99L, nEvents = 200)).toDF()

@@ -32,8 +32,7 @@ class SqlMergeSpec extends SparkTestBase {
       .withColumn("_bucket", Salt.bucket(col("url"), nBuckets))
       .select("url", "v", "tag", "_offset", "_partition", "_deleted",
         "_bucket")
-    val staged = IceLite.stageFiles(dir, "init.1", df, Some("_bucket"),
-      m.currentSchemaId)
+    val staged = IceLite.stageFiles(dir, "init.1", df, m.currentSchemaId)
     IceLite.commit(dir, "init.1", "append", newFiles = staged)
     n += 1
     val name = s"sqlmerge_t$n"
@@ -217,6 +216,29 @@ class SqlMergeSpec extends SparkTestBase {
     assert(IceLite.load(dir).version == v0)
     // unconditional delete empties the table
     spark.sql(s"DELETE FROM $t")
+    assert(IceLite.read(spark, dir).count() == 0)
+  }
+
+  test("DELETE pinned to keys: scan pruned to the keys' buckets, only " +
+      "those buckets rewritten; a nondeterministic WHERE deletes through " +
+      "the single-evaluation checkpoint path") {
+    val urls = (0 until 32).map(i => s"d$i")
+    val (t, dir) = mkTable(8, urls.map(u => (u, 1L, "x", false)))
+    val before = IceLite.load(dir)
+    spark.sql(s"DELETE FROM $t WHERE url IN ('d3', 'd17', 'absent')")
+    val after = IceLite.load(dir)
+    assert(after.operation == "sqldelete")
+    val changed = (0 until 8).filter { b =>
+      before.files.filter(_.bucket == b).map(_.path).toSet !=
+        after.files.filter(_.bucket == b).map(_.path).toSet
+    }.toSet
+    val keyBuckets = Seq("d3", "d17").map(u => spark.range(1)
+      .select(Salt.bucket(lit(u), 8)).head.getInt(0)).toSet
+    assert(changed == keyBuckets)
+    assert(state(dir).keySet == urls.toSet -- Set("d3", "d17"))
+    // rand() < 2 is always true but not repeatable: one evaluation
+    // feeds the probe and the write, and every row goes
+    spark.sql(s"DELETE FROM $t WHERE rand() < 2")
     assert(IceLite.read(spark, dir).count() == 0)
   }
 

@@ -152,18 +152,25 @@ class TrainingDataOpsSpec extends SparkTestBase {
 
   test("connected components: driver union-find branch is identical to " +
       "the distributed loop") {
-    // mixed shapes: chain, star, triangle, isolated pair — compare the
-    // size-checked driver branch against the loop (forced via bound 0)
+    // mixed shapes: chain, star, triangle, isolated pair, and edges with a
+    // null endpoint — compare the size-checked driver branch against the
+    // loop (forced via bound 0)
     val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (50L, 51L), (50L, 52L),
       (50L, 53L), (60L, 61L), (61L, 62L), (60L, 62L), (70L, 71L)) ++
-      (100L until 140L).map(i => (i, i + 1))).toDF("a_id", "b_id")
-    val driver = DedupOps.connectedComponents(pairs, "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val loop = DedupOps.connectedComponents(pairs, "a_id", "b_id",
-      maxDriverEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (100L until 140L).map(i => (i, i + 1)))
+      .map { case (a, b) => (Option(a), Option(b)) }
+    val withNulls = (pairs ++ Seq((Some(200L), None), (None, Some(4L)),
+      (None, None))).toDF("a_id", "b_id")
+    def labels(cc: org.apache.spark.sql.DataFrame) = cc.collect().map(r =>
+      (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1)).toMap
+    val driver = labels(DedupOps.connectedComponents(withNulls, "a_id", "b_id"))
+    val loop = labels(DedupOps.connectedComponents(withNulls, "a_id", "b_id",
+      maxDriverEdges = 0L))
     assert(driver == loop)
-    assert(driver(4L) == 1L && driver(53L) == 50L && driver(140L) == 100L)
+    // null-endpoint edges are dropped: no null id, 200 is in no pair
+    assert(!driver.contains(None) && !driver.contains(Some(200L)))
+    assert(driver(Some(4L)) == 1L && driver(Some(53L)) == 50L &&
+      driver(Some(140L)) == 100L)
   }
 
   test("connected components: pointer jumping converges in O(log diameter) " +
