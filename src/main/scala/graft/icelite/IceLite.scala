@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.BucketFileWriter
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -39,7 +40,7 @@ import org.json4s.jackson.JsonMethods
   * Layout:
   * {{{
   * table/
-  *   data/<epoch>-<bucket>-<n>.parquet
+  *   data/<epoch>-b<bucket>-<n>.parquet // moved from data/.staging-* (stageFiles)
   *   metadata/v<N>.metadata.json       // manifest list + schemas + epochs
   *   metadata/man-<uniq>-b<B>.json     // bucket B's data-file list
   *   metadata/version-hint.text        // read fast path (cache, not truth)
@@ -60,6 +61,9 @@ object IceLite {
       StructType(fields.map(f => StructField(f.name, f.dataType, f.nullable)))
   }
 
+  /** `rows` counts the file's rows, tombstones included; -1 = unknown
+    * (files staged before the writer recorded counts) — never a count.
+    */
   case class DataFileEntry(path: String, bucket: Int, schemaId: Int, rows: Long)
 
   /** One bucket's data-file list, stored out-of-line (the manifest split).
@@ -544,13 +548,18 @@ object IceLite {
     * [[CommitConflictException]] instead of clobbering it (callers wrap
     * the whole read-compute-replace in [[retryOnConflict]]). Files are
     * written under `newSchema` when the commit evolves the schema, else
-    * under `base`'s current schema.
+    * under `base`'s current schema. A row whose `_bucket` is not in
+    * `buckets` fails the call before the commit.
     */
   def replaceBuckets(dir: String, epochKey: String, operation: String,
       base: Metadata, df: DataFrame, buckets: Set[Int],
       newSchema: Option[Schema] = None): Metadata = {
     val staged = stageFiles(dir, epochKey, df,
       newSchema.fold(base.currentSchemaId)(_.schemaId))
+    // a file beside an unreplaced bucket's rows could duplicate their keys
+    val strays = staged.map(_.bucket).filterNot(buckets).distinct.sorted
+    if (strays.nonEmpty) throw new IllegalStateException(
+      s"epoch $epochKey staged rows into buckets $strays it does not replace")
     graft.util.Phase("stage.commit") {
       commit(dir, epochKey, operation, newFiles = staged,
         replacedBuckets = buckets, newSchema = newSchema,
@@ -579,47 +588,34 @@ object IceLite {
 
   /** Write `df` (which must already contain the internal columns and a
     * `_bucket` column) into staged immutable data files under `data/`,
-    * returning their entries. Nothing is visible until `commit` publishes
-    * them in metadata — a crash leaves only orphans.
+    * returning their entries. One Spark job writes one parquet file per
+    * (task, bucket) into a per-call staging dir; the files of SUCCESSFUL
+    * task attempts move into `data/` as `<epoch>-b<bucket>-<n>.parquet`,
+    * then the staging dir is deleted, also when the job fails. Nothing is
+    * visible until `commit` publishes the entries; a killed driver leaves
+    * orphans (staging dir included) for `Maintenance.gcOrphans`.
     */
   def stageFiles(dir: String, epochKey: String, df: DataFrame,
       schemaId: Int): Seq[DataFileEntry] = {
     val safe = epochKey.replaceAll("[^A-Za-z0-9._-]", "_")
     val staging = Paths.get(dir, "data", s".staging-$safe-${System.nanoTime()}")
-    graft.util.Phase("stage.write-job") {
-      df.write.partitionBy("_bucket").mode("overwrite").parquet(staging.toString)
-    }
-    // harvest part files into data/, named by epoch+bucket (collision-free:
-    // one staging dir per attempt; final names carry a sequence number)
-    val entries = scala.collection.mutable.ArrayBuffer[DataFileEntry]()
-    var seq = 0
-    graft.util.Phase("stage.harvest") {
-      val dirs = Files.list(staging).iterator()
-      while (dirs.hasNext) {
-        val d = dirs.next()
-        val dn = d.getFileName.toString
-        if (dn.startsWith("_bucket=")) {
-          val bucket = dn.substring("_bucket=".length).toInt
-          val it = Files.list(d).iterator()
-          while (it.hasNext) {
-            val p = it.next()
-            val n = p.getFileName.toString
-            if (n.startsWith("part-") && n.endsWith(".parquet")) {
-              val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
-              Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-              entries += DataFileEntry(dst.toString, bucket, schemaId, -1L)
-              seq += 1
-            }
-          }
+    try {
+      val written = graft.util.Phase("stage.write-job") {
+        BucketFileWriter.write(df, staging.toString, epochKey)
+      }
+      // final names carry a sequence number: collision-free per attempt
+      graft.util.Phase("stage.move") {
+        written.sortBy(f => (f._2, f._1)).zipWithIndex.map {
+          case ((path, bucket, rows), seq) =>
+            val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
+            Files.move(Paths.get(path), dst, StandardCopyOption.REPLACE_EXISTING)
+            DataFileEntry(dst.toString, bucket, schemaId, rows)
         }
       }
-    }
-    // remove staging leftovers (_SUCCESS etc.)
-    deleteRecursively(staging)
-    entries.toSeq
+    } finally deleteRecursively(staging)
   }
 
-  private def deleteRecursively(p: Path): Unit = {
+  private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val it = Files.list(p).iterator()
       while (it.hasNext) deleteRecursively(it.next())

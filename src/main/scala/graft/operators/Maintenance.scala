@@ -152,14 +152,16 @@ object Maintenance {
   }
 
   /** Delete ORPHANED files: parquet under `data/` and manifests under
-    * `metadata/` that no retained metadata version references — the debris
+    * `metadata/` that no retained metadata version references, and the
+    * `data/.staging-*` dirs of writers killed mid-stage — the debris
     * of committers that crashed after staging or lost the publish CAS
-    * after writing manifests. Only files older than `minAgeMs` are
-    * touched: an IN-FLIGHT commit stages data and writes manifests BEFORE
-    * publishing, so a freshly-written unreferenced file may be about to
-    * become reachable — the age guard (default 1 h, generously above any
-    * commit's stage→publish window) makes the race impossible. Returns
-    * (data files deleted, manifests deleted). FileCatalog layout only.
+    * after writing manifests. Only files older than `minAgeMs` (a staging
+    * dir: its newest file) are touched: an IN-FLIGHT commit stages data
+    * and writes manifests BEFORE publishing, so a freshly-written
+    * unreferenced file may be about to become reachable — the age guard
+    * (default 1 h, generously above any commit's stage→publish window)
+    * makes the race impossible. Returns (data files and staging dirs
+    * deleted, manifests deleted). FileCatalog layout only.
     */
   def gcOrphans(dir: String, minAgeMs: Long = 3600000L): (Int, Int) = {
     import java.nio.file.{Files, Paths}
@@ -173,24 +175,26 @@ object Maintenance {
     val reachable = (retained.flatMap(_.files.map(_.path)) ++
       retained.flatMap(_.manifests.map(_.path))).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
-    def sweep(d: java.nio.file.Path, keep: String => Boolean): Int = {
+    def newest(p: java.nio.file.Path): Long = {
+      val w = Files.walk(p)
+      try w.iterator().asScala.map(Files.getLastModifiedTime(_).toMillis).max
+      finally w.close()
+    }
+    def sweep(d: java.nio.file.Path, take: String => Boolean): Int = {
       if (!Files.isDirectory(d)) return 0
       var n = 0
-      Files.list(d).iterator().asScala.foreach { p =>
-        val name = p.getFileName.toString
-        if (!keep(name) && Files.isRegularFile(p) &&
-            !reachable.contains(p.toString) &&
-            Files.getLastModifiedTime(p).toMillis < cutoff &&
-            Files.deleteIfExists(p)) {
+      Files.list(d).iterator().asScala.toList.foreach { p =>
+        if (take(p.getFileName.toString) && !reachable.contains(p.toString) &&
+            newest(p) < cutoff) {
+          IceLite.deleteRecursively(p)
           n += 1
         }
       }
       n
     }
-    val data = sweep(Paths.get(dir, "data"),
-      name => !name.endsWith(".parquet")) // staging dirs handled elsewhere
-    val manifests = sweep(Paths.get(dir, "metadata"),
-      name => !name.startsWith("man-"))
+    val data = sweep(Paths.get(dir, "data"), name =>
+      name.endsWith(".parquet") || name.startsWith(".staging-"))
+    val manifests = sweep(Paths.get(dir, "metadata"), _.startsWith("man-"))
     (data, manifests)
   }
 }

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.{Salt, TextExtract}
+import graft.functions.Salt
 import graft.icelite.IceLite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -43,17 +43,23 @@ object Merge {
       committed: Boolean,
       snapshotId: Long,
       affectedBuckets: Set[Int],
-      eventsIn: Long,
-      rowsUpserted: Long,
-      rowsDeleted: Long,
-      lineage: Seq[LineageRow],
       // post-commit compaction-pressure signal: the crowdedest bucket's
       // live file count (metadata-only) — callers gate
       // Maintenance.compactIfNeeded on it instead of listing storage
       maxBucketFiles: Int = 0)
 
-  case class LineageRow(partition: Int, minOffset: Long, maxOffset: Long,
-      rowsApplied: Long)
+  /** What a caller that already deduplicated a batch to one winner per
+    * url knows about it: the storage buckets the winners hash to, and how
+    * many winners there are.
+    */
+  case class BatchStats(buckets: Set[Int], winners: Long)
+
+  /** The aggregates a [[BatchStats]] is built from, over a batch's winners:
+    * the one rule for which buckets a batch rewrites.
+    */
+  def batchStatsCols(url: Column, nBuckets: Int): Seq[Column] =
+    Seq(collect_set(Salt.bucket(url, nBuckets)).as("buckets"),
+      count(lit(1)).as("winners"))
 
   /** Base-field ids in the v1 schema (IceLite field ids are stable across
     * renames, so the merge resolves envelope columns by id, not name).
@@ -72,25 +78,26 @@ object Merge {
 
   /** Apply one change batch to the table. `changes` is envelope-shaped with
     * op ∈ {I,U,D} (ALTERs are handled by SchemaEvolution before this).
+    * `deduped` = Some when `changes` is already one winner per url and the
+    * caller counted it; Merge then runs no stats action of its own.
     */
   def apply(spark: SparkSession, tableDir: String, changes: DataFrame,
       epochKey: String, nSalts: Int = 4,
-      preDeduped: Boolean = false): CommitResult = {
+      deduped: Option[BatchStats] = None): CommitResult = {
     val pre = graft.util.Phase("merge.load") { IceLite.load(tableDir) }
     if (pre.committedEpoch(epochKey)) {
       return CommitResult(epochKey, committed = false, pre.snapshotId,
-        Set.empty, 0L, 0L, 0L, Nil,
-        pre.filesPerBucket.values.maxOption.getOrElse(0))
+        Set.empty, pre.filesPerBucket.values.maxOption.getOrElse(0))
     }
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
 
-    // the batch-replay entrance (preDeduped=false) sees the FULL version
-    // history per url — use the payload-light winner-filter dedup there;
-    // streaming micro-batches arrive preDeduped (low duplication, one-pass
-    // max_by in Pipeline)
-    val (deduped, winnerCount) =
-      if (preDeduped) (changes, None)
+    // the batch-replay entrance sees the FULL version history per url —
+    // use the payload-light winner-filter dedup there; streaming
+    // micro-batches arrive deduped (low duplication, one-pass max_by in
+    // Pipeline)
+    val (winners, winnerCount) =
+      if (deduped.isDefined) (changes, None)
       else Dedup.latestPerKeyWithCount(changes)
     // Winner rows in physical-table shape, resolved by field id so the merge
     // survives renames; extension fields (id > 5) are promoted out of the
@@ -154,7 +161,7 @@ object Merge {
         case f if f.id != textFieldId =>
           valueCols(schema.fields.indexOf(f))
       }
-      val rows = deduped.select(preShuffleCols ++ internals: _*)
+      val rows = winners.select(preShuffleCols ++ internals: _*)
         .withColumn("_bucket", Salt.bucket(col(urlName), nBuckets))
       val ctasSalts = effectiveSalts(nBuckets, winnerCount)
       val salted = rows.repartition(
@@ -176,30 +183,21 @@ object Merge {
           (0 until nBuckets).toSet)
       }
       return CommitResult(epochKey, committed = post.epochKey == epochKey,
-        post.snapshotId, (0 until nBuckets).toSet, eventsIn = -1L,
-        rowsUpserted = -1L, rowsDeleted = -1L, lineage = Nil,
+        post.snapshotId, (0 until nBuckets).toSet,
         maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
     }
 
-    val newRows = deduped.select(valueCols ++ internals: _*).cache()
+    val newRows = winners.select(valueCols ++ internals: _*)
 
-    // ONE aggregation action yields lineage stats AND the affected-bucket
-    // set (serial job-submission overhead is per action — keep Merge at
-    // exactly two: this collect and the write)
-    val statsRows = newRows
-      .groupBy(col("_partition"))
-      .agg(min("_offset").as("lo"), max("_offset").as("hi"),
-        count(lit(1)).as("n"),
-        sum(when(col("_deleted"), 1L).otherwise(0L)).as("dels"),
-        collect_set(Salt.bucket(col(urlName), nBuckets)).as("buckets"))
-      .collect()
-    val lineage = statsRows.map(r => LineageRow(r.getInt(0), r.getLong(1),
-      r.getLong(2), r.getLong(3))).toSeq
-    val applied = statsRows.map(_.getLong(3)).sum
-    val deletes = statsRows.map(_.getLong(4)).sum
-
-    // affected storage buckets — tiny driver-side set, prunes the read
-    val affected = statsRows.flatMap(_.getSeq[Int](5)).toSet
+    // affected storage buckets (a tiny local set that prunes the
+    // read) and the winner count: the caller's, else ONE aggregation
+    // action over the cached rows (serial job-submission overhead is per
+    // action — Merge runs at most two: this collect and the write)
+    val BatchStats(affected, applied) = deduped.getOrElse {
+      val r = newRows.cache()
+        .select(batchStatsCols(col(urlName), nBuckets): _*).collect().head
+      BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
+    }
     val existing = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
 
     // conditional merge: newer (event_time, _offset, _partition) wins —
@@ -235,8 +233,7 @@ object Merge {
       try IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, salted, affected)
       finally newRows.unpersist()
     CommitResult(epochKey, committed = post.epochKey == epochKey,
-      post.snapshotId, affected, eventsIn = -1L,
-      rowsUpserted = applied - deletes, rowsDeleted = deletes, lineage,
+      post.snapshotId, affected,
       maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
   }
 }

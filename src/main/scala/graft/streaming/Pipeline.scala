@@ -136,82 +136,71 @@ object Pipeline {
           graft.operators.Validate.invalid(batch))
       }
       val okEvents = graft.operators.Validate.valid(batch)
-
-      // 1. schema evolution, ordered by global position, deduped (ALTER
-      //    events can be wire-duplicated like any event)
-      val alters = okEvents.filter(col("op") === "ALTER")
-        .select(col("offset"), col("partition"), col("alterJson"))
-        .distinct()
-        .collect()
-        .sortBy(r => (r.getLong(0), r.getInt(1)))
-      alters.zipWithIndex.foreach { case (r, k) =>
-        SchemaEvolution(cfg.tableDir, r.getString(2), s"stream.$epochId.alter.$k")
-      }
-
-      // 2. one action over the raw batch: per-partition consumed offset
-      //    ranges + counts (lineage's gapless-cover invariant is over the
-      //    RAW range; rows_applied comes from the merge result below)
-      val data = okEvents.filter(col("op") =!= "ALTER")
-      val ranges = data.groupBy(col("partition"))
-        .agg(min("offset").as("lo"), max("offset").as("hi"),
-          count(lit(1)).as("n"))
-        .collect()
-      val eventsIn = ranges.map(_.getLong(3)).sum
-      if (eventsIn == 0) return // nothing to commit; replay-safe no-op
+      val isAlter = col("op") === "ALTER"
+      val data = okEvents.filter(!isAlter)
       val deduped = Dedup.latestPerKey(data).cache()
       try {
+        // 1. ONE bookkeeping action over the cached batch; rows are (kind,
+        //    partition, a, b, c, alterJson, buckets): kind 0 = a distinct
+        //    ALTER at offset a; 1 = a partition's RAW offset range a..b
+        //    and event count c (lineage covers it gaplessly); 2 = its
+        //    winners a, deletes b and their buckets. Lineage and metrics
+        //    derive from batch content alone, so a crashed attempt's
+        //    rerun reports the same rows.
+        val nBuckets = IceLite.load(cfg.tableDir).numBuckets
+        val none = lit(null)
+        val book = okEvents.filter(isAlter)
+          .select(col("partition"), col("offset"), col("alterJson")).distinct()
+          .select(lit(0), col("partition"), col("offset"), lit(0L), lit(0L),
+            col("alterJson"), none)
+          .union(data.groupBy(col("partition"))
+            .agg(min("offset").as("lo"), max("offset").as("hi"),
+              count(lit(1)).as("n"))
+            .select(lit(1), col("partition"), col("lo"), col("hi"), col("n"),
+              none, none))
+          .union(deduped.groupBy(col("partition"))
+            .agg(sum(when(col("op") === "D", 1L).otherwise(0L)).as("d"),
+              Merge.batchStatsCols(col("url"), nBuckets): _*)
+            .select(lit(2), col("partition"), col("winners"), col("d"), lit(0L),
+              none, col("buckets")))
+          .collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty)
+
+        // 2. schema evolution, ordered by global position
+        book(0).sortBy(r => (r.getLong(2), r.getInt(1))).zipWithIndex
+          .foreach { case (r, k) =>
+            SchemaEvolution(cfg.tableDir, r.getString(5), s"stream.$epochId.alter.$k")
+          }
+        val eventsIn = book(1).map(_.getLong(4)).sum
+        if (eventsIn == 0) return // nothing to commit; replay-safe no-op
+        val applied = book(2).map(r => r.getInt(1) -> r.getLong(2)).toMap
+        val winners = applied.values.sum
+        val dels = book(2).map(_.getLong(3)).sum
+
+        // 3. the conditional merge, sized by the collected stats
         inject("beforeMerge")
-        val res = Merge(spark, cfg.tableDir, deduped, s"stream.$epochId",
-          cfg.nSalts, preDeduped = true)
+        Merge(spark, cfg.tableDir, deduped, s"stream.$epochId", cfg.nSalts,
+          Some(Merge.BatchStats(book(2).flatMap(_.getSeq[Int](6)).toSet, winners)))
         inject("afterMerge")
 
-        // 3. lineage: one row per source partition of this batch, built
-        //    driver-side from already-collected stats (deterministic on
-        //    replay — derived from batch content, not the table diff)
-        val snapshotId = IceLite.load(cfg.tableDir).snapshotId
-        // applied counts come from the merge result when it ran, and are
-        // recomputed from the (identical) deduped batch when the merge was
-        // a no-op replay after a crash — lineage rows must not depend on
-        // whether THIS attempt or a previous one committed the table epoch
-        val appliedBy =
-          if (res.lineage.nonEmpty) {
-            res.lineage.map(l => l.partition -> l.rowsApplied).toMap
-          } else {
-            deduped.groupBy(col("partition")).agg(count(lit(1)).as("n"))
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          }
+        // 4. lineage: one row per source partition of this batch; the
+        //    locally built frames are coalesced to one file per commit
         import spark.implicits._
-        val lineageDf = ranges.map { r =>
-          (epochId, r.getInt(0), r.getLong(1), r.getLong(2),
-            appliedBy.getOrElse(r.getInt(0), 0L), snapshotId,
+        val snapshotId = IceLite.load(cfg.tableDir).snapshotId
+        val lineageDf = book(1).map { r =>
+          (epochId, r.getInt(1), r.getLong(2), r.getLong(3),
+            applied.getOrElse(r.getInt(1), 0L), snapshotId,
             new java.sql.Timestamp(System.currentTimeMillis()))
         }.toSeq.toDF("epoch_id", "partition", "min_offset", "max_offset",
-          "rows_applied", "snapshot_id", "commit_ts")
+          "rows_applied", "snapshot_id", "commit_ts").coalesce(1)
         IceLite.append(spark, cfg.lineageDir, s"stream.$epochId", lineageDf)
         inject("afterLineage")
 
-        // 4. throughput metrics: one row per batch. Upsert/delete counts
-        //    come from the merge result when it computed them; the CTAS
-        //    fast path (rowsUpserted = -1 sentinel) and a crash-replayed
-        //    no-op merge (committed = false) recompute them from the
-        //    cached deduped batch instead — metrics must never publish a
-        //    sentinel, and must be identical whether THIS attempt or a
-        //    previous one committed the table epoch.
-        val (ups, dels) =
-          if (res.committed && res.rowsUpserted >= 0) {
-            (res.rowsUpserted, res.rowsDeleted)
-          } else {
-            val a = deduped.agg(count(lit(1)).as("n"),
-              sum(when(col("op") === "D", 1L).otherwise(0L)).as("d"))
-              .collect()(0)
-            (a.getLong(0) - a.getLong(1), a.getLong(1))
-          }
-        import spark.implicits._
+        // 5. throughput metrics: one row per batch
         val batchMs = (System.nanoTime() - t0) / 1000000L
-        val metricsDf = Seq((epochId, eventsIn, ups, dels, batchMs,
+        val metricsDf = Seq((epochId, eventsIn, winners - dels, dels, batchMs,
           if (batchMs > 0) eventsIn * 1000.0 / batchMs else 0.0))
           .toDF("epoch_id", "events_in", "rows_upserted", "rows_deleted",
-            "batch_ms", "events_per_sec")
+            "batch_ms", "events_per_sec").coalesce(1)
         IceLite.append(spark, cfg.metricsDir, s"stream.$epochId", metricsDf)
       } finally deduped.unpersist()
     } finally batch.unpersist()

@@ -277,6 +277,23 @@ class IceLiteSpec extends SparkTestBase {
     assert(IceLite.read(spark, dir).count() == 6, "concurrent commit intact")
   }
 
+  test("replaceBuckets refuses staged rows outside the buckets it " +
+      "replaces, committing nothing") {
+    val dir = tmpDir("ice-stray")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    val base = IceLite.replaceBuckets(dir, "e1", "merge",
+      IceLite.load(dir), mkRows(8), (0 until 4).toSet)
+    val e = intercept[IllegalStateException] {
+      IceLite.replaceBuckets(dir, "stray", "merge", base,
+        mkRowsInBucket(3, 2), Set(0, 1))
+    }
+    assert(e.getMessage.contains("stray") && e.getMessage.contains("2"),
+      e.getMessage)
+    assert(IceLite.currentVersion(dir) == base.version)
+    assert(!IceLite.load(dir).committedEpoch("stray"))
+    assert(IceLite.read(spark, dir).count() == 8)
+  }
+
   test("retryOnConflict re-runs a conflicting body up to three attempts") {
     import graft.icelite.CommitConflictException
     var calls = 0
@@ -300,5 +317,57 @@ class IceLiteSpec extends SparkTestBase {
       IceLite.retryOnConflict { calls += 1; throw new IllegalStateException }
     }
     assert(calls == 1)
+  }
+
+  test("stageFiles: a null _bucket fails the write, naming the epoch, and " +
+      "leaves nothing under data/") {
+    val dir = tmpDir("icenull")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    val rows = mkRows(6).withColumn("_bucket",
+      when(col("_offset") === 3L, lit(null).cast(IntegerType))
+        .otherwise(col("_bucket")))
+    val e = intercept[Exception](IceLite.stageFiles(dir, "nullb.1", rows, 1))
+    def msgs(x: Throwable): Seq[String] =
+      if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+    assert(msgs(e).exists(_.contains("nullb.1")), msgs(e).mkString("|"))
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data"))
+      .count() == 0, "no staged file or staging dir survives the failure")
+  }
+
+  test("every writer records each data file's row count: per version, the " +
+      "files' rows sum to the version's readInternal count (replay, " +
+      "micro-batch merge, SQL UPDATE, compaction)") {
+    def checkRows(dir: String, v: Int): Unit = {
+      val fs = IceLite.loadVersion(dir, v).files
+      assert(fs.nonEmpty && fs.forall(_.rows >= 0), s"$dir v$v: $fs")
+      assert(fs.map(_.rows).sum ==
+        IceLite.readInternal(spark, dir, Some(v)).count(), s"$dir v$v")
+    }
+    val cfg = graft.sources.Ledger.Config(seed = 5L, nEvents = 1200,
+      nDomains = 8, pagesPerDomain = 6, partitions = 2, segments = 4,
+      deleteRate = 0.1)
+    val ledger = tmpDir("rows_ledger")
+    graft.sources.Ledger.synthesize(spark, cfg, ledger)
+    // replay: its single segment takes Merge's CTAS path
+    val table = tmpDir("rows_replay")
+    graft.operators.Replay.full(spark, ledger, table, nBuckets = 4)
+    checkRows(table, IceLite.currentVersion(table))
+    // pipeline: the first batch is a CTAS, every later one a merge
+    val work = tmpDir("rows_pipe")
+    graft.streaming.Pipeline.runToCompletion(spark, graft.streaming.Pipeline
+      .Config(ledger, s"$work/pages", s"$work/cp", s"$work/lin", s"$work/met",
+        nBuckets = 4, maxFilesPerTrigger = 2))
+    val pages = s"$work/pages"
+    assert(IceLite.currentVersion(pages) >= 3, "at least one micro-batch merge")
+    (2 to IceLite.currentVersion(pages)).foreach(checkRows(pages, _))
+    // SQL UPDATE, then a compaction of every bucket
+    spark.sql("DROP TABLE IF EXISTS rows_t")
+    spark.sql(s"CREATE TABLE rows_t USING icelite OPTIONS (path '$table')")
+    spark.sql("UPDATE rows_t SET lang = 'xx'")
+    checkRows(table, IceLite.currentVersion(table))
+    assert(graft.operators.Maintenance.compact(spark, table, "rows.compact",
+      maxFilesPerBucket = 0) > 0)
+    checkRows(table, IceLite.currentVersion(table))
+    spark.sql("DROP TABLE rows_t")
   }
 }

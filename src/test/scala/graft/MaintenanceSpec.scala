@@ -209,6 +209,33 @@ class MaintenanceSpec extends SparkTestBase {
       version = Some(IceLite.currentVersion(table) - 1)).count() >= 0)
   }
 
+  test("gcOrphans deletes a killed writer's aged staging dir, never a " +
+      "fresh one") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    val (_, table, _) = freshReplay(400, 1, "gcstage")
+    val live = IceLite.read(spark, table).count()
+    // a writer killed mid-stage leaves its staging dir full of parquet;
+    // an in-flight writer's dir looks the same but is fresh
+    val old = Paths.get(table, "data", ".staging-stream.7-1")
+    val fresh = Paths.get(table, "data", ".staging-stream.8-2")
+    Seq(old, fresh).foreach { d =>
+      Files.createDirectories(d)
+      Files.write(d.resolve("p0-a0-b1.parquet"), Array[Byte](1))
+    }
+    val aged = FileTime.fromMillis(System.currentTimeMillis() - 7200000L)
+    Seq(old.resolve("p0-a0-b1.parquet"), old)
+      .foreach(p => Files.setLastModifiedTime(p, aged))
+    // one fresh file keeps an otherwise aged dir
+    Files.setLastModifiedTime(fresh, aged)
+    val (d, m) = Maintenance.gcOrphans(table, minAgeMs = 3600000L)
+    assert(d == 1 && m == 0, s"deleted data=$d manifests=$m")
+    assert(!Files.exists(old), "aged staging dir deleted")
+    assert(Files.exists(fresh.resolve("p0-a0-b1.parquet")),
+      "in-flight staging dir kept (age guard)")
+    assert(IceLite.read(spark, table).count() == live)
+  }
+
   test("streaming with RocksDB state store matches batch replay") {
     val cfg = Ledger.Config(seed = 91L, nEvents = 1200, nDomains = 8,
       pagesPerDomain = 6, partitions = 2, segments = 2, duplicateRate = 0.08)

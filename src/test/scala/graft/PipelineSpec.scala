@@ -78,6 +78,13 @@ class PipelineSpec extends SparkTestBase {
         case _ =>
       }
     }
+    // the locally built sidecar frames land as ONE data file per commit
+    Seq(s"$work/_lineage", s"$work/_metrics").foreach { t =>
+      def files(v: Int) = IceLite.loadVersion(t, v).files.map(_.path).toSet
+      (2 to IceLite.currentVersion(t)).foreach { v =>
+        assert((files(v) -- files(v - 1)).size == 1, s"$t v$v")
+      }
+    }
   }
 
   test("kill after table commit, before lineage commit: restart completes, no dups") {
@@ -105,6 +112,23 @@ class PipelineSpec extends SparkTestBase {
     val dups = lin.groupBy(col("epoch_id"), col("partition")).count()
       .filter(col("count") > 1)
     assert(dups.isEmpty, "no duplicate lineage rows after crash+restart")
+
+    // lineage and metrics rows equal an uninterrupted run's: the restarted
+    // epoch 2 finds its table commit done and must still report the same
+    // counts; no metrics row may carry a -1 sentinel (epoch 0 lands in an
+    // empty table, Merge's CTAS path)
+    val clean = tmpDir("pl3_clean")
+    Pipeline.runToCompletion(spark, pipeCfg(clean, ledger))
+    def rows(w: String, t: String, cols: String*) =
+      IceLite.read(spark, s"$w/$t").select(cols.map(col): _*).collect()
+        .map(_.toSeq.mkString(",")).sorted.toSeq
+    def lineage(w: String) = rows(w, "_lineage", "epoch_id", "partition",
+      "min_offset", "max_offset", "rows_applied")
+    def metrics(w: String) = rows(w, "_metrics", "epoch_id", "events_in",
+      "rows_upserted", "rows_deleted")
+    assert(lineage(work) == lineage(clean))
+    assert(metrics(work) == metrics(clean))
+    assert(metrics(work).forall(!_.split(",").contains("-1")), metrics(work))
   }
 
   test("transformWithState dedup (custom TTL state) == watermark dedup") {

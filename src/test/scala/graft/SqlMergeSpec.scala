@@ -456,6 +456,9 @@ class SqlMergeSpec extends SparkTestBase {
     }
     assert(msgs(e2).exists(_.contains("uniqueness")), msgs(e2).mkString("|"))
     assert(IceLite.load(dir).version == v0, "failed MERGE must not commit")
+    // the aborted writes leave no staging dir behind
+    assert(!java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data"))
+      .anyMatch(_.getFileName.toString.startsWith(".staging-")))
     // a legal key move still works (the guard only rejects collisions)
     spark.sql(s"UPDATE $t SET url = 'c' WHERE url = 'a'")
     assert(state(dir) === Map("c" -> (1L, "x"), "b" -> (2L, "x")))
