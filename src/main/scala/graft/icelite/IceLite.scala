@@ -174,8 +174,7 @@ object IceLite {
           "type" -> JString(typeToJsonString(f.dataType)),
           "nullable" -> JBool(f.nullable))))))),
       // the manifest LIST: per-bucket file lists live out-of-line; this
-      // JSON never carries individual data files (see fromJson for the
-      // icelite/1 inline-files legacy read path)
+      // JSON never carries individual data files
       "manifests" -> JArray(m.manifests.toList.map(r => JObject(
         "path" -> JString(r.path),
         "bucket" -> JInt(r.bucket),
@@ -189,6 +188,9 @@ object IceLite {
   private def fromJson(s: String): Metadata = {
     val j = JsonMethods.parse(s)
     val o = j.asInstanceOf[JObject].obj.toMap
+    val format = o.get("format").map(jstr).getOrElse("<none>")
+    if (format != "icelite/2") throw new IllegalStateException(
+      s"unsupported table metadata format '$format' (this reader reads icelite/2)")
     val schemas = o("schemas").asInstanceOf[JArray].arr.map { sv =>
       val so = sv.asInstanceOf[JObject].obj.toMap
       Schema(
@@ -199,29 +201,18 @@ object IceLite {
             typeFromJsonString(jstr(fo("type"))), jbool(fo("nullable")))
         })
     }
-    val manifests = o.get("manifests") match {
-      case Some(JArray(arr)) => arr.map { rv =>
-        val ro = rv.asInstanceOf[JObject].obj.toMap
-        ManifestRef(jstr(ro("path")), jnum(ro("bucket")).toInt,
-          jnum(ro("nFiles")).toInt)
-      }
-      case _ => Nil
+    val manifests = o("manifests").asInstanceOf[JArray].arr.map { rv =>
+      val ro = rv.asInstanceOf[JObject].obj.toMap
+      ManifestRef(jstr(ro("path")), jnum(ro("bucket")).toInt,
+        jnum(ro("nFiles")).toInt)
     }
-    // icelite/2 resolves files from manifests; icelite/1 carried them inline
-    val files =
-      if (manifests.nonEmpty) manifests.flatMap(readManifest)
-      else o.get("files") match {
-        case Some(JArray(arr)) => arr.map(fileFromJson)
-        case _ => Nil
-      }
-    val hwm = o.get("epochHwm") match { // absent in early icelite/1 files
-      case Some(JObject(kvs)) => kvs.map { case (k, v) => k -> jnum(v) }.toMap
-      case _ => Map.empty[String, Long]
-    }
+    val hwm = o("epochHwm").asInstanceOf[JObject].obj
+      .map { case (k, v) => k -> jnum(v) }.toMap
     Metadata(
       jnum(o("version")).toInt, jnum(o("snapshotId")), jnum(o("parentSnapshotId")),
       jstr(o("epochKey")), jstr(o("operation")), jnum(o("currentSchemaId")).toInt,
-      jnum(o("numBuckets")).toInt, schemas, manifests, files,
+      jnum(o("numBuckets")).toInt, schemas, manifests,
+      manifests.flatMap(readManifest),
       o("epochLog").asInstanceOf[JArray].arr.map(jstr).toSet,
       hwm,
       jnum(o("committedAtMs")))
@@ -405,7 +396,7 @@ object IceLite {
         .toSeq.sorted.map { b =>
           refByBucket.get(b) match {
             case Some(ref) if !touched.contains(b) => ref // by reference
-            case _ => // touched, or legacy inline-files metadata: (re)write
+            case _ => // touched: (re)write
               writeManifest(dir, b,
                 keptByBucket.getOrElse(b, Nil) ++ newByBucket.getOrElse(b, Nil))
           }
@@ -560,11 +551,9 @@ object IceLite {
     val strays = staged.map(_.bucket).filterNot(buckets).distinct.sorted
     if (strays.nonEmpty) throw new IllegalStateException(
       s"epoch $epochKey staged rows into buckets $strays it does not replace")
-    graft.util.Phase("stage.commit") {
-      commit(dir, epochKey, operation, newFiles = staged,
-        replacedBuckets = buckets, newSchema = newSchema,
-        baseVersion = Some(base.version))
-    }
+    commit(dir, epochKey, operation, newFiles = staged,
+      replacedBuckets = buckets, newSchema = newSchema,
+      baseVersion = Some(base.version))
   }
 
   /** Run `body` — one whole read-then-replace — again when its commit
@@ -600,17 +589,13 @@ object IceLite {
     val safe = epochKey.replaceAll("[^A-Za-z0-9._-]", "_")
     val staging = Paths.get(dir, "data", s".staging-$safe-${System.nanoTime()}")
     try {
-      val written = graft.util.Phase("stage.write-job") {
-        BucketFileWriter.write(df, staging.toString, epochKey)
-      }
+      val written = BucketFileWriter.write(df, staging.toString, epochKey)
       // final names carry a sequence number: collision-free per attempt
-      graft.util.Phase("stage.move") {
-        written.sortBy(f => (f._2, f._1)).zipWithIndex.map {
-          case ((path, bucket, rows), seq) =>
-            val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
-            Files.move(Paths.get(path), dst, StandardCopyOption.REPLACE_EXISTING)
-            DataFileEntry(dst.toString, bucket, schemaId, rows)
-        }
+      written.sortBy(f => (f._2, f._1)).zipWithIndex.map {
+        case ((path, bucket, rows), seq) =>
+          val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
+          Files.move(Paths.get(path), dst, StandardCopyOption.REPLACE_EXISTING)
+          DataFileEntry(dst.toString, bucket, schemaId, rows)
       }
     } finally deleteRecursively(staging)
   }

@@ -2,7 +2,7 @@ package graft.icelite
 
 import graft.functions.Salt
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualNullSafe, EqualTo, Expression, In, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -23,7 +23,7 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * The rule runs in the operator-optimization fixpoint batch, AFTER
   * predicate pushdown has moved filters adjacent to the relation — so the
   * driver-side storage-bucket pruning the v1 path did in `buildScan`
-  * happens here instead: key-literal equality/IN conjuncts of the
+  * happens here instead: key-literal conjuncts (`Salt.bucketsPinnedBy`) of the
   * adjacent Filter prune the METADATA file list to the keys' buckets
   * before the parquet relation is even built (a point lookup on a
   * 10^5-bucket table opens a handful of files). The Filter node itself is
@@ -40,32 +40,6 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * resolution, before the optimizer ever sees their inner relations.
   */
 class IceLiteScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case x => Seq(x)
-  }
-
-  /** Storage buckets implied by key-literal conjuncts of `cond` (the same
-    * pruning contract as `IceLiteRelation.keyBuckets`: any single
-    * key-pinning conjunct bounds the scan, whatever the rest does).
-    */
-  private def keyBuckets(cond: Expression, key: AttributeReference,
-      nB: Int): Option[Set[Int]] =
-    conjuncts(cond).collectFirst {
-      case EqualTo(k, l: Literal) if k.semanticEquals(key) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case EqualTo(l: Literal, k) if k.semanticEquals(key) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case EqualNullSafe(k, l: Literal) if k.semanticEquals(key) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case EqualNullSafe(l: Literal, k) if k.semanticEquals(key) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case In(k, vs) if k.semanticEquals(key) &&
-        vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        vs.collect { case l: Literal if l.value != null =>
-          Salt.bucketOfLiteral(l, nB) }.toSet
-    }
 
   /** The inner read plan for `rel`, projected onto the relation's exact
     * output attribute ids — or None when substitution isn't provably
@@ -84,7 +58,7 @@ class IceLiteScanSubstitution(spark: SparkSession) extends Rule[LogicalPlan] {
       return None // evolved since analysis: v1 guard gives the clear error
     }
     val key = lr.output.head.asInstanceOf[AttributeReference]
-    val buckets = cond.flatMap(keyBuckets(_, key, m.numBuckets))
+    val buckets = cond.flatMap(Salt.bucketsPinnedBy(_, key, m.numBuckets))
     import org.apache.spark.sql.functions.col
     val inner = IceLite.readInternal(spark, rel.dir, Some(m.version), buckets)
       .filter(!col("_deleted"))

@@ -33,10 +33,9 @@ object Changes {
     * micro-batch — at 10^5 files per snapshot the unpruned form was the
     * scale-killer the round-5 review flagged). The key→bucket layout
     * invariant (a key's rows live only in `Salt.bucket(key, numBuckets)`,
-    * identical across versions while numBuckets is fixed) makes pruning
-    * the attach scan safe too. Falls back to the unpruned scan when either
-    * version predates bucket manifests (icelite/1 inline files) or the
-    * bucket count differs.
+    * and `numBuckets` is fixed at `create`) makes pruning the attach scan
+    * safe too. Every version that holds files lists them in per-bucket
+    * manifests, so the ref diff sees every changed bucket.
     */
   def between(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Option[Int] = None): DataFrame = {
@@ -44,17 +43,10 @@ object Changes {
     val mFrom = IceLite.loadVersion(dir, fromVersion)
     val mTo = IceLite.loadVersion(dir, to)
     val key = mTo.currentSchema.fields.head.name
-    val prunable = mFrom.numBuckets == mTo.numBuckets &&
-      (mFrom.files.isEmpty || mFrom.manifests.nonEmpty) &&
-      (mTo.files.isEmpty || mTo.manifests.nonEmpty)
-    val buckets: Option[Set[Int]] =
-      if (!prunable) None
-      else {
-        val fromRefs = mFrom.manifests.map(r => r.bucket -> r.path).toMap
-        val toRefs = mTo.manifests.map(r => r.bucket -> r.path).toMap
-        Some((fromRefs.keySet ++ toRefs.keySet)
-          .filter(b => fromRefs.get(b) != toRefs.get(b)))
-      }
+    val fromRefs = mFrom.manifests.map(r => r.bucket -> r.path).toMap
+    val toRefs = mTo.manifests.map(r => r.bucket -> r.path).toMap
+    val buckets = (fromRefs.keySet ++ toRefs.keySet)
+      .filter(b => fromRefs.get(b) != toRefs.get(b))
     // key + event-time columns resolved PER VERSION by field id: a rename
     // between the two snapshots must not break the diff (the read path
     // reconciles each version to ITS OWN schema's names)
@@ -63,7 +55,7 @@ object Changes {
       val keyName = s.fields.head.name
       val tsName = s.fields.find(_.id == Merge.versionFieldId)
         .getOrElse(sys.error(s"version field missing in v$v")).name
-      IceLite.readInternal(spark, dir, Some(v), buckets)
+      IceLite.readInternal(spark, dir, Some(v), Some(buckets))
         .select(col(keyName).as(s"${p}_key"), col(tsName).as(s"${p}_ts"),
           col("_offset").as(s"${p}_off"), col("_partition").as(s"${p}_part"),
           col("_deleted").as(s"${p}_del"))
@@ -86,13 +78,9 @@ object Changes {
     // attach the newer snapshot's full row for inserts/updates — pruned to
     // the same changed buckets (every changed key lives in one of them, by
     // the layout invariant above)
-    val current = buckets match {
-      case Some(bs) =>
-        IceLite.readInternal(spark, dir, Some(to), Some(bs))
-          .filter(!col("_deleted"))
-          .drop(IceLite.internalFields.map(_.name): _*)
-      case None => IceLite.read(spark, dir, Some(to))
-    }
+    val current = IceLite.readInternal(spark, dir, Some(to), Some(buckets))
+      .filter(!col("_deleted"))
+      .drop(IceLite.internalFields.map(_.name): _*)
     changed.join(current, Seq(key), "left")
   }
 }

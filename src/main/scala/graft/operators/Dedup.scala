@@ -87,13 +87,11 @@ object Dedup {
     // by the ContextCleaner as soon as the returned plan is unreferenced.
     // Eager by default, so count() and the broadcast build both read the
     // materialized blocks instead of re-running the aggregation.
-    val winners = graft.util.Phase("dedup.winners-agg") {
-      events.groupBy(col("url")).agg(max(ver).as("_ver"))
-        .select(col("url").as("_wurl"), col("_ver.warc_ts").as("_wts"),
-          col("_ver.offset").as("_woff"), col("_ver.partition").as("_wpart"))
-        .localCheckpoint()
-    }
-    val nWinners = graft.util.Phase("dedup.winners-count") { winners.count() }
+    val winners = events.groupBy(col("url")).agg(max(ver).as("_ver"))
+      .select(col("url").as("_wurl"), col("_ver.warc_ts").as("_wts"),
+        col("_ver.offset").as("_woff"), col("_ver.partition").as("_wpart"))
+      .localCheckpoint()
+    val nWinners = winners.count()
     if (nWinners <= maxBroadcastKeys) {
       onWinnerCount(nWinners)
       // null-safe equality (<=>): a winning event with a NULL version
@@ -109,14 +107,4 @@ object Dedup {
       latestPerKey(events)
     }
   }
-
-  /** Wire-duplicate count per partition (metrics only — the merge itself
-    * never needs explicit wire dedup because latest-wins is idempotent).
-    */
-  def wireDuplicates(events: DataFrame): DataFrame =
-    events.groupBy(col("partition"), col("offset"), col("url"), col("warc_ts"))
-      .count()
-      .filter(col("count") > 1)
-      .groupBy(col("partition"))
-      .agg(sum(col("count") - 1).as("wire_duplicates"))
 }

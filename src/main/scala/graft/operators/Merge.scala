@@ -28,9 +28,10 @@ import org.apache.spark.sql.types._
   *    independent of micro-batch boundaries — the batch↔streaming
   *    equivalence gate depends on it.
   *  - **Salted write.** The output is repartitioned on
-  *    `(_bucket, pmod(_offset, nSalts))` before `partitionBy(_bucket)`:
-  *    a hot bucket (Zipf-head domain) spreads over `nSalts` tasks while
-  *    every bucket still gets at most `nSalts` files. Storage bucketing
+  *    `(_bucket, pmod(_offset, lanes))` (`lanes` ≤ `nSalts`, see
+  *    `effectiveSalts`) before the bucket-file write: a hot bucket
+  *    (Zipf-head domain) spreads over `lanes` tasks while every bucket
+  *    still gets at most `lanes` files. Storage bucketing
   *    itself stays UNSALTED so layout is stable (SURVEY.md §4.2).
   *  - **Exactly-once.** Data files are staged invisible, then published by
   *    one atomic metadata commit keyed by `epochKey`; a replayed epoch is a
@@ -84,7 +85,7 @@ object Merge {
   def apply(spark: SparkSession, tableDir: String, changes: DataFrame,
       epochKey: String, nSalts: Int = 4,
       deduped: Option[BatchStats] = None): CommitResult = {
-    val pre = graft.util.Phase("merge.load") { IceLite.load(tableDir) }
+    val pre = IceLite.load(tableDir)
     if (pre.committedEpoch(epochKey)) {
       return CommitResult(epochKey, committed = false, pre.snapshotId,
         Set.empty, pre.filesPerBucket.values.maxOption.getOrElse(0))
@@ -178,10 +179,8 @@ object Merge {
               col("_bucket")): _*)
         case None => salted
       }
-      val post = graft.util.Phase("merge.ctas-write") {
-        IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, withText,
-          (0 until nBuckets).toSet)
-      }
+      val post = IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
+        withText, (0 until nBuckets).toSet)
       return CommitResult(epochKey, committed = post.epochKey == epochKey,
         post.snapshotId, (0 until nBuckets).toSet,
         maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.icelite.IceLite
-import graft.util.Phase
 import graft.model.Model
 import graft.sources.Ledger
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,10 +25,8 @@ object Replay {
   def full(spark: SparkSession, ledgerDir: String, tableDir: String,
       nBuckets: Int = 32, epochPrefix: String = "replay", nSalts: Int = 4,
       dlqDir: Option[String] = None): Int = {
-    Phase("replay.create") {
-      if (!IceLite.exists(tableDir)) {
-        IceLite.create(tableDir, Model.pagesSchema, nBuckets)
-      }
+    if (!IceLite.exists(tableDir)) {
+      IceLite.create(tableDir, Model.pagesSchema, nBuckets)
     }
     val raw = Ledger.scan(spark, ledgerDir)
     dlqDir.foreach { dq =>
@@ -43,13 +40,11 @@ object Replay {
 
     // distinct: ALTER events can be wire-duplicated like any other event;
     // a duplicate must not shift segment numbering or add empty epochs
-    val alters = Phase("replay.alters-scan") {
-      events.filter(col("op") === "ALTER")
-        .select(col("offset"), col("partition"), col("alterJson"))
-        .distinct()
-        .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getString(2)))
-        .sortBy(_._1)
-    }
+    val alters = events.filter(col("op") === "ALTER")
+      .select(col("offset"), col("partition"), col("alterJson"))
+      .distinct()
+      .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getString(2)))
+      .sortBy(_._1)
 
     var lo: Option[(Long, Int)] = None
     var seg = 0

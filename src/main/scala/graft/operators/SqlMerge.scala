@@ -498,9 +498,7 @@ object SqlMerge {
     // touch buckets holding none — and the anti-join is expensive out of
     // proportion (it re-evaluates the statement's whole merge dataflow a
     // second time inside the write job to produce `out`'s key column)
-    val haveTombs = graft.util.Phase("dml.tombstone-probe") {
-      tombs0.select(col(keyName)).limit(1).count() > 0L
-    }
+    val haveTombs = tombs0.select(col(keyName)).limit(1).count() > 0L
     val withTombs =
       if (!haveTombs) guarded
       else {
@@ -523,25 +521,6 @@ object SqlMerge {
       s"$opName.${java.util.UUID.randomUUID().toString.substring(0, 13)}"
     IceLite.replaceBuckets(t.dir, epoch, opName, t.pre,
       withTombs.repartition(col("_bucket")), affected, newSchema)
-  }
-
-  /** Buckets implied by a condition's key conjuncts (`key = lit`,
-    * `key IN (lits)`): sound whatever the rest of the condition does,
-    * because matching rows must satisfy EVERY conjunct.
-    */
-  private def bucketsFromCondition(cond: Expression,
-      keyAttr: AttributeReference, nB: Int): Option[Set[Int]] = {
-    import org.apache.spark.sql.catalyst.expressions.{In, Literal}
-    conjuncts(cond).collectFirst {
-      case EqualTo(k, l: Literal) if k.semanticEquals(keyAttr) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case EqualTo(l: Literal, k) if k.semanticEquals(keyAttr) &&
-        l.value != null => Set(Salt.bucketOfLiteral(l, nB))
-      case In(k, vs) if k.semanticEquals(keyAttr) &&
-        vs.forall(_.isInstanceOf[Literal]) =>
-        vs.collect { case l: Literal if l.value != null =>
-          Salt.bucketOfLiteral(l, nB) }.toSet
-    }
   }
 
   // ------------------------------------------------------------ UPDATE
@@ -572,7 +551,7 @@ object SqlMerge {
         keep = lit(true), changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
       // moved rows need their NEW bucket read too: no scan pruning
       scanBuckets = if (keyReassigned) None
-        else bucketsFromCondition(cond, t.keyAttr, t.nB),
+        else Salt.bucketsPinnedBy(cond, t.keyAttr, t.nB),
       repeatable = repeatableExpr(cond) &&
         (!keyReassigned || assigns.get(0).forall(repeatableExpr)),
       pass2Pruned = true, introducesKeys = keyReassigned)
@@ -591,7 +570,7 @@ object SqlMerge {
     rewrite(spark, t, "sqldelete",
       b => marked(pinnedTarget(spark, t, b), t, t.attrs.map(cc),
         keep = !hit, changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
-      scanBuckets = bucketsFromCondition(delete.condition, t.keyAttr, t.nB),
+      scanBuckets = Salt.bucketsPinnedBy(delete.condition, t.keyAttr, t.nB),
       repeatable = repeatableExpr(delete.condition),
       pass2Pruned = true, introducesKeys = false)
   }

@@ -44,22 +44,6 @@ object Pipeline {
       maxFilesPerTrigger: Int = 8,
       /** dead-letter sidecar table for malformed events (None = drop) */
       dlqDir: Option[String] = None,
-      /** RocksDB state store for the dedup state — the right choice when
-        * keys-in-watermark exceed executor heap (10^10-event tails);
-        * default HDFS-backed store is fine for tests */
-      useRocksDB: Boolean = false,
-      /** Dedup via `transformWithState` (a custom [[DedupProcessor]] with
-        * an explicit processing-time state TTL) instead of
-        * `dropDuplicatesWithinWatermark`. Same result on a
-        * bounded-disorder ledger (PipelineSpec equivalence case); the
-        * knob exists for sources whose duplicate-arrival window is better
-        * expressed as a TTL than as an event-time watermark. Implies
-        * RocksDB: Spark's state-v2 operators only run on the RocksDB
-        * state store provider. */
-      useTransformWithState: Boolean = false,
-      /** seen-key state TTL for the transformWithState dedup — must cover
-        * the source's maximum duplicate re-delivery lag in processing time */
-      dedupStateTtl: java.time.Duration = java.time.Duration.ofHours(1),
       /** test hook: throw at (epochId, point); point ∈ {beforeMerge,
         * afterMerge, afterLineage} — the M5 kill/restart fault injection */
       failAt: Option[(Long, String)] = None)
@@ -72,33 +56,9 @@ object Pipeline {
     if (!IceLite.exists(cfg.tableDir)) {
       IceLite.create(cfg.tableDir, Model.pagesSchema, cfg.nBuckets)
     }
-    if (cfg.useRocksDB || cfg.useTransformWithState) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    }
-    if (cfg.useTransformWithState) {
-      // transformWithState in ProcessingTime mode schedules NO-DATA batches
-      // to advance its TTL clock — under Trigger.AvailableNow that loop
-      // never drains (measured: 1000+ empty micro-batches, one commit
-      // each, query never terminates). The pipeline needs no eager TTL
-      // ticks: expired `seen` state is dropped lazily on access/maintenance,
-      // and every effect is driven by DATA batches only.
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    }
-    val raw = Ledger.tail(spark, cfg.ledgerDir, cfg.maxFilesPerTrigger)
-    val stream =
-      if (cfg.useTransformWithState) {
-        import spark.implicits._
-        raw.as[graft.model.ChangeEvent]
-          .groupByKey(e => (e.url, e.warc_ts, e.offset, e.partition))
-          .transformWithState(new DedupProcessor(cfg.dedupStateTtl),
-            org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF()
-      } else {
-        raw.withWatermark("warc_ts", cfg.watermarkDelay)
-          .dropDuplicatesWithinWatermark("url", "warc_ts", "offset", "partition")
-      }
+    val stream = Ledger.tail(spark, cfg.ledgerDir, cfg.maxFilesPerTrigger)
+      .withWatermark("warc_ts", cfg.watermarkDelay)
+      .dropDuplicatesWithinWatermark("url", "warc_ts", "offset", "partition")
 
     stream.writeStream
       .queryName("thorspark-pipeline")

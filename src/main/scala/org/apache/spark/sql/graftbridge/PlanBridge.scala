@@ -51,4 +51,11 @@ object PlanBridge {
       qe.toRdd, Option(declaredSchema).getOrElse(df.schema),
       isStreaming = true)
   }
+
+  /** Block until every event posted so far has reached the session's
+    * listeners (`LiveListenerBus` is `private[spark]`), so a profiler
+    * reads a finished run's jobs and stages without sleeping.
+    */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

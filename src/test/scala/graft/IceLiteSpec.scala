@@ -191,6 +191,21 @@ class IceLiteSpec extends SparkTestBase {
     assert(IceLite.load(big).manifests.size == 8, "one manifest per bucket")
   }
 
+  test("load refuses metadata of any format but icelite/2, naming it") {
+    val dir = tmpDir("ice_fmt")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    val staged = IceLite.stageFiles(dir, "e1", mkRows(3), 1)
+    IceLite.commit(dir, "e1", "merge", staged, (0 until 4).toSet)
+    val meta = java.nio.file.Paths.get(dir, "metadata",
+      s"v${IceLite.currentVersion(dir)}.metadata.json")
+    val json = new String(java.nio.file.Files.readAllBytes(meta), "UTF-8")
+    assert(json.contains("\"icelite/2\""))
+    java.nio.file.Files.write(meta,
+      json.replace("\"icelite/2\"", "\"icelite/1\"").getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](IceLite.load(dir))
+    assert(e.getMessage.contains("icelite/1"), e.getMessage)
+  }
+
   test("concurrent committers: conditional-create CAS — every epoch lands, " +
       "losers rebase, versions stay sequential") {
     val dir = tmpDir("icerace")

@@ -245,11 +245,12 @@ class MaintenanceSpec extends SparkTestBase {
     Replay.full(spark, ledger, bTable, nBuckets = 4)
     val work = tmpDir("rdb-swork")
     try {
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       Pipeline.runToCompletion(spark, Pipeline.Config(
         ledgerDir = ledger, tableDir = s"$work/pages",
         checkpointDir = s"$work/cp", lineageDir = s"$work/_lineage",
-        metricsDir = s"$work/_metrics", nBuckets = 4, useRocksDB = true,
-        maxFilesPerTrigger = 4))
+        metricsDir = s"$work/_metrics", nBuckets = 4, maxFilesPerTrigger = 4))
       assert(Equivalence.diff(IceLite.read(spark, bTable),
         IceLite.read(spark, s"$work/pages")).isEmpty)
     } finally {

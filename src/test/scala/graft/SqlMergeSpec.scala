@@ -242,6 +242,27 @@ class SqlMergeSpec extends SparkTestBase {
     assert(IceLite.read(spark, dir).count() == 0)
   }
 
+  test("UPDATE pinned by a null-safe key equality never opens another " +
+      "bucket (destroyed buckets prove the scan pruning)") {
+    val urls = (0 until 24).map(i => s"w$i")
+    val (t, dir) = mkTable(8, urls.map(u => (u, 1L, "x", false)))
+    val wb = Salt.bucketOfValue("w3", 8)
+    val before = IceLite.load(dir)
+    val others = before.files.filter(_.bucket != wb)
+    assert(others.nonEmpty, "fixture must span several buckets")
+    // an unpruned probe or rewrite would now fail at scan time
+    others.foreach(f => java.nio.file.Files.delete(java.nio.file.Paths.get(f.path)))
+    spark.sql(s"UPDATE $t SET tag = 'hit' WHERE url <=> 'w3'")
+    val after = IceLite.load(dir)
+    assert(after.operation == "sqlupdate")
+    assert(after.files.filter(_.bucket != wb) == others, "only w3's bucket rewritten")
+    val inBucket = IceLite.readInternal(spark, dir, buckets = Some(Set(wb)))
+      .filter(!col("_deleted")).select("url", "tag").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(inBucket("w3") == "hit")
+    assert((inBucket - "w3").values.forall(_ == "x"))
+  }
+
   test("SQL DML on an EVOLVED table: renamed + added columns, " +
       "mixed-schema files reconcile through the rewrite") {
     val (_, dir) = mkTable(2, Seq(("a", 1L, "x", false), ("b", 2L, "x", false)))
