@@ -20,7 +20,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Spark's analyzer fully resolves all three over a v1 relation (only the
   * planner rejects them), so ONE post-hoc resolution rule rewrites the
   * resolved plans into eager commands — see `operators/SqlMerge.scala`.
-  * (No custom planner strategies: the engine's CDC merge remains
+  * Its optimizer rule, `icelite.IceLiteScanSubstitution`, is where icelite
+  * reads get pushdown and bucket pruning; a session without these
+  * extensions reads through the v1 relation's unpruned, guarded fallback
+  * scan. (No custom planner strategies: the engine's CDC merge remains
   * Catalyst-planned dataflow — SURVEY.md §4.3.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -36,9 +39,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectResolutionRule(_ => new graft.operators.SqlMergeEvolutionRule)
     ext.injectPostHocResolutionRule(_ => new graft.operators.SqlDmlRule)
     // batch SELECTs over format("icelite") / catalog tables: swap the
-    // DSv1 relation for the engine's parquet read plan inline, keeping
-    // whole-stage codegen + vectorized readers end-to-end (the v1
-    // RDD[Row] seam stays only as the guarded fallback)
+    // DSv1 relation for the engine's pruned parquet read plan inline,
+    // keeping whole-stage codegen + vectorized readers end-to-end (the v1
+    // RDD[Row] seam stays only as the unpruned, guarded fallback)
     ext.injectOptimizerRule(s => new graft.icelite.IceLiteScanSubstitution(s))
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graftbridge.PlanBridge
 
 import scala.collection.mutable
@@ -10,7 +11,9 @@ import scala.collection.mutable
   * and [[Verify]]. For each `SparkEntry.queries` key (default: all,
   * sorted) it prints `explain("formatted")`, then `reps` timed runs
   * through the noop sink, each followed by its Spark jobs and stages
-  * (wall time, tasks, stage name, engine call site). The last line is
+  * (wall time, tasks, stage name, engine call site: the stage's own first
+  * `graft.` frame, else its SQL execution's — broadcast and AQE stages
+  * carry none of their own). The last line is
   * one JSON object `{key: min seconds over reps}` — the least-disturbed
   * run on a noisy host.
   *
@@ -38,9 +41,22 @@ object Profile {
     spark.sparkContext.setLogLevel("WARN")
     val starts = mutable.Map[Int, Long]()
     val lines = mutable.ArrayBuffer[String]()
+    val execDetails = mutable.Map[Long, String]()
+    val stageExec = mutable.Map[Int, Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          lines.synchronized { execDetails(s.executionId) = s.details }
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        lines.synchronized { starts(e.jobId) = e.time }
+        lines.synchronized {
+          starts(e.jobId) = e.time
+          Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(_.toLongOption)
+            .foreach(x => e.stageIds.foreach(stageExec(_) = x))
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         lines.synchronized {
           starts.remove(e.jobId).foreach { t0 =>
@@ -52,9 +68,13 @@ object Profile {
           val si = e.stageInfo
           val dur = (for (a <- si.submissionTime; b <- si.completionTime)
             yield (b - a) / 1e3).getOrElse(-1.0)
-          val site = si.details.linesIterator.map(_.trim)
-            .find(l => l.startsWith("graft.") && !l.startsWith("graft.Profile"))
-            .getOrElse("")
+          // engine frames first (the stage's, then its execution's); the
+          // noop write of a key's final frame has only Profile's own
+          val frames = (Option(si.details) ++
+              stageExec.get(si.stageId).flatMap(execDetails.get))
+            .flatMap(_.linesIterator.map(_.trim).filter(_.startsWith("graft.")))
+          val site = frames.find(!_.startsWith("graft.Profile"))
+            .orElse(frames.headOption).getOrElse("")
           lines += f"    stage ${si.stageId}%3d $dur%7.3f s tasks=${si.numTasks}%3d  ${si.name} | $site"
         }
     })

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -168,9 +167,4 @@ object BpeCountExpression {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(BpeCountExpression(ColumnBridge.expr(c)))
   }
-
-  /** Register for SQL: `SELECT token_count_bpe(text) FROM …`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_count_bpe", exprs => BpeCountExpression(exprs.head), "scala_udf")
 }

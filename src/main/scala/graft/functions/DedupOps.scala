@@ -66,12 +66,6 @@ object DedupOps {
   /** Distinct whitespace-token set. */
   def tokenSet(text: Column): Column = array_distinct(split(text, " "))
 
-  /** Character n-gram (shingle) set of a string. */
-  def shingles(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => text.substr(i, lit(n))))
-
   /** Distinct TOKEN n-grams: contiguous `n`-token windows of the
     * whitespace tokenization, re-joined by a single space. A document
     * shorter than `n` tokens contributes its full token sequence as one
@@ -183,18 +177,6 @@ object DedupOps {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** MinHash signature (k hash functions) over the token set, as a
-    * k-element array. Hash family: `hashFn` applied to the index-salted
-    * token — xxhash64 by default (codegen'd, no UDF), [[portableHash]]
-    * for the oracle-checkable variant. Signature equality probability
-    * ≈ Jaccard.
-    */
-  def minhashSignature(toksCol: Column, k: Int,
-      hashFn: Column => Column = c => xxhash64(c)): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(toksCol,
-        t => hashFn(concat(i.cast("string"), lit(":"), t)))))
-
   /** LSH candidate pairs: signatures banded into `bands` groups of
     * `rowsPerBand`; a pair is a candidate iff some band matches exactly.
     * The self-join runs on (band index, band hash) — bucket-local — and the
@@ -205,8 +187,8 @@ object DedupOps {
       hashFn: Column => Column = c => xxhash64(c),
       maxBroadcastVocab: Long = 500000L): DataFrame = {
     val k = bands * rowsPerBand
-    // Signature via explode + k codegen'd min-aggregations instead of the
-    // [[minhashSignature]] nested-transform fold: array higher-order
+    // Signature via explode + k codegen'd min-aggregations instead of a
+    // nested-transform fold over the token set: array higher-order
     // functions are INTERPRETED per element, so the k·|toks| hash
     // evaluations paid ~10x expression-walk overhead per hash (the
     // dominant cost of both minhash keys). Exploding the token set and

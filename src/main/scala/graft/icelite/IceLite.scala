@@ -499,16 +499,46 @@ object IceLite {
     parts.reduce(_ unionByName _)
   }
 
-  /** Public read: current live rows (tombstones filtered, internals dropped). */
+  /** Public read: the live rows (tombstones filtered) of `version`
+    * (default: current), pruned to `buckets`, internal columns dropped —
+    * or, with `position`, the stored CDC position `_offset`/`_partition`
+    * kept (the SQL DML rewrite carries it through).
+    */
   def read(spark: SparkSession, dir: String, version: Option[Int] = None,
-      catalog: Catalog = FileCatalog): DataFrame = {
-    val df = readInternal(spark, dir, version, catalog = catalog)
-    df.filter(!col("_deleted")).drop(internalFields.map(_.name): _*)
-  }
+      buckets: Option[Set[Int]] = None, position: Boolean = false,
+      catalog: Catalog = FileCatalog): DataFrame =
+    readInternal(spark, dir, version, buckets, catalog)
+      .filter(!col("_deleted"))
+      .drop((if (position) Seq("_deleted") else internalFields.map(_.name)): _*)
 
-  /** Append-only commit of a DataFrame (sidecar lineage/metrics tables,
-    * `INSERT INTO` / `save` through the data source): writes one staged
-    * file set, commits under `epochKey`.
+  /** An epoch key `<prefix>.<uuid slice>` for producers without a
+    * monotone-commit contract (unkeyed save/INSERT, SQL DML, automatic
+    * compaction): the suffix holds a '-', so it is never numeric and never
+    * folds into the prefix's high-water mark, where two unrelated commits
+    * could mask each other.
+    */
+  def uniqueEpoch(prefix: String): String =
+    s"$prefix.${java.util.UUID.randomUUID().toString.substring(0, 13)}"
+
+  /** Append-only commit of a DataFrame (sidecar lineage/metrics/DLQ
+    * tables, `INSERT INTO`, `save`, the streaming sink): see [[write]].
+    */
+  def append(spark: SparkSession, dir: String, epochKey: String,
+      df: DataFrame, catalog: Catalog = FileCatalog): Unit =
+    write(dir, epochKey, df, replaceAll = false, catalog)
+
+  /** Replace the ENTIRE table content with `df` as one epoch-keyed commit
+    * (`save(Overwrite)`, SQL `INSERT OVERWRITE`): every bucket is
+    * replaced, existing tombstones go with the rest of the prior content.
+    */
+  def overwrite(spark: SparkSession, dir: String, epochKey: String,
+      df: DataFrame, catalog: Catalog = FileCatalog): Unit =
+    write(dir, epochKey, df, replaceAll = true, catalog)
+
+  /** The one user-frame writer: creates a single-bucket table when none
+    * exists, stages `df` with null CDC position and no tombstones, and
+    * commits it under `epochKey` (a replay of a committed key is a
+    * no-op).
     *
     * LAYOUT INVARIANT: every writer buckets rows by
     * `Salt.bucket(key, numBuckets)` (key = first schema field), so a
@@ -516,8 +546,8 @@ object IceLite {
     * (merge, SQL MERGE, compaction) and bucket-pruned scans depend on it.
     * Single-bucket tables degenerate to bucket 0 unchanged.
     */
-  def append(spark: SparkSession, dir: String, epochKey: String,
-      df: DataFrame, catalog: Catalog = FileCatalog): Unit = {
+  private def write(dir: String, epochKey: String, df: DataFrame,
+      replaceAll: Boolean, catalog: Catalog): Unit = {
     if (!exists(dir, catalog)) create(dir, df.schema, numBuckets = 1, catalog)
     if (hasEpoch(dir, epochKey, catalog)) return
     val m = load(dir, catalog)
@@ -529,7 +559,10 @@ object IceLite {
         .withColumn("_bucket",
           graft.functions.Salt.bucket(col(keyName), m.numBuckets)),
       m.currentSchemaId)
-    commit(dir, epochKey, "append", newFiles = staged, catalog = catalog)
+    if (replaceAll)
+      commit(dir, epochKey, "overwrite", newFiles = staged,
+        replacedBuckets = (0 until m.numBuckets).toSet, catalog = catalog)
+    else commit(dir, epochKey, "append", newFiles = staged, catalog = catalog)
   }
 
   /** The one read-then-replace commit: stage `df` (internal columns plus

@@ -2,6 +2,7 @@ package graft.icelite
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
@@ -19,18 +20,21 @@ import org.apache.spark.sql.types.StructType
   * INSERT INTO pages SELECT ...;          -- epoch-keyed append commit
   * }}}
   *
-  * DSv1 (`RelationProvider`) by design: the relation delegates to
-  * [[IceLite.read]], so schema-evolution reconciliation, bucket layout and
-  * tombstone filtering stay in ONE implementation, and Catalyst still sees
-  * the underlying parquet scans (column pruning pushes through the inner
-  * plan to the parquet readers). Note Spark caches v1 catalog relations at
-  * first resolution: after an engine-side ALTER, `REFRESH TABLE t` picks
-  * up the evolved schema (a stale entry fails the DML schema guard with a
-  * clear message rather than corrupting anything). Writes are ordinary epoch-keyed commits —
+  * DSv1 (`RelationProvider`) by design: every read goes through
+  * [[IceLiteScan]] over [[IceLite.read]], so schema-evolution
+  * reconciliation, bucket layout, tombstone filtering and the schema-drift
+  * guard stay in ONE implementation. Pushdown and bucket pruning are the
+  * job of the `GraftExtensions` optimizer rule ([[IceLiteScanSubstitution]]),
+  * which swaps the relation for the engine's parquet read plan; the
+  * relation's own `buildScan` is the unpruned, guarded fallback of a
+  * session without the extensions. Note Spark caches v1 catalog relations
+  * at first resolution: after an engine-side ALTER, `REFRESH TABLE t` picks
+  * up the evolved schema (a stale entry fails the schema-drift guard with a
+  * clear message rather than corrupting anything). Writes are ordinary
+  * epoch-keyed commits through [[IceLite.append]] / [[IceLite.overwrite]] —
   * idempotent and atomic like every other side effect in the engine. A
-  * DSv2 `SupportsRowLevelOperations` (SQL `MERGE INTO`) surface remains
-  * out of scope (SURVEY §4.3); conditional upserts go through
-  * `operators.Merge`.
+  * DSv2 `SupportsRowLevelOperations` surface remains out of scope (SURVEY
+  * §4.3); SQL `MERGE INTO` goes through `operators.SqlMerge`.
   */
 class IceLiteSource extends RelationProvider with SchemaRelationProvider
     with CreatableRelationProvider with StreamSinkProvider
@@ -60,11 +64,10 @@ class IceLiteSource extends RelationProvider with SchemaRelationProvider
     * binlog: downstream pipelines (second-hop transforms, indexers)
     * subscribe to the table instead of re-scanning it.
     * `option("maxVersionsPerBatch", k)` bounds each micro-batch to k
-    * table versions — a deep catch-up (startingVersion far behind head)
-    * streams as bounded batches instead of one giant delta. After a
-    * restart the first offer is uncapped (the engine's committed offset
-    * is not visible to the source; capping below it would regress the
-    * checkpoint), then the cap re-engages.
+    * table versions past the offset the engine hands back, so a deep
+    * catch-up (startingVersion far behind head) streams as bounded
+    * batches instead of one giant delta — under `Trigger.AvailableNow`
+    * too, which drains up to the version current at query start.
     *
     * The stream schema is frozen at query start (key, change_type, then
     * the remaining columns of that version's schema) — restart the query
@@ -84,36 +87,27 @@ class IceLiteSource extends RelationProvider with SchemaRelationProvider
     // metadataPath (the FileStreamSource pattern). Without this, a
     // restart recomputes "default = CURRENT version": commits that landed
     // while the query was down would satisfy `v <= startingVersion`, so
-    // getOffset would return None and those pending versions were never
-    // offered — AvailableNow terminated without draining them, and a
-    // continuous query stalled until a future commit bumped current.
-    val (startingVersion, fresh) = resolveStartingVersion(metadataPath,
+    // they were never offered — AvailableNow terminated without draining
+    // them, and a continuous query stalled until a future commit bumped
+    // current.
+    val startingVersion = resolveStartingVersion(metadataPath,
       parameters.get("startingVersion").map(_.trim.toInt)
         .getOrElse(IceLite.currentVersion(dir)))
-    // admission control: cap each micro-batch at k table versions, so a
-    // long catch-up (startingVersion far behind head) streams as bounded
-    // batches instead of one giant delta
     val maxVersions = parameters.get("maxVersionsPerBatch").map(_.trim.toInt)
     maxVersions.foreach(k => require(k >= 1,
       s"icelite: maxVersionsPerBatch must be >= 1 (got $k)"))
     new IceLiteStreamSource(sqlContext.sparkSession, dir, startingVersion,
-      maxVersions, seedFloor = fresh)
+      maxVersions)
   }
 
   /** First start: persist `fresh` under the checkpoint's metadataPath and
-    * return `(fresh, true)`. Restart: return the persisted value and
-    * `false`. Only this query's driver touches its own checkpoint dir, so
-    * a plain temp-file + ATOMIC_MOVE publish is race-free; an unreadable
-    * file (crash mid-first-start) is treated as absent and rewritten.
-    * The freshness flag seeds the rate-limit floor: on a fresh start the
-    * engine provably has no progress beyond `fresh`, so capping can start
-    * from batch one; on restart the real progress lives in the engine's
-    * offset WAL (not visible to the source), so the first offer is
-    * uncapped rather than risk offering an offset BEHIND the committed
-    * one (which would regress the checkpoint).
+    * return it. Restart: return the persisted value. Only this query's
+    * driver touches its own checkpoint dir, so a plain temp-file +
+    * ATOMIC_MOVE publish is race-free; an unreadable file (crash
+    * mid-first-start) is treated as absent and rewritten.
     */
   private def resolveStartingVersion(metadataPath: String,
-      fresh: Int): (Int, Boolean) = {
+      fresh: Int): Int = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val mp = if (metadataPath.startsWith("file:"))
       new java.net.URI(metadataPath).getPath else metadataPath
@@ -125,14 +119,14 @@ class IceLiteSource extends RelationProvider with SchemaRelationProvider
             java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
         else None
       } catch { case _: Throwable => None }
-    persisted.map((_, false)).getOrElse {
+    persisted.getOrElse {
       Files.createDirectories(f.getParent)
       val tmp = Files.createTempFile(f.getParent, ".graft-sv", ".tmp")
       Files.write(tmp, fresh.toString.getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
       Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-      (fresh, true)
+      fresh
     }
   }
 
@@ -183,66 +177,28 @@ class IceLiteSource extends RelationProvider with SchemaRelationProvider
   }
 
   /** `df.write.format("icelite")`: Append = epoch-keyed append commit;
-    * Overwrite = replace every bucket holding rows (plus, for a fresh
-    * table, creation). The epoch key comes from `.option("epoch", ...)` —
-    * REQUIRED for exactly-once retries; an unkeyed save gets a
-    * wall-clock-unique key (safe, but a retried job appends twice).
+    * Overwrite = replace every bucket (plus, for a fresh table,
+    * creation). The epoch key comes from `.option("epoch", ...)` —
+    * REQUIRED for exactly-once retries; an unkeyed save gets a unique key
+    * (safe, but a retried job appends twice).
     */
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
       parameters: Map[String, String], data: DataFrame): BaseRelation = {
     val dir = path(parameters)
     val spark = sqlContext.sparkSession
-    // unkeyed saves get a wall-clock-unique key with a NON-numeric suffix:
-    // numeric suffixes fold into the per-prefix epoch high-water mark,
-    // where two unrelated concurrent saves could mask each other
-    val epoch = parameters.getOrElse("epoch",
-      s"save.${System.currentTimeMillis()}-${Integer.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextInt())}")
+    val epoch = parameters.getOrElse("epoch", IceLite.uniqueEpoch("save"))
     val tableExists = IceLite.exists(dir)
     mode match {
       case SaveMode.ErrorIfExists if tableExists =>
         throw new IllegalStateException(s"icelite table exists: $dir")
       case SaveMode.Ignore if tableExists => ()
-      case SaveMode.Overwrite =>
-        IceLiteSource.overwriteCommit(spark, dir, epoch, data)
+      case SaveMode.Overwrite => IceLite.overwrite(spark, dir, epoch, data)
       case _ => // Append / ErrorIfExists / Ignore on a fresh table
         IceLite.append(spark, dir, epoch, data)
     }
     createRelation(sqlContext, parameters)
   }
 
-}
-
-object IceLiteSource {
-  /** Replace the ENTIRE table content with `data` as one epoch-keyed
-    * commit (creating a fresh single-bucket table when none exists) —
-    * the shared implementation behind `save(Overwrite)` and SQL
-    * `INSERT OVERWRITE`. Every bucket is replaced; existing tombstones
-    * are dropped with the rest of the prior content (full replace
-    * semantics, not a merge).
-    */
-  private[icelite] def overwriteCommit(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: String, data: DataFrame): Unit = {
-    if (!IceLite.exists(dir)) IceLite.create(dir, data.schema, numBuckets = 1)
-    if (!IceLite.hasEpoch(dir, epoch)) {
-      val m = IceLite.load(dir)
-      // bucket by key: see the layout invariant on IceLite.append
-      val keyName = m.currentSchema.fields.head.name
-      val bucketed = withInternals(data).withColumn("_bucket",
-        graft.functions.Salt.bucket(
-          org.apache.spark.sql.functions.col(keyName), m.numBuckets))
-      val staged = IceLite.stageFiles(dir, epoch, bucketed, m.currentSchemaId)
-      IceLite.commit(dir, epoch, "overwrite", newFiles = staged,
-        replacedBuckets = (0 until m.numBuckets).toSet)
-    }
-  }
-
-  private def withInternals(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    df.withColumn("_offset", lit(null).cast("long"))
-      .withColumn("_partition", lit(null).cast("int"))
-      .withColumn("_deleted", lit(false))
-  }
 }
 
 object IceLiteStreamSource {
@@ -263,51 +219,47 @@ object IceLiteStreamSource {
 
 /** Change-stream source over an IceLite table (see
   * [[IceLiteSource.createSource]]): offset = snapshot version, batch =
-  * net row delta between two versions.
+  * net row delta between two versions. Admission control follows Spark's
+  * contract: the engine hands `latestOffset` the offset it last planned
+  * (null before the first batch), and each batch ends at most
+  * `maxVersionsPerBatch` versions past it.
   */
 class IceLiteStreamSource(spark: org.apache.spark.sql.SparkSession,
-    dir: String, startingVersion: Int,
-    maxVersionsPerBatch: Option[Int] = None, seedFloor: Boolean = true)
-    extends org.apache.spark.sql.execution.streaming.Source {
+    dir: String, startingVersion: Int, maxVersionsPerBatch: Option[Int] = None)
+    extends org.apache.spark.sql.execution.streaming.Source
+    with SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
   import org.apache.spark.sql.execution.streaming.{Offset => V1Offset}
   import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
   override val schema: StructType = IceLiteStreamSource.changeSchema(dir)
 
-  /** Rate-limit floor: the highest version this source KNOWS the engine
-    * has been given (last offer or last served batch end). `None` until
-    * known — a restarted query's real progress lives in the engine's WAL,
-    * so the first post-restart offer goes uncapped (see
-    * `resolveStartingVersion`); every later one caps at floor + k.
-    */
-  private var floor: Option[Int] =
-    if (seedFloor) Some(startingVersion) else None
+  /** `Trigger.AvailableNow`'s end: the version current at query start. */
+  private var availableNowEnd: Option[Int] = None
 
-  private def ver(o: V1Offset): Int = o match {
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(IceLite.currentVersion(dir))
+
+  private def ver(o: Offset): Int = o match {
     case LongOffset(v) => v.toInt
     case other => other.json.trim.toInt // WAL-restored SerializedOffset
   }
 
-  override def getOffset: Option[V1Offset] = {
-    val cur = IceLite.currentVersion(dir)
-    val target = (maxVersionsPerBatch, floor) match {
-      case (Some(k), Some(f)) => math.min(cur, f + k)
-      case _ => cur
-    }
-    if (target <= startingVersion) None
-    else {
-      floor = Some(math.max(floor.getOrElse(target), target))
-      Some(LongOffset(target.toLong))
-    }
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    val from = Option(start).map(ver).getOrElse(startingVersion)
+    val end = availableNowEnd.getOrElse(IceLite.currentVersion(dir))
+    val target = maxVersionsPerBatch.fold(end)(k => math.min(end, from + k))
+    if (target <= from) start else LongOffset(target.toLong)
   }
+
+  override def getOffset: Option[V1Offset] =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def getBatch(start: Option[V1Offset], end: V1Offset)
       : org.apache.spark.sql.DataFrame = {
     val from = start.map(ver).getOrElse(startingVersion)
-    val to = ver(end)
-    floor = Some(math.max(floor.getOrElse(to), to))
-    val delta = graft.operators.Changes
-      .between(spark, dir, from, Some(to))
+    val delta = graft.operators.Changes.between(spark, dir, from, Some(ver(end)))
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col)
         .toIndexedSeq: _*)
     org.apache.spark.sql.graftbridge.PlanBridge
@@ -332,29 +284,24 @@ class IceLiteStreamSink(spark: org.apache.spark.sql.SparkSession,
   override def toString: String = s"IceLiteSink[$dir]"
 }
 
-/** Read relation: current (or time-travel) live rows, reconciled to that
-  * version's schema. `PrunedFilteredScan`: SELECTed columns prune through
-  * the inner plan down to the parquet `ReadSchema`, and pushed filters are
-  * applied INSIDE the inner plan so Catalyst forwards them to the parquet
-  * readers (`PushedFilters` on the physical scan — row groups skip via
-  * parquet statistics). Equality/IN filters on the table's key column
-  * additionally prune the METADATA file list to the keys' storage buckets
-  * (`pmod(xxhash64(key), nBuckets)` evaluated driver-side with the same
-  * Catalyst expression the writer used): a point lookup on a 10^5-bucket
-  * table opens a handful of files, not the table. `InsertableRelation` so
-  * SQL `INSERT INTO` lands as an epoch-keyed append commit.
+/** Read relation: the live rows of the current (or time-travel) version,
+  * reconciled to that version's schema. With `GraftExtensions` installed
+  * the optimizer replaces this relation by the pruned, pushed-down parquet
+  * plan before it is ever scanned ([[IceLiteScanSubstitution]]); without
+  * them, `buildScan` is the unpruned fallback, guarded by the same
+  * [[IceLiteScan]] check. `InsertableRelation` so SQL `INSERT [OVERWRITE]`
+  * lands as one epoch-keyed commit.
   */
 case class IceLiteRelation(sqlContext: SQLContext, dir: String,
     version: Option[Int]) extends BaseRelation
-    with PrunedFilteredScan with InsertableRelation {
+    with TableScan with InsertableRelation {
 
   /** Frozen at first access (= analysis of the first query using this
     * relation instance): Spark fixes the LogicalRelation's output
     * attributes from this schema anyway, so re-loading per call could
-    * only DISAGREE with the analyzed plan, never update it. buildScan
-    * re-checks the table against this frozen schema and fails with a
-    * clear message if an evolution landed in between (see the guard
-    * there) — `REFRESH TABLE` mints a fresh relation with the new schema.
+    * only DISAGREE with the analyzed plan, never update it. Every scan
+    * re-checks the table against it ([[IceLiteScan]]) — `REFRESH TABLE`
+    * mints a fresh relation with the new schema.
     */
   override lazy val schema: StructType = {
     val m = version.map(IceLite.loadVersion(dir, _))
@@ -362,86 +309,17 @@ case class IceLiteRelation(sqlContext: SQLContext, dir: String,
     m.currentSchema.struct
   }
 
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{col, lit}
-
-  /** Exact Column translation of a pushed source filter, when possible.
-    * A translated filter is applied verbatim inside the inner plan, so it
-    * is fully handled; untranslated ones are re-applied by Spark above.
-    */
-  private def toCol(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case StringContains(a, v) => Some(col(a).contains(v))
-    case Not(sub) => toCol(sub).map(!_)
-    case Or(l, r) => for { lc <- toCol(l); rc <- toCol(r) } yield lc || rc
-    case And(l, r) => for { lc <- toCol(l); rc <- toCol(r) } yield lc && rc
-    case _ => None
-  }
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filter(toCol(_).isEmpty)
-
-  private def bucketOf(v: Any, nBuckets: Int): Int =
-    graft.functions.Salt.bucketOfValue(v, nBuckets)
-
-  /** Buckets implied by key filters (the filter array is an implicit AND,
-    * so any single key-pinning conjunct bounds the scan). */
-  private def keyBuckets(filters: Array[Filter], keyName: String,
-      nBuckets: Int): Option[Set[Int]] =
-    filters.collectFirst {
-      case EqualTo(a, v) if a == keyName && v != null =>
-        Set(bucketOf(v, nBuckets))
-      case EqualNullSafe(a, v) if a == keyName && v != null =>
-        Set(bucketOf(v, nBuckets))
-      case In(a, vs) if a == keyName =>
-        vs.filter(_ != null).map(bucketOf(_, nBuckets)).toSet
-    }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
+  override def buildScan(): RDD[Row] = {
     val spark = sqlContext.sparkSession
-    val m = version.map(IceLite.loadVersion(dir, _)).getOrElse(IceLite.load(dir))
-    // schema-drift guard: the query was ANALYZED against the frozen
-    // `schema` above; if an ALTER landed since, emitting rows reconciled
-    // to the NEW schema would silently produce the wrong column set/order
-    // — fail clearly instead (data-only commits don't change the schema,
-    // so ordinary reads stay fresh)
-    if (m.currentSchema.struct.fields.map(f => (f.name, f.dataType)).toSeq
-        != schema.fields.map(f => (f.name, f.dataType)).toSeq) {
-      throw new IllegalStateException(
-        s"icelite: $dir schema evolved since this query was analyzed — " +
-          "run REFRESH TABLE (or re-create the DataFrame) and re-run")
-    }
-    val buckets = keyBuckets(filters, m.currentSchema.fields.head.name,
-      m.numBuckets)
-    val base = IceLite.readInternal(spark, dir, version, buckets)
-      .filter(!col("_deleted"))
-      .drop(IceLite.internalFields.map(_.name): _*)
-    val filtered = filters.flatMap(toCol).foldLeft(base)(_ filter _)
-    // DSv1 contract: empty projection still needs correctly-counted rows
-    if (requiredColumns.isEmpty) filtered.rdd
-    else filtered.select(requiredColumns.head, requiredColumns.tail: _*).rdd
+    val scan = IceLiteScan(dir, version,
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema))
+    org.apache.spark.sql.graftbridge.PlanBridge
+      .ofRows(spark, scan.plan(spark, None)).rdd
   }
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    // non-numeric suffix: see the save() epoch note
-    val epoch = s"insert.${System.currentTimeMillis()}-${Integer.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextInt())}"
-    if (overwrite) {
-      // SQL INSERT OVERWRITE: full replace as one epoch-keyed commit
-      IceLiteSource.overwriteCommit(sqlContext.sparkSession, dir, epoch, data)
-    } else {
-      IceLite.append(sqlContext.sparkSession, dir, epoch, data)
-    }
+    val epoch = IceLite.uniqueEpoch("insert")
+    if (overwrite) IceLite.overwrite(sqlContext.sparkSession, dir, epoch, data)
+    else IceLite.append(sqlContext.sparkSession, dir, epoch, data)
   }
 }

@@ -78,9 +78,7 @@ object Changes {
     // attach the newer snapshot's full row for inserts/updates — pruned to
     // the same changed buckets (every changed key lives in one of them, by
     // the layout invariant above)
-    val current = IceLite.readInternal(spark, dir, Some(to), Some(buckets))
-      .filter(!col("_deleted"))
-      .drop(IceLite.internalFields.map(_.name): _*)
+    val current = IceLite.read(spark, dir, Some(to), Some(buckets))
     changed.join(current, Seq(key), "left")
   }
 }

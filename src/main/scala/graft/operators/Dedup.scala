@@ -36,22 +36,6 @@ object Dedup {
       .select(col("_w.*"))
   }
 
-  /** [[latestPerKeyAdaptive]] that also reports the winner count when the
-    * broadcast path ran (None on the large-key fallback). The count is
-    * free — the adaptive size check already computes it — and callers
-    * (Merge) use it to size the salted write: lane count should track
-    * per-bucket volume and reducer parallelism, not a constant (a
-    * constant 4 salts made a 20k-event CTAS open 256 parquet writers —
-    * 1.6 s of pure fixed cost, the dominant Amdahl term in the replay).
-    */
-  def latestPerKeyWithCount(events: DataFrame,
-      maxBroadcastKeys: Long = 4000000L): (DataFrame, Option[Long]) = {
-    var n: Option[Long] = None
-    val df = latestPerKeyAdaptive(events, maxBroadcastKeys,
-      onWinnerCount = c => n = Some(c))
-    (df, n)
-  }
-
   /** Winning event per url, payload-light variant for HIGH-DUPLICATION
     * replays (a full binlog replay sees every historical version of every
     * url — 10–100+ events per key), where [[latestPerKey]] would funnel
@@ -69,6 +53,14 @@ object Dedup {
     * single-pass [[latestPerKey]] partial aggregation (whose shuffle is
     * already bounded by distinct keys per map task).
     *
+    * Returns the winners and, when the broadcast path ran, their count
+    * (None on the large-key fallback). The count is free — the size check
+    * already computes it — and Merge uses it to size the salted write:
+    * lane count should track per-bucket volume and reducer parallelism,
+    * not a constant (a constant 4 salts made a 20k-event CTAS open 256
+    * parquet writers — 1.6 s of pure fixed cost, the dominant Amdahl term
+    * in the replay).
+    *
     * Why explicit: the winner keys are FLATTENED to scalar columns (a
     * struct-typed join key is not hash-join-able — Catalyst would force a
     * SortMergeJoin and shuffle every payload; measured 30% throughput
@@ -77,8 +69,7 @@ object Dedup {
     * switch strategy — the payload shuffle cost would already be paid.
     */
   def latestPerKeyAdaptive(events: DataFrame,
-      maxBroadcastKeys: Long = 4000000L,
-      onWinnerCount: Long => Unit = _ => ()): DataFrame = {
+      maxBroadcastKeys: Long = 4000000L): (DataFrame, Option[Long]) = {
     val ver = struct(col("warc_ts"), col("offset"), col("partition"))
     // localCheckpoint, NOT cache(): cache() registers the frame in the
     // session-wide CacheManager, which holds it strongly — a per-batch
@@ -93,18 +84,17 @@ object Dedup {
       .localCheckpoint()
     val nWinners = winners.count()
     if (nWinners <= maxBroadcastKeys) {
-      onWinnerCount(nWinners)
       // null-safe equality (<=>): a winning event with a NULL version
       // component must still match itself, exactly as latestPerKey keeps
       // it (EqualNullSafe remains a hash-join-able equi key)
-      events.join(broadcast(winners),
+      (events.join(broadcast(winners),
           col("url") <=> col("_wurl") && col("warc_ts") <=> col("_wts") &&
             col("offset") <=> col("_woff") &&
             col("partition") <=> col("_wpart"),
           "left_semi")
-        .dropDuplicates("url")
+        .dropDuplicates("url"), Some(nWinners))
     } else {
-      latestPerKey(events)
+      (latestPerKey(events), None)
     }
   }
 }

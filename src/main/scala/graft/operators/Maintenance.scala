@@ -67,9 +67,7 @@ object Maintenance {
     // compact() itself is the probe: it loads metadata once and returns 0
     // before any Spark job or commit when nothing is crowded, so the
     // freshly-minted epoch key is only ever consumed by real work
-    compact(spark, dir,
-      s"autocompact.${java.util.UUID.randomUUID().toString.substring(0, 13)}",
-      maxFilesPerBucket)
+    compact(spark, dir, IceLite.uniqueEpoch("autocompact"), maxFilesPerBucket)
 
   /** Drop tombstones whose event time is older than `olderThan`.
     * CONTRACT: only safe when `olderThan` is at least the source's maximum

@@ -99,7 +99,7 @@ object Merge {
     // Pipeline)
     val (winners, winnerCount) =
       if (deduped.isDefined) (changes, None)
-      else Dedup.latestPerKeyWithCount(changes)
+      else Dedup.latestPerKeyAdaptive(changes)
     // Winner rows in physical-table shape, resolved by field id so the merge
     // survives renames; extension fields (id > 5) are promoted out of the
     // `extra` map; `text` is computed by the frozen extractor.

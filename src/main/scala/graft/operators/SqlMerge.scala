@@ -3,9 +3,9 @@ package graft.operators
 import scala.annotation.tailrec
 
 import graft.functions.Salt
-import graft.icelite.{IceLite, IceLiteRelation}
+import graft.icelite.{IceLite, IceLiteRelation, IceLiteScan}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, EqualTo, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, Project, SubqueryAlias, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -136,7 +136,7 @@ object SqlMerge {
     */
   def execute(spark: SparkSession, merge: MergeIntoTable): Unit = {
     val t = target(merge.targetTable, evolving = merge.withSchemaEvolution)
-    val (pre, tgtAttrs, keyAttr, nB) = (t.pre, t.attrs, t.keyAttr, t.nB)
+    val (pre, tgtAttrs, keyAttr, nB) = (t.meta, t.attrs, t.key, t.numBuckets)
     // WITH SCHEMA EVOLUTION: the resolution rule widened the analyzed
     // target with the source's new columns. The TABLE is NOT altered up
     // front — the new columns ride the merge's OWN commit
@@ -321,66 +321,23 @@ object SqlMerge {
   // ------------------------------------------------------------ shared
   // machinery for the three DML surfaces (MERGE / UPDATE / DELETE)
 
-  private val oOff = "__graft_t_offset"
-  private val oPart = "__graft_t_partition"
-
-  /** A DML statement's target: the icelite table's directory, its
-    * metadata as read (every scan pins `pre.version`, the commit validates
-    * against it) and the analyzed target columns, key first. `evolved`:
-    * the columns MERGE WITH SCHEMA EVOLUTION adds with its commit.
+  /** The icelite scan beneath an analyzed DML target, pinned to the
+    * current version (every scan reads `meta.version`, the commit
+    * validates against it) and guarded against schema drift. With
+    * `evolving`, target columns the table lacks are exempt: they evolve
+    * with the commit.
     */
-  private case class Target(dir: String, pre: IceLite.Metadata,
-      attrs: Seq[AttributeReference], evolved: Seq[AttributeReference]) {
-    def keyAttr: AttributeReference = attrs.head
-    def nB: Int = pre.numBuckets
-  }
+  private def target(plan: LogicalPlan, evolving: Boolean = false): IceLiteScan =
+    IceLiteScan(iceTarget(plan).getOrElse(
+      sys.error("icelite SQL DML on a non-icelite target")).dir,
+      None, plan.output, evolving)
 
-  /** Load the table beneath an analyzed DML target and check the schema
-    * it was analyzed against is still current. With `evolving`, target
-    * columns the table lacks are exempt: they evolve with the commit.
+  /** The target's live rows pruned to `scanBuckets`, with the analyzed
+    * attribute ids and the stored CDC position (see [[IceLiteScan.plan]]).
     */
-  private def target(plan: LogicalPlan, evolving: Boolean = false): Target = {
-    val dir = iceTarget(plan).getOrElse(
-      sys.error("icelite SQL DML on a non-icelite target")).dir
-    val pre = IceLite.load(dir)
-    val attrs = plan.output.map(_.asInstanceOf[AttributeReference])
-    val existing = pre.currentSchema.fields.map(_.name).toSet
-    val evolved = if (evolving) attrs.filterNot(a => existing(a.name)) else Nil
-    if (pre.currentSchema.struct.fields.map(f => (f.name, f.dataType)).toSeq !=
-        attrs.filterNot(evolved.contains).map(a => (a.name, a.dataType))) {
-      throw new IllegalStateException(
-        s"icelite SQL DML: $dir schema changed since the statement was " +
-          "analyzed — re-run the statement")
-    }
-    Target(dir, pre, attrs, evolved)
-  }
-
-  /** Version-pinned, optionally bucket-pruned scan of the target's LIVE
-    * rows whose user columns carry the analyzer's attribute ids
-    * (explicit-exprId aliases — so analyzer-produced conditions and
-    * assignment expressions resolve against this frame unchanged), plus
-    * the stored CDC position as [[oOff]]/[[oPart]].
-    */
-  private def pinnedTarget(spark: SparkSession, t: Target,
-      scanBuckets: Option[Set[Int]]): DataFrame = {
-    val base = IceLite.readInternal(spark, t.dir, Some(t.pre.version),
-        scanBuckets)
-      .filter(!col("_deleted"))
-    val basePlan = PlanBridge.analyzed(base)
-    val byName = basePlan.output.map(a => a.name -> a).toMap
-    val projectList: Seq[NamedExpression] =
-      t.attrs.map(a => byName.get(a.name) match {
-        case Some(b) => Alias(b, a.name)(exprId = a.exprId)
-        // WITH SCHEMA EVOLUTION: the column does not exist in the table
-        // yet (it evolves atomically with the statement's commit) — every
-        // stored row null-fills it, exactly as a post-ALTER read would
-        case None => Alias(org.apache.spark.sql.catalyst.expressions
-          .Literal(null, a.dataType), a.name)(exprId = a.exprId)
-      }) ++
-        Seq(Alias(byName("_offset"), oOff)(),
-          Alias(byName("_partition"), oPart)())
-    PlanBridge.ofRows(spark, Project(projectList, basePlan))
-  }
+  private def pinnedTarget(spark: SparkSession, t: IceLiteScan,
+      scanBuckets: Option[Set[Int]]): DataFrame =
+    PlanBridge.ofRows(spark, t.plan(spark, scanBuckets, position = true))
 
   /** A statement's marked frame, the one shape [[rewrite]] consumes: the
     * final target column values, `__keep` (the row survives), `__changed`
@@ -388,13 +345,14 @@ object SqlMerge {
     * null for inserted rows), `__newb` (its final key's bucket, null for
     * removed rows) and the stored CDC position as `_offset`/`_partition`.
     */
-  private def marked(df: DataFrame, t: Target, values: Seq[Column],
+  private def marked(df: DataFrame, t: IceLiteScan, values: Seq[Column],
       keep: Column, changed: Column, oldb: Column): DataFrame =
     df.select(values.zip(t.attrs).map { case (v, a) => v.as(a.name) } ++ Seq(
         keep.as("__keep"), changed.as("__changed"), oldb.as("__oldb"),
-        col(oOff).as("_offset"), col(oPart).as("_partition")): _*)
+        col(IceLiteScan.offsetCol).as("_offset"),
+        col(IceLiteScan.partitionCol).as("_partition")): _*)
       .withColumn("__newb",
-        when(col("__keep"), Salt.bucket(col(t.keyAttr.name), t.nB)))
+        when(col("__keep"), Salt.bucket(col(t.key.name), t.numBuckets)))
 
   /** The statement skeleton shared by MERGE, UPDATE and DELETE: find the
     * affected buckets (old and new bucket of every changed row) and
@@ -415,7 +373,7 @@ object SqlMerge {
     *    frames don't pin the CacheManager). The no-op return, a
     *    cardinality violation and a commit conflict all release it.
     */
-  private def rewrite(spark: SparkSession, t: Target, opName: String,
+  private def rewrite(spark: SparkSession, t: IceLiteScan, opName: String,
       stmt: Option[Set[Int]] => DataFrame, scanBuckets: Option[Set[Int]],
       repeatable: Boolean, pass2Pruned: Boolean, introducesKeys: Boolean,
       newSchema: Option[IceLite.Schema] = None): Unit = {
@@ -454,10 +412,10 @@ object SqlMerge {
     * `_bucket`) as the new content of the `affected` buckets: those
     * buckets' CDC tombstones are preserved (late-data fencing) unless the
     * statement re-inserted the key, and the commit validates against
-    * `t.pre` so a concurrent committer CONFLICTS, never clobbers.
-    * The epoch key gets a non-numeric suffix (uuid slice keeps a '-'):
-    * never folded into the epoch high-water mark, so concurrent DML
-    * statements can't mask each other.
+    * `t.meta` so a concurrent committer CONFLICTS, never clobbers.
+    * The epoch key is [[IceLite.uniqueEpoch]]'s: never folded into the
+    * epoch high-water mark, so concurrent DML statements can't mask each
+    * other.
     *
     * `introducesKeys`: true for statements that can put a NEW key into a
     * bucket (MERGE inserts, key-reassigning UPDATE). Those — and only
@@ -470,10 +428,10 @@ object SqlMerge {
     * keys cannot collide with a tombstoned key (live and tombstoned key
     * sets are disjoint), so both steps are skipped entirely then.
     */
-  private def commitRewrite(spark: SparkSession, t: Target, out: DataFrame,
+  private def commitRewrite(spark: SparkSession, t: IceLiteScan, out: DataFrame,
       affected: Set[Int], opName: String, introducesKeys: Boolean,
       newSchema: Option[IceLite.Schema]): Unit = {
-    val keyName = t.keyAttr.name
+    val keyName = t.key.name
     val guarded =
       if (!introducesKeys) out
       else {
@@ -489,7 +447,7 @@ object SqlMerge {
             .otherwise(lit(true)))
           .drop("__kc")
       }
-    val tombs0 = IceLite.readInternal(spark, t.dir, Some(t.pre.version),
+    val tombs0 = IceLite.readInternal(spark, t.dir, Some(t.meta.version),
         Some(affected))
       .filter(col("_deleted"))
     // one cheap existence probe (bucket-pruned scan, pushed `_deleted`
@@ -505,7 +463,7 @@ object SqlMerge {
         val tombs1 = (if (introducesKeys)
             tombs0.join(out.select(col(keyName)), Seq(keyName), "left_anti")
           else tombs0)
-          .withColumn("_bucket", Salt.bucket(col(keyName), t.nB))
+          .withColumn("_bucket", Salt.bucket(col(keyName), t.numBuckets))
         // atomic evolution: tombstones were read under the pre-statement
         // schema — null-fill the statement's new columns, as any
         // post-evolution read of old files would
@@ -517,9 +475,7 @@ object SqlMerge {
       }
     // one file per rewritten bucket (not one per task per bucket): DML
     // statements must not crowd buckets into needing compaction
-    val epoch =
-      s"$opName.${java.util.UUID.randomUUID().toString.substring(0, 13)}"
-    IceLite.replaceBuckets(t.dir, epoch, opName, t.pre,
+    IceLite.replaceBuckets(t.dir, IceLite.uniqueEpoch(opName), opName, t.meta,
       withTombs.repartition(col("_bucket")), affected, newSchema)
   }
 
@@ -535,7 +491,7 @@ object SqlMerge {
     val assigns = assignMap(update.assignments, t.attrs)
     val cond = update.condition
       .getOrElse(org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)
-    val keyReassigned = assigns.get(0).exists(!_.semanticEquals(t.keyAttr))
+    val keyReassigned = assigns.get(0).exists(!_.semanticEquals(t.key))
     val hit = coalesce(cc(cond), lit(false))
     def finalValue(j: Int): Column = {
       val old = cc(t.attrs(j))
@@ -548,10 +504,10 @@ object SqlMerge {
     // assignment values are only ever evaluated once, in the write pass
     rewrite(spark, t, "sqlupdate",
       b => marked(pinnedTarget(spark, t, b), t, t.attrs.indices.map(finalValue),
-        keep = lit(true), changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
+        keep = lit(true), changed = hit, Salt.bucket(cc(t.key), t.numBuckets)),
       // moved rows need their NEW bucket read too: no scan pruning
       scanBuckets = if (keyReassigned) None
-        else Salt.bucketsPinnedBy(cond, t.keyAttr, t.nB),
+        else Salt.bucketsPinnedBy(cond, t.key, t.numBuckets),
       repeatable = repeatableExpr(cond) &&
         (!keyReassigned || assigns.get(0).forall(repeatableExpr)),
       pass2Pruned = true, introducesKeys = keyReassigned)
@@ -569,8 +525,8 @@ object SqlMerge {
     val hit = coalesce(cc(delete.condition), lit(false))
     rewrite(spark, t, "sqldelete",
       b => marked(pinnedTarget(spark, t, b), t, t.attrs.map(cc),
-        keep = !hit, changed = hit, Salt.bucket(cc(t.keyAttr), t.nB)),
-      scanBuckets = Salt.bucketsPinnedBy(delete.condition, t.keyAttr, t.nB),
+        keep = !hit, changed = hit, Salt.bucket(cc(t.key), t.numBuckets)),
+      scanBuckets = Salt.bucketsPinnedBy(delete.condition, t.key, t.numBuckets),
       repeatable = repeatableExpr(delete.condition),
       pass2Pruned = true, introducesKeys = false)
   }

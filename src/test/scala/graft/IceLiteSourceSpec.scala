@@ -311,4 +311,72 @@ class IceLiteSourceSpec extends SparkTestBase {
       .mode("overwrite").save(dir)
     assert(spark.read.format("icelite").load(dir).count() == 2)
   }
+
+  test("change-stream AvailableNow honours maxVersionsPerBatch: three " +
+      "pending versions drain as 3 capped batches, not one") {
+    val dir = mkTable("dcapnow", 10) // v2 = rows 1..10
+    val s2 = IceLite.stageFiles(dir, "e2", mkRows(3), 1)
+    IceLite.commit(dir, "e2", "merge", s2, (0 until 4).toSet) // v3: rows 1..3
+    val s3 = IceLite.stageFiles(dir, "e3", mkRows(2, "cap"), 1)
+    IceLite.commit(dir, "e3", "merge", s3, (0 until 4).toSet) // v4: 2 cap rows
+    val out = tmpDir("dcapnow_out")
+    val q = spark.readStream.format("icelite")
+      .option("startingVersion", 1).option("maxVersionsPerBatch", 1)
+      .load(dir)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", tmpDir("dcapnow_cp"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    // deltas: v1->v2 = 10 inserts; v2->v3 = 7 deletes; v3->v4 = 3
+    // deletes + 2 inserts -> 22 change rows over exactly 3 data batches
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.map(_.numInputRows).toSeq == Seq(10L, 7L, 5L),
+      s"expected 3 capped batches, got ${batches.map(_.numInputRows).toSeq}")
+    assert(spark.read.parquet(out).count() == 22)
+  }
+
+  private def messages(e: Throwable): Seq[String] =
+    if (e == null) Nil else Option(e.getMessage).toSeq ++ messages(e.getCause)
+
+  test("schema drift: a DataFrame analyzed before an ALTER fails its " +
+      "collect with the drift message; a fresh read sees the new column") {
+    val dir = mkTable("ddrift", 5)
+    val stale = spark.read.format("icelite").load(dir)
+    graft.operators.SchemaEvolution(dir,
+      """{"addColumn":{"name":"score","type":"long"}}""", "alt.drift.1")
+    val e = intercept[Exception](stale.collect())
+    assert(messages(e).exists(m => m.contains(dir) &&
+      m.contains("REFRESH TABLE")), messages(e).mkString(" | "))
+    val fresh = spark.read.format("icelite").load(dir)
+    assert(fresh.columns.last == "score")
+    assert(fresh.filter(col("score").isNull).count() == 5)
+  }
+
+  test("v1 relation fallback: buildScan() returns exactly IceLite.read's " +
+      "rows (tombstones masked, time travel kept) behind the same guard") {
+    import graft.icelite.IceLiteRelation
+    val dir = mkTable("dv1scan", 8)
+    val v1 = IceLite.currentVersion(dir)
+    val tombs = mkRows(3, "gone").withColumn("_deleted", lit(true))
+    val s2 = IceLite.stageFiles(dir, "e2", tombs, 1)
+    IceLite.commit(dir, "e2", "append", s2) // 3 tombstones, 8 live rows
+    def scan(version: Option[Int]) = {
+      val rel = IceLiteRelation(spark.sqlContext, dir, version)
+      spark.createDataFrame(rel.buildScan(), rel.schema)
+    }
+    assert(scan(None).count() == 8)
+    assert(graft.operators.Equivalence.diff(scan(None),
+      IceLite.read(spark, dir)).isEmpty)
+    assert(graft.operators.Equivalence.diff(scan(Some(v1)),
+      IceLite.read(spark, dir, Some(v1))).isEmpty)
+    // a relation whose schema froze before an ALTER fails the scan
+    val rel = IceLiteRelation(spark.sqlContext, dir, None)
+    assert(rel.schema.fieldNames.toSeq ==
+      Seq("url", "warc_ts", "html", "text", "lang"))
+    graft.operators.SchemaEvolution(dir,
+      """{"addColumn":{"name":"score","type":"long"}}""", "alt.v1.1")
+    val e = intercept[IllegalStateException](rel.buildScan())
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("REFRESH TABLE"))
+  }
 }
