@@ -55,7 +55,8 @@ object Demo {
     }
     // the auto-compaction surface: metadata-only crowding probe, compacts
     // only when some bucket exceeds the threshold (a pipeline calls this
-    // after every commit, gated on CommitResult.maxBucketFiles)
+    // after every commit, gated on the filesPerBucket of the metadata that
+    // Merge returns)
     val crowd = IceLite.load(table).filesPerBucket.values.maxOption.getOrElse(0)
     val compacted = graft.operators.Maintenance.compactIfNeeded(
       spark, table, maxFilesPerBucket = 2)

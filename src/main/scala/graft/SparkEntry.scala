@@ -1210,7 +1210,7 @@ object SparkEntry {
     "decontaminate" ->
       // same 13-token-gram + portable-hash containment, rederived: grams
       // via list_slice windows (short docs contribute their full token
-      // sequence, mirroring tokenShingles' greatest(..,1) clamp; corpus
+      // sequence, mirroring shinglesFromToks' short-doc clamp; corpus
       // docs also emit m-token windows for each distinct short-eval
       // length — the lens CTE, mirroring decontaminate's evalLens),
       // hashed with the md5-prefix portable hash, eval = doc_id % 37 = 0

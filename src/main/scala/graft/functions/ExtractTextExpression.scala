@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
@@ -63,9 +62,4 @@ object ExtractTextExpression {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(ExtractTextExpression(ColumnBridge.expr(c)))
   }
-
-  /** Register `extract_text` for SQL: `SELECT extract_text(html) FROM …`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_text", exprs => ExtractTextExpression(exprs.head), "scala_udf")
 }

@@ -1,7 +1,7 @@
 package graft.icelite
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.BucketFileWriter
@@ -40,7 +40,9 @@ import org.json4s.jackson.JsonMethods
   * Layout:
   * {{{
   * table/
-  *   data/<epoch>-b<bucket>-<n>.parquet // moved from data/.staging-* (stageFiles)
+  *   data/<epoch>-<token>-b<bucket>-<n>.parquet
+  *                                     // moved from data/.staging-<epoch>-<token>;
+  *                                     // one <token> per stageFiles call
   *   metadata/v<N>.metadata.json       // manifest list + schemas + epochs
   *   metadata/man-<uniq>-b<B>.json     // bucket B's data-file list
   *   metadata/version-hint.text        // read fast path (cache, not truth)
@@ -612,22 +614,28 @@ object IceLite {
     * `_bucket` column) into staged immutable data files under `data/`,
     * returning their entries. One Spark job writes one parquet file per
     * (task, bucket) into a per-call staging dir; the files of SUCCESSFUL
-    * task attempts move into `data/` as `<epoch>-b<bucket>-<n>.parquet`,
-    * then the staging dir is deleted, also when the job fails. Nothing is
-    * visible until `commit` publishes the entries; a killed driver leaves
-    * orphans (staging dir included) for `Maintenance.gcOrphans`.
+    * task attempts move into `data/` as
+    * `<epoch>-<token>-b<bucket>-<n>.parquet`, then the staging dir is
+    * deleted, also when the job fails. Nothing is visible until `commit`
+    * publishes the entries; a killed driver leaves orphans (staging dir
+    * included) for `Maintenance.gcOrphans`.
+    *
+    * `<token>` is drawn per call, so a retried save under the same epoch
+    * key (say, while the first attempt is still running) never writes over
+    * files another attempt may already have committed; the move refuses
+    * to replace, so a collision fails loudly instead.
     */
   def stageFiles(dir: String, epochKey: String, df: DataFrame,
       schemaId: Int): Seq[DataFileEntry] = {
     val safe = epochKey.replaceAll("[^A-Za-z0-9._-]", "_")
-    val staging = Paths.get(dir, "data", s".staging-$safe-${System.nanoTime()}")
+    val token = java.util.UUID.randomUUID().toString.take(8)
+    val staging = Paths.get(dir, "data", s".staging-$safe-$token")
     try {
       val written = BucketFileWriter.write(df, staging.toString, epochKey)
-      // final names carry a sequence number: collision-free per attempt
       written.sortBy(f => (f._2, f._1)).zipWithIndex.map {
         case ((path, bucket, rows), seq) =>
-          val dst = Paths.get(dir, "data", s"$safe-b$bucket-$seq.parquet")
-          Files.move(Paths.get(path), dst, StandardCopyOption.REPLACE_EXISTING)
+          val dst = Paths.get(dir, "data", s"$safe-$token-b$bucket-$seq.parquet")
+          Files.move(Paths.get(path), dst)
           DataFileEntry(dst.toString, bucket, schemaId, rows)
       }
     } finally deleteRecursively(staging)

@@ -36,14 +36,6 @@ case class ChangeEvent(
     alterJson: String,
     extra: Map[String, String])
 
-/** One live row of the target `pages` table (v1 schema, pre-evolution). */
-case class PageRow(
-    url: String,
-    warc_ts: java.sql.Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
 object Model {
 
   /** Envelope schema — used for schema-pinned ledger reads (batch + stream). */
@@ -65,23 +57,4 @@ object Model {
     StructField("html", BinaryType, nullable = true),
     StructField("text", StringType, nullable = true),
     StructField("lang", StringType, nullable = true)))
-
-  /** Sidecar lineage row: one per micro-batch per source partition. */
-  val lineageSchema: StructType = StructType(Seq(
-    StructField("epoch_id", LongType, nullable = false),
-    StructField("partition", IntegerType, nullable = false),
-    StructField("min_offset", LongType, nullable = false),
-    StructField("max_offset", LongType, nullable = false),
-    StructField("rows_applied", LongType, nullable = false),
-    StructField("snapshot_id", LongType, nullable = false),
-    StructField("commit_ts", TimestampType, nullable = false)))
-
-  /** Sidecar metrics row: one per micro-batch. */
-  val metricsSchema: StructType = StructType(Seq(
-    StructField("epoch_id", LongType, nullable = false),
-    StructField("events_in", LongType, nullable = false),
-    StructField("rows_upserted", LongType, nullable = false),
-    StructField("rows_deleted", LongType, nullable = false),
-    StructField("batch_ms", LongType, nullable = false),
-    StructField("events_per_sec", DoubleType, nullable = false)))
 }

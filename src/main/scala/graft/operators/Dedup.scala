@@ -46,20 +46,21 @@ object Dedup {
     *
     * Size-checked for batch replays: the winner set
     * `(url → max (warc_ts, offset, partition))` is computed over four
-    * pruned fixed-width columns, cached, and counted; when it fits
+    * pruned fixed-width columns, checkpointed, and counted; when it fits
     * (`maxBroadcastKeys`) the events are LEFT SEMI joined against an
     * EXPLICIT broadcast of it — payloads are filtered in place, never
     * sorted or shuffled before the merge. Otherwise falls back to the
     * single-pass [[latestPerKey]] partial aggregation (whose shuffle is
     * already bounded by distinct keys per map task).
     *
-    * Returns the winners and, when the broadcast path ran, their count
-    * (None on the large-key fallback). The count is free — the size check
-    * already computes it — and Merge uses it to size the salted write:
-    * lane count should track per-bucket volume and reducer parallelism,
-    * not a constant (a constant 4 salts made a 20k-event CTAS open 256
-    * parquet writers — 1.6 s of pure fixed cost, the dominant Amdahl term
-    * in the replay).
+    * Returns the winners and their [[Merge.BatchStats]] over `nBuckets`
+    * storage buckets, from the one job the size check runs over the
+    * checkpointed winner table — so the stats cost no extra job on either
+    * branch. Merge sizes the salted write from the winner count and
+    * prunes its read to the buckets: lane count should track per-bucket
+    * volume and reducer parallelism, not a constant (a constant 4 salts
+    * made a 20k-event CTAS open 256 parquet writers — 1.6 s of pure fixed
+    * cost, the dominant Amdahl term in the replay).
     *
     * Why explicit: the winner keys are FLATTENED to scalar columns (a
     * struct-typed join key is not hash-join-able — Catalyst would force a
@@ -68,22 +69,24 @@ object Dedup {
     * AQE materializes both join children's shuffle WRITES before it can
     * switch strategy — the payload shuffle cost would already be paid.
     */
-  def latestPerKeyAdaptive(events: DataFrame,
-      maxBroadcastKeys: Long = 4000000L): (DataFrame, Option[Long]) = {
+  def latestPerKeyAdaptive(events: DataFrame, nBuckets: Int,
+      maxBroadcastKeys: Long = 4000000L): (DataFrame, Merge.BatchStats) = {
     val ver = struct(col("warc_ts"), col("offset"), col("partition"))
     // localCheckpoint, NOT cache(): cache() registers the frame in the
     // session-wide CacheManager, which holds it strongly — a per-batch
     // replay merge would leak one cached DataFrame per batch for the
     // session lifetime. Checkpoint blocks are owned by the RDD and freed
     // by the ContextCleaner as soon as the returned plan is unreferenced.
-    // Eager by default, so count() and the broadcast build both read the
-    // materialized blocks instead of re-running the aggregation.
+    // Eager by default, so the stats job and the broadcast build both read
+    // the materialized blocks instead of re-running the aggregation.
     val winners = events.groupBy(col("url")).agg(max(ver).as("_ver"))
       .select(col("url").as("_wurl"), col("_ver.warc_ts").as("_wts"),
         col("_ver.offset").as("_woff"), col("_ver.partition").as("_wpart"))
       .localCheckpoint()
-    val nWinners = winners.count()
-    if (nWinners <= maxBroadcastKeys) {
+    val r = winners.select(Merge.batchStatsCols(col("_wurl"), nBuckets): _*)
+      .collect().head
+    val stats = Merge.BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
+    if (stats.winners <= maxBroadcastKeys) {
       // null-safe equality (<=>): a winning event with a NULL version
       // component must still match itself, exactly as latestPerKey keeps
       // it (EqualNullSafe remains a hash-join-able equi key)
@@ -92,9 +95,9 @@ object Dedup {
             col("offset") <=> col("_woff") &&
             col("partition") <=> col("_wpart"),
           "left_semi")
-        .dropDuplicates("url"), Some(nWinners))
+        .dropDuplicates("url"), stats)
     } else {
-      (latestPerKey(events), None)
+      (latestPerKey(events), stats)
     }
   }
 }

@@ -33,6 +33,4 @@ object Equivalence {
     na.exceptAll(nb).withColumn("_side", lit("a"))
       .unionAll(nb.exceptAll(na).withColumn("_side", lit("b")))
   }
-
-  def equivalent(a: DataFrame, b: DataFrame): Boolean = diff(a, b).isEmpty
 }

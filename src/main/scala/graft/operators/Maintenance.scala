@@ -54,7 +54,8 @@ object Maintenance {
     * commit, no storage listing) checks for buckets holding more than
     * `maxFilesPerBucket` live files — when none, returns 0 without
     * consuming an epoch, so an ingest pipeline can call this after every
-    * commit (gated on [[Merge.CommitResult.maxBucketFiles]]) for pennies.
+    * commit (gated on the `filesPerBucket` of the metadata [[Merge]]
+    * returns) for pennies.
     * When crowding exists it runs one targeted [[compact]] under a fresh
     * NON-NUMERIC epoch key (concurrent auto-compactions must never mask
     * each other through the epoch high-water mark), rewriting only the
@@ -102,6 +103,18 @@ object Maintenance {
     dropped
   }
 
+  /** Version `v`'s metadata, or None when it has expired: its metadata
+    * file is absent. Any other load failure (a corrupt manifest, a
+    * transient IO error) propagates. Both deleters below remove what no
+    * loaded version references, so a version that fails to load must
+    * abort them before anything is deleted — counted as expired, its live
+    * files would look unreachable.
+    */
+  private def liveVersion(dir: String, v: Int): Option[IceLite.Metadata] =
+    if (graft.icelite.FileCatalog.versionExists(dir, v))
+      Some(IceLite.loadVersion(dir, v))
+    else None
+
   /** Delete metadata versions older than the newest `keepVersions`, plus
     * every data file and manifest referenced ONLY by expired versions
     * (manifests are shared by reference across versions — only those no
@@ -112,9 +125,7 @@ object Maintenance {
     import java.nio.file.{Files, Paths}
     val current = IceLite.currentVersion(dir)
     val cutoff = current - math.max(1, keepVersions) + 1
-    val kept = (cutoff to current).flatMap { v =>
-      try { Some(IceLite.loadVersion(dir, v)) } catch { case _: Throwable => None }
-    }
+    val kept = (cutoff to current).flatMap(liveVersion(dir, _))
     val keptFiles = kept.flatMap(_.files.map(_.path)).toSet
     val keptManifests = kept.flatMap(_.manifests.map(_.path)).toSet
     // LOAD every expired version before deleting anything: manifests are
@@ -122,11 +133,8 @@ object Maintenance {
     // loadVersion of an older expired version that references the same
     // manifest
     val expired = (1 until cutoff).flatMap { v =>
-      val mp = Paths.get(dir, "metadata", s"v$v.metadata.json")
-      if (Files.exists(mp)) {
-        try { Some((mp, IceLite.loadVersion(dir, v))) }
-        catch { case _: Throwable => None }
-      } else None
+      liveVersion(dir, v).map(m =>
+        (Paths.get(dir, "metadata", s"v$v.metadata.json"), m))
     }
     // Deletion ORDER matters for crash safety: the expired v*.metadata.json
     // files are the only ENTRY POINTS to their manifests — delete them
@@ -167,9 +175,7 @@ object Maintenance {
     // snapshot the reachable set BEFORE listing, so a commit landing
     // mid-GC can only make the listing stale toward deleting LESS
     val current = IceLite.currentVersion(dir)
-    val retained = (1 to current).flatMap { v =>
-      try { Some(IceLite.loadVersion(dir, v)) } catch { case _: Throwable => None }
-    }
+    val retained = (1 to current).flatMap(liveVersion(dir, _))
     val reachable = (retained.flatMap(_.files.map(_.path)) ++
       retained.flatMap(_.manifests.map(_.path))).toSet
     val cutoff = System.currentTimeMillis() - minAgeMs

@@ -39,16 +39,6 @@ import org.apache.spark.sql.types._
   */
 object Merge {
 
-  case class CommitResult(
-      epochKey: String,
-      committed: Boolean,
-      snapshotId: Long,
-      affectedBuckets: Set[Int],
-      // post-commit compaction-pressure signal: the crowdedest bucket's
-      // live file count (metadata-only) — callers gate
-      // Maintenance.compactIfNeeded on it instead of listing storage
-      maxBucketFiles: Int = 0)
-
   /** What a caller that already deduplicated a batch to one winner per
     * url knows about it: the storage buckets the winners hash to, and how
     * many winners there are.
@@ -80,16 +70,16 @@ object Merge {
   /** Apply one change batch to the table. `changes` is envelope-shaped with
     * op ∈ {I,U,D} (ALTERs are handled by SchemaEvolution before this).
     * `deduped` = Some when `changes` is already one winner per url and the
-    * caller counted it; Merge then runs no stats action of its own.
+    * caller counted it; otherwise the dedup's own size check counts it.
+    * Merge runs no Spark action besides the write. Returns the table's
+    * metadata after this epoch: the commit's, or the loaded one when the
+    * epoch was already committed.
     */
   def apply(spark: SparkSession, tableDir: String, changes: DataFrame,
       epochKey: String, nSalts: Int = 4,
-      deduped: Option[BatchStats] = None): CommitResult = {
+      deduped: Option[BatchStats] = None): IceLite.Metadata = {
     val pre = IceLite.load(tableDir)
-    if (pre.committedEpoch(epochKey)) {
-      return CommitResult(epochKey, committed = false, pre.snapshotId,
-        Set.empty, pre.filesPerBucket.values.maxOption.getOrElse(0))
-    }
+    if (pre.committedEpoch(epochKey)) return pre
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
 
@@ -97,9 +87,10 @@ object Merge {
     // use the payload-light winner-filter dedup there; streaming
     // micro-batches arrive deduped (low duplication, one-pass max_by in
     // Pipeline)
-    val (winners, winnerCount) =
-      if (deduped.isDefined) (changes, None)
-      else Dedup.latestPerKeyAdaptive(changes)
+    val (winners, BatchStats(affected, applied)) = deduped match {
+      case Some(stats) => (changes, stats)
+      case None => Dedup.latestPerKeyAdaptive(changes, nBuckets)
+    }
     // Winner rows in physical-table shape, resolved by field id so the merge
     // survives renames; extension fields (id > 5) are promoted out of the
     // `extra` map; `text` is computed by the frozen extractor.
@@ -138,12 +129,11 @@ object Merge {
     // nSalts for every commit (a 20k-event CTAS paid 1.6 s opening 256
     // writers — the dominant fixed cost bounding scaling efficiency, and
     // 4x the small files every commit feeds to compaction).
-    def effectiveSalts(bucketsWritten: Int, rows: Option[Long]): Int = {
+    def effectiveSalts(bucketsWritten: Int, rows: Long): Int = {
       val shuffleP = spark.sessionState.conf.numShufflePartitions
       val engage = math.ceil(2.0 * shuffleP / math.max(1, bucketsWritten)).toInt
-      val crowd = rows.map(r => math.ceil(
-        r.toDouble / math.max(1, bucketsWritten) / 250000.0).toInt)
-        .getOrElse(nSalts)
+      val crowd = math.ceil(
+        rows.toDouble / math.max(1, bucketsWritten) / 250000.0).toInt
       math.max(1, math.min(nSalts, math.max(engage, crowd)))
     }
 
@@ -164,7 +154,7 @@ object Merge {
       }
       val rows = winners.select(preShuffleCols ++ internals: _*)
         .withColumn("_bucket", Salt.bucket(col(urlName), nBuckets))
-      val ctasSalts = effectiveSalts(nBuckets, winnerCount)
+      val ctasSalts = effectiveSalts(nBuckets, applied)
       val salted = rows.repartition(
         col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(ctasSalts.toLong)))
       val withText = textField match {
@@ -179,24 +169,12 @@ object Merge {
               col("_bucket")): _*)
         case None => salted
       }
-      val post = IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
+      return IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
         withText, (0 until nBuckets).toSet)
-      return CommitResult(epochKey, committed = post.epochKey == epochKey,
-        post.snapshotId, (0 until nBuckets).toSet,
-        maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
     }
 
     val newRows = winners.select(valueCols ++ internals: _*)
-
-    // affected storage buckets (a tiny local set that prunes the
-    // read) and the winner count: the caller's, else ONE aggregation
-    // action over the cached rows (serial job-submission overhead is per
-    // action — Merge runs at most two: this collect and the write)
-    val BatchStats(affected, applied) = deduped.getOrElse {
-      val r = newRows.cache()
-        .select(batchStatsCols(col(urlName), nBuckets): _*).collect().head
-      BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
-    }
+    // only the affected storage buckets (a tiny local set) are read
     val existing = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
 
     // conditional merge: newer (event_time, _offset, _partition) wins —
@@ -222,17 +200,12 @@ object Merge {
     // each (lane count adaptive: rewritten rows ≈ affected buckets' prior
     // content + applied changes; `applied` underestimates, so the engage
     // term — which needs no row count — carries small rewrites)
-    val mergeSalts = effectiveSalts(affected.size, Some(applied))
+    val mergeSalts = effectiveSalts(affected.size, applied)
     val salted = merged.repartition(
       col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(mergeSalts.toLong)))
     // validated against `pre`: the merged content was computed from its
     // bucket files — a concurrent commit into an affected bucket means
     // those rows are stale and the commit must conflict, not clobber
-    val post =
-      try IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, salted, affected)
-      finally newRows.unpersist()
-    CommitResult(epochKey, committed = post.epochKey == epochKey,
-      post.snapshotId, affected,
-      maxBucketFiles = post.filesPerBucket.values.maxOption.getOrElse(0))
+    IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, salted, affected)
   }
 }

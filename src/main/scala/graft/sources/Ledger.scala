@@ -39,9 +39,7 @@ object Ledger {
       outOfOrderLagMs: Int = 600000,
       zipfSkew: Double = 1.2,
       htmlParagraphs: Int = 6,
-      alterAt: Map[Long, String] = Map.empty) {
-    def nUrls: Int = nDomains * pagesPerDomain
-  }
+      alterAt: Map[Long, String] = Map.empty)
 
   /** `{"addColumn":{"name":"fetch_ms","type":"long"}}` — the default ALTER. */
   def addColumnJson(name: String, typ: String): String =

@@ -138,14 +138,15 @@ object Pipeline {
 
         // 3. the conditional merge, sized by the collected stats
         inject("beforeMerge")
-        Merge(spark, cfg.tableDir, deduped, s"stream.$epochId", cfg.nSalts,
+        val snapshotId = Merge(spark, cfg.tableDir, deduped,
+          s"stream.$epochId", cfg.nSalts,
           Some(Merge.BatchStats(book(2).flatMap(_.getSeq[Int](6)).toSet, winners)))
+          .snapshotId
         inject("afterMerge")
 
         // 4. lineage: one row per source partition of this batch; the
         //    locally built frames are coalesced to one file per commit
         import spark.implicits._
-        val snapshotId = IceLite.load(cfg.tableDir).snapshotId
         val lineageDf = book(1).map { r =>
           (epochId, r.getInt(1), r.getLong(2), r.getLong(3),
             applied.getOrElse(r.getInt(1), 0L), snapshotId,

@@ -88,11 +88,7 @@ class ChangesSpec extends SparkTestBase {
   }
 
   test("extract_text is SQL-callable after registration") {
-    // the SparkSessionExtensions path needs a FRESH session and is driven
-    // end-to-end by graft.Demo (first session of its JVM uses
-    // withExtensions(new GraftExtensions)); here we cover the runtime
-    // registration path on the shared test session
-    graft.functions.ExtractTextExpression.register(spark)
+    // registered by GraftExtensions, which the shared test session installs
     val out = spark.sql(
       "SELECT extract_text(CAST('<i>ok &amp; fine</i>' AS BINARY)) AS t")
       .head().getString(0)

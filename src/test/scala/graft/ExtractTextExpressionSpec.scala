@@ -37,7 +37,8 @@ class ExtractTextExpressionSpec extends SparkTestBase {
   }
 
   test("registered for SQL") {
-    ExtractTextExpression.register(spark)
+    // the shared test session installs GraftExtensions, whose
+    // injectFunction is the one SQL registration
     Seq(Tuple1("<b>sql &lt;path&gt;</b>".getBytes("UTF-8"))).toDF("html")
       .createOrReplaceTempView("pages_v")
     val out = spark.sql("SELECT extract_text(html) AS t FROM pages_v")

@@ -349,6 +349,25 @@ class IceLiteSpec extends SparkTestBase {
       .count() == 0, "no staged file or staging dir survives the failure")
   }
 
+  test("stageFiles never overwrites a staged file: two calls under one " +
+      "epoch key leave the first call's files at their paths, byte for byte") {
+    import java.nio.file.{Files, Paths}
+    val dir = tmpDir("icetwice")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    // a save retried under the same epoch key while the first attempt runs
+    val first = IceLite.stageFiles(dir, "same.1", mkRows(8), 1)
+    val bytes = first.map(f => f.path -> Files.readAllBytes(Paths.get(f.path)))
+    val second = IceLite.stageFiles(dir, "same.1", mkRows(3), 1)
+    assert(first.nonEmpty && second.nonEmpty)
+    assert(first.map(_.path).toSet.intersect(second.map(_.path).toSet).isEmpty)
+    bytes.foreach { case (p, b) =>
+      assert(java.util.Arrays.equals(Files.readAllBytes(Paths.get(p)), b), p)
+    }
+    // the first attempt's commit reads its own rows
+    IceLite.commit(dir, "same.1", "merge", first, (0 until 4).toSet)
+    assert(IceLite.read(spark, dir).count() == 8)
+  }
+
   test("every writer records each data file's row count: per version, the " +
       "files' rows sum to the version's readInternal count (replay, " +
       "micro-batch merge, SQL UPDATE, compaction)") {

@@ -236,6 +236,32 @@ class MaintenanceSpec extends SparkTestBase {
     assert(IceLite.read(spark, table).count() == live)
   }
 
+  test("gcOrphans and expireSnapshots abort before deleting anything when " +
+      "a retained version fails to load") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val (_, table, _) = freshReplay(400, 2, "gccorrupt")
+    def listing(sub: String): Set[Path] = {
+      val s = Files.list(Paths.get(table, sub))
+      try s.iterator().asScala.toSet finally s.close()
+    }
+    // a manifest only the newest version names: older versions still load
+    val m = IceLite.load(table)
+    val older = (1 until m.version).flatMap(v =>
+      IceLite.loadVersion(table, v).manifests.map(_.path)).toSet
+    val man = m.manifests.map(_.path).find(!older.contains(_))
+      .getOrElse(fail("the last merge wrote no manifest of its own"))
+    Files.write(Paths.get(man), "{".getBytes("UTF-8"))
+    val (data, meta) = (listing("data"), listing("metadata"))
+    assert(data.exists(_.toString.endsWith(".parquet")))
+    // a corrupt manifest is not an expired version: its live files must
+    // not count as unreachable
+    intercept[Exception](Maintenance.gcOrphans(table, minAgeMs = 0))
+    assert(listing("data") == data && listing("metadata") == meta)
+    intercept[Exception](Maintenance.expireSnapshots(table, keepVersions = 1))
+    assert(listing("data") == data && listing("metadata") == meta)
+  }
+
   test("streaming with RocksDB state store matches batch replay") {
     val cfg = Ledger.Config(seed = 91L, nEvents = 1200, nDomains = 8,
       pagesPerDomain = 6, partitions = 2, segments = 2, duplicateRate = 0.08)

@@ -87,7 +87,8 @@ class PropertySpec extends SparkTestBase {
       assert(a == b)
       // the payload-light winner-filter form (used by the batch replay
       // path in Merge) picks the SAME winning event per url
-      val c = Dedup.latestPerKeyAdaptive(shuffled.filter(col("op") =!= "ALTER"))._1
+      val c = Dedup.latestPerKeyAdaptive(
+        shuffled.filter(col("op") =!= "ALTER"), nBuckets = 8)._1
         .select("url", "offset", "partition").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
       val aData = Dedup.latestPerKey(events.filter(col("op") =!= "ALTER"))

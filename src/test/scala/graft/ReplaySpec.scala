@@ -54,6 +54,27 @@ class ReplaySpec extends SparkTestBase {
     }
   }
 
+  test("winner dedup: the broadcast branch and the latestPerKey fallback " +
+      "(maxBroadcastKeys = 0) give the same rows and the same BatchStats") {
+    import graft.operators.Dedup
+    import org.apache.spark.sql.functions.{col, md5}
+    val cfg = Ledger.Config(seed = 11L, nEvents = 3000, nDomains = 20,
+      pagesPerDomain = 10, partitions = 3, segments = 2,
+      duplicateRate = 0.1, deleteRate = 0.1)
+    val ledger = tmpDir("dedup-gate")
+    Ledger.synthesize(spark, cfg, ledger)
+    val events = Ledger.scan(spark, ledger).filter(col("op") =!= "ALTER")
+    val (bcast, bcastStats) = Dedup.latestPerKeyAdaptive(events, nBuckets = 8)
+    val (fallback, fallbackStats) =
+      Dedup.latestPerKeyAdaptive(events, nBuckets = 8, maxBroadcastKeys = 0)
+    assert(bcastStats == fallbackStats && bcastStats.buckets.nonEmpty)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("url"), col("warc_ts"), col("offset"), col("partition"),
+        col("op"), md5(col("html")), col("lang")).collect().toSet
+    val got = rows(bcast)
+    assert(got.size == bcastStats.winners && got == rows(fallback))
+  }
+
   test("replay is idempotent: running it twice changes nothing") {
     val cfg = Ledger.Config(seed = 7L, nEvents = 1200, nDomains = 10,
       pagesPerDomain = 8, partitions = 2, segments = 2)

@@ -101,6 +101,20 @@ class TrainingDataOpsSpec extends SparkTestBase {
     assert(nearFound >= 8, s"LSH recall on near-dups: $nearFound/10")
   }
 
+  test("minhash vocabulary gate: hashing in place (maxBroadcastVocab = 0) " +
+      "gives the broadcast vocabulary's pairs, for both hash families") {
+    Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+        c => xxhash64(c), DedupOps.portableHash).foreach { h =>
+      def pairs(maxVocab: Long) = DedupOps.minhashCandidates(docs, "doc_id",
+        "text", bands = 8, rowsPerBand = 2, minEstimate = 0.7, hashFn = h,
+        maxBroadcastVocab = maxVocab)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val broadcastVocab = pairs(500000L)
+      assert(broadcastVocab.size >= 10)
+      assert(pairs(0L) == broadcastVocab)
+    }
+  }
+
   test("simhash hamming pairs find planted near-duplicates") {
     val pairs = DedupOps.simhashPairs(docs, "doc_id", "text", "lang", 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -370,39 +384,6 @@ class TrainingDataOpsSpec extends SparkTestBase {
       .filter(col("media_id") === 7L).collect()(0)
     assert(r.getLong(6) == again.getLong(6) && r.getInt(3) == again.getInt(3))
     assert(meta.filter(col("width") < 64).count() == 0)
-  }
-
-  test("tokenizer-true BPE counting: golden vectors against the shipped " +
-      "merge table; codegen column form matches the driver-side encoder") {
-    import graft.functions.{Bpe, BpeCountExpression}
-    // hand-traceable goldens (ranks from graft/bpe-merges.txt):
-    // the: t+h(r0) -> [th,e] -> th+e -> 1 token
-    assert(Bpe.encodeCount("the") == 1)
-    // that: t+h -> [th,a,t] -> a+t -> [th,at] -> th+at -> 1
-    assert(Bpe.encodeCount("that") == 1)
-    // into: i+n -> [in,t,o] -> t+o -> [in,to] -> in+to -> 1
-    assert(Bpe.encodeCount("into") == 1)
-    // unmergeable letters stay characters
-    assert(Bpe.encodeCount("xq") == 2 && Bpe.encodeCount("qqq") == 3)
-    assert(Bpe.encodeCount("a") == 1 && Bpe.encodeCount("") == 0)
-    // pretokenization: letter runs / digit runs / single symbols
-    assert(Bpe.countTokens("the cat!") == 1 + 2 + 1) // cat: c+a -> [ca,t]
-    assert(Bpe.countTokens("") == 0 && Bpe.countTokens("   ") == 0)
-    assert(Bpe.countTokens("don't") == 2 + 1 + 1) // don -> [d,on]; ' ; t
-    // the codegen expression computes the same counts as the driver-side
-    // encoder over a real document sample (differential, catches a
-    // broken static-call path silently falling back)
-    val sample = docs.toDF("doc_id", "text", "lang").limit(40)
-    val viaExpr = sample.select(col("doc_id"),
-      BpeCountExpression.token_count_bpe(col("text")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaDriver = sample.select(col("doc_id"), col("text")).collect()
-      .map(r => r.getLong(0) -> Bpe.countTokens(r.getString(1))).toMap
-    assert(viaExpr == viaDriver && viaExpr.nonEmpty)
-    // vs the oracled whitespace/punct proxy (6 words): the true count is
-    // higher because sub-word splits survive — the,on fully merge (1
-    // each) while cat/sat/mat each stay 2 subwords
-    assert(Bpe.countTokens("the cat sat on the mat") == 9)
   }
 
   test("real multimodal decode: golden-vector PPM (comments in header) " +
