@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.icelite.IceLite
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Incremental CDC read of an IceLite table: the NET row changes between
   * two snapshot versions, as (key, change_type, current columns).
@@ -11,10 +12,14 @@ import org.apache.spark.sql.functions._
   * this instead of re-scanning the table — the lake-side equivalent of the
   * binlog the engine ingests.
   *
-  * Detection is version-tuple based: a key changed between snapshots iff
-  * its winning `(warc_ts, _offset, _partition, _deleted)` changed — no
-  * payload comparison, no dependency on schema equality across versions
-  * (columns added by evolution simply ride along from the newer snapshot).
+  * A key live in both snapshots is an update iff its version tuple
+  * `(warc_ts, _offset, _partition)` moved OR its content differs: an
+  * `xxhash64` of the newer version's columns, each read from the older
+  * version by field id and cast to the newer type (a rename or widen
+  * between them is no change), or null where the older version lacks it
+  * (as the newer read of its files null-fills). The content test catches
+  * SQL DML, which edits rows in place and keeps their stored position.
+  * Map columns (unhashable) are not compared.
   */
 object Changes {
 
@@ -47,32 +52,37 @@ object Changes {
     val toRefs = mTo.manifests.map(r => r.bucket -> r.path).toMap
     val buckets = (fromRefs.keySet ++ toRefs.keySet)
       .filter(b => fromRefs.get(b) != toRefs.get(b))
-    // key + event-time columns resolved PER VERSION by field id: a rename
-    // between the two snapshots must not break the diff (the read path
-    // reconciles each version to ITS OWN schema's names)
-    def keyed(v: Int, p: String) = {
-      val s = IceLite.loadVersion(dir, v).currentSchema
-      val keyName = s.fields.head.name
+    // key, event-time and content columns resolved PER VERSION by field
+    // id: a rename between the two snapshots must not break the diff (the
+    // read path reconciles each version to ITS OWN schema's names)
+    val content = mTo.currentSchema.fields.filterNot(f => hasMap(f.dataType))
+    def keyed(m: IceLite.Metadata, p: String, hashed: Seq[Column]) = {
+      val s = m.currentSchema
       val tsName = s.fields.find(_.id == Merge.versionFieldId)
-        .getOrElse(sys.error(s"version field missing in v$v")).name
-      IceLite.readInternal(spark, dir, Some(v), Some(buckets))
-        .select(col(keyName).as(s"${p}_key"), col(tsName).as(s"${p}_ts"),
-          col("_offset").as(s"${p}_off"), col("_partition").as(s"${p}_part"),
-          col("_deleted").as(s"${p}_del"))
+        .getOrElse(sys.error(s"version field missing in v${m.version}")).name
+      // each value's null flag too: xxhash64 skips nulls, so (null, x) and
+      // (x, null) would otherwise hash alike
+      IceLite.readInternal(spark, dir, Some(m.version), Some(buckets))
+        .select(col(s.fields.head.name).as(s"${p}_key"),
+          col(tsName).as(s"${p}_ts"), col("_offset").as(s"${p}_off"),
+          col("_partition").as(s"${p}_part"), col("_deleted").as(s"${p}_del"),
+          xxhash64(hashed.flatMap(c => Seq(c, c.isNull)): _*).as(s"${p}_hash"))
     }
-    val a = keyed(fromVersion, "a")
-    val b = keyed(to, "b")
+    val a = keyed(mFrom, "a", content.map(f =>
+      mFrom.currentSchema.fields.find(_.id == f.id)
+        .fold(lit(null))(g => col(g.name)).cast(f.dataType)))
+    val b = keyed(mTo, "b", content.map(f => col(f.name)))
     val joined = a.join(b, col("a_key") === col("b_key"), "full_outer")
     val aLive = col("a_key").isNotNull && !col("a_del")
     val bLive = col("b_key").isNotNull && !col("b_del")
-    val sameVersion =
+    val same =
       col("a_ts") <=> col("b_ts") && col("a_off") <=> col("b_off") &&
-        col("a_part") <=> col("b_part")
+        col("a_part") <=> col("b_part") && col("a_hash") === col("b_hash")
     val changed = joined
       .withColumn("change_type",
         when(!aLive && bLive, lit("insert"))
           .when(aLive && !bLive, lit("delete"))
-          .when(aLive && bLive && !sameVersion, lit("update")))
+          .when(aLive && bLive && !same, lit("update")))
       .filter(col("change_type").isNotNull)
       .select(coalesce(col("b_key"), col("a_key")).as(key), col("change_type"))
     // attach the newer snapshot's full row for inserts/updates — pruned to
@@ -80,5 +90,12 @@ object Changes {
     // the layout invariant above)
     val current = IceLite.read(spark, dir, Some(to), Some(buckets))
     changed.join(current, Seq(key), "left")
+  }
+
+  private def hasMap(t: DataType): Boolean = t match {
+    case _: MapType => true
+    case a: ArrayType => hasMap(a.elementType)
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case _ => false
   }
 }

@@ -116,18 +116,6 @@ object SqlMerge {
     case x => Seq(x)
   }
 
-  /** REPEATABLE across two evaluations of the same statement? False for
-    * nondeterministic expressions AND for any subquery — a subquery's plan
-    * can hide a LIMIT, a TABLESAMPLE or an icelite scan (mutable between
-    * the probe and the write) from the outer plan-node traversal, so it
-    * forces the single-evaluation checkpoint path wholesale.
-    */
-  private def repeatableExpr(e: Expression): Boolean = !e.exists {
-    case _: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-      true
-    case x => !x.deterministic
-  }
-
   private def cc(e: Expression): Column = ColumnBridge.column(e)
 
   /** Execute once against the current table version; throws
@@ -168,8 +156,9 @@ object SqlMerge {
     // ---- bucket pruning: sound only when every affected bucket is
     // derivable from the source keys (condition pins t.key to a source
     // expression, updates never move a row's key, inserts use that same
-    // key expression, nothing touches rows without a source match, and
-    // the source is deterministic so scanning it twice is consistent)
+    // key expression, nothing touches rows without a source match). The
+    // key expression must be deterministic: the probe and the join both
+    // evaluate it
     val srcAttrSet = AttributeSet(merge.sourceTable.output)
     val srcKeyExpr = conjuncts(merge.mergeCondition).collectFirst {
       case EqualTo(l, r) if l.semanticEquals(keyAttr) &&
@@ -181,44 +170,32 @@ object SqlMerge {
       c.isDelete || c.assigns.get(0).forall(_.semanticEquals(keyAttr)))
     val insertsUseKey = srcKeyExpr.exists(ske =>
       inserts.forall(_.assigns.get(0).exists(_.semanticEquals(ske))))
-    // "deterministic" must mean REPEATABLE across two executions (the
-    // bucket probe + the join re-scan the source): nondeterministic
-    // expressions, unordered LIMIT and TABLESAMPLE can all legally yield
-    // a different row set the second time — any of them disables pruning.
-    // An icelite relation inside the SOURCE is equally non-repeatable: a
-    // concurrent commit landing between the two evaluations changes the
-    // row set, and baseVersion conflict detection guards only the TARGET
-    // — so it forces the single-evaluation checkpoint path too
-    // (version-pinning source icelite scans is the sharper future fix).
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sample}
-    val srcDeterministic = !merge.sourceTable.exists {
-      case _: GlobalLimit | _: LocalLimit | _: Sample => true
-      case lr: LogicalRelation => lr.relation.isInstanceOf[IceLiteRelation]
-      case p => p.expressions.exists(e => !repeatableExpr(e))
-    }
     val canPrune = srcKeyExpr.isDefined && nmbs.isEmpty &&
-      updatesPreserveKey && insertsUseKey && srcDeterministic
+      updatesPreserveKey && insertsUseKey
 
+    // a pruning MERGE reads its source twice (the bucket probe, then the
+    // join): the source is frozen once, so both see the same rows even
+    // when it is nondeterministic or scans a table a concurrent commit
+    // changes (the checkpoint keeps the analyzed attribute ids; the probe
+    // fills it, see [[rewrite]])
     val srcDF = PlanBridge.ofRows(spark, merge.sourceTable)
-    val scanBuckets: Option[Set[Int]] =
-      if (!canPrune) None
-      else {
-        val bs = srcDF.select(Salt.bucket(cc(srcKeyExpr.get), nB).as("__b"))
-          .filter(col("__b").isNotNull).distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (bs.size * 5 >= nB * 4) None else Some(bs) // ≥80%: not worth it
-      }
+    val frozenSrc =
+      if (canPrune) Some(srcDF.localCheckpoint(eager = false)) else None
+    try {
+      val scanBuckets = frozenSrc.map(_.select(
+          Salt.bucket(cc(srcKeyExpr.get), nB).as("__b"))
+        .filter(col("__b").isNotNull).distinct()
+        .collect().map(_.getInt(0)).toSet)
 
-    // ---- the merge dataflow over a given target scan: version-pinned,
-    // optionally bucket-pruned, WITH the stored CDC position columns —
-    // and with the analyzer's attribute ids grafted on via explicit-exprId
-    // aliases, so the merge condition and assignment expressions resolve
-    // against it unchanged
-    def mergedFrame(buckets: Option[Set[Int]]): DataFrame = {
-      val tb = pinnedTarget(spark, t, buckets)
+      // ---- the merge dataflow over the target scan: version-pinned,
+      // bucket-pruned when the probe ran, WITH the stored CDC position
+      // columns — and with the analyzer's attribute ids grafted on via
+      // explicit-exprId aliases, so the merge condition and assignment
+      // expressions resolve against it unchanged
+      val tb = pinnedTarget(spark, t, scanBuckets)
         .withColumn("__rid", monotonically_increasing_id())
         .withColumn("__t_ex", lit(true))
-      val sb = srcDF
+      val sb = frozenSrc.getOrElse(srcDF)
         .withColumn("__sid", monotonically_increasing_id())
         .withColumn("__s_ex", lit(true))
       val joinType = if (inserts.nonEmpty) "full_outer" else "left_outer"
@@ -288,34 +265,14 @@ object SqlMerge {
           .otherwise(clauseValue(nmbs, col("__tact"), j, old))
       }
 
-      marked(withCard, t, tgtAttrs.indices.map(finalValue), keep, changed,
-        when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB)))
-    }
-
-    // plan REPEATABILITY across two evaluations (the affected-bucket probe
-    // and the write): same bar as scan pruning — nondeterministic clause
-    // conditions/assignments or a nondeterministic source force the
-    // single-evaluation checkpoint path
-    val deterministicPlan = srcDeterministic &&
-      repeatableExpr(merge.mergeCondition) &&
-      (matched ++ inserts ++ nmbs).forall(c =>
-        c.cond.forall(repeatableExpr) && c.assigns.values.forall(repeatableExpr))
-    // Pass-2 target-pruning soundness: every changed row's old AND new
-    // bucket is affected, so pruning only hides UNCHANGED matched target
-    // rows — whose source partners then look unmatched in pass 2 and can
-    // fire a spurious INSERT. That insert is harmless only when its key
-    // provably equals the hidden match's key (the merge condition pins
-    // the key and every insert uses it): the spurious row then aims at
-    // the hidden row's UNaffected bucket and the rewrite drops it. With
-    // an insert key unrelated to the match key, the spurious row could
-    // land INSIDE an affected bucket — so those statements re-scan the
-    // full target in pass 2 (still no checkpoint spool).
-    // Inserts, duplicate source keys and key-reassigning updates can put
-    // a new key into a bucket (see commitRewrite).
-    rewrite(spark, t, "sqlmerge", mergedFrame, scanBuckets,
-      repeatable = deterministicPlan,
-      pass2Pruned = inserts.isEmpty || insertsUseKey,
-      introducesKeys = inserts.nonEmpty || !updatesPreserveKey, newSchema)
+      // inserts, duplicate source keys and key-reassigning updates can put
+      // a new key into a bucket (see rewrite)
+      rewrite(spark, t, "sqlmerge",
+        marked(withCard, t, tgtAttrs.indices.map(finalValue), keep, changed,
+          when(col("__t_ex").isNotNull, Salt.bucket(cc(keyAttr), nB))),
+        scanBuckets,
+        introducesKeys = inserts.nonEmpty || !updatesPreserveKey, newSchema)
+    } finally frozenSrc.foreach(PlanBridge.releaseCheckpoint)
   }
 
   // ------------------------------------------------------------ shared
@@ -357,126 +314,90 @@ object SqlMerge {
   /** The statement skeleton shared by MERGE, UPDATE and DELETE: find the
     * affected buckets (old and new bucket of every changed row) and
     * rewrite exactly those, each as the statement's surviving rows.
-    * `stmt(buckets)` builds the statement's [[marked]] frame over a
-    * target scan pruned to `buckets` (None: the whole table).
+    * `stmt` is the statement's [[marked]] frame over a target scan pruned
+    * to `scanBuckets` (None: the whole table).
     *
-    *  - Unpruned (`scanBuckets` None) and `repeatable` across two
-    *    evaluations: two-pass — an aggregate-only probe over the full
-    *    statement finds the affected buckets, then the write re-derives
-    *    it, with the target scan pruned to them when `pass2Pruned` (every
-    *    row the rewrite needs lives there). The table is read twice but
-    *    never spooled to executor-local disk — at 100 TB the 2x read is
-    *    the right trade against the checkpoint's 2x write.
-    *  - Pruned (cheap: only the key's buckets) or not repeatable: ONE
-    *    local checkpoint feeds the probe AND the write, and freezes the
-    *    nondeterministic values (checkpoint, not cache, so per-statement
-    *    frames don't pin the CacheManager). The no-op return, a
-    *    cardinality violation and a commit conflict all release it.
-    */
-  private def rewrite(spark: SparkSession, t: IceLiteScan, opName: String,
-      stmt: Option[Set[Int]] => DataFrame, scanBuckets: Option[Set[Int]],
-      repeatable: Boolean, pass2Pruned: Boolean, introducesKeys: Boolean,
-      newSchema: Option[IceLite.Schema] = None): Unit = {
-    def affectedOf(df: DataFrame): Set[Int] =
-      df.filter(col("__changed"))
-        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
-        .filter(col("b").isNotNull)
-        .distinct().collect().map(_.getInt(0)).toSet
-    def outOf(df: DataFrame, affected: Set[Int]): DataFrame =
-      df.filter(col("__keep") && col("__newb").isInCollection(affected))
-        .select(t.attrs.map(a => col(a.name)) ++ Seq(col("_offset"),
-          col("_partition"), lit(false).as("_deleted"),
-          col("__newb").as("_bucket")): _*)
-    def commit(df: DataFrame, affected: Set[Int]): Unit =
-      commitRewrite(spark, t, outOf(df, affected), affected, opName,
-        introducesKeys, newSchema)
-    if (scanBuckets.isEmpty && repeatable) {
-      val affected = affectedOf(stmt(None))
-      if (affected.isEmpty) return // nothing changed: a no-op
-      commit(stmt(if (pass2Pruned) Some(affected) else None), affected)
-    } else {
-      val frozen = stmt(scanBuckets).localCheckpoint()
-      try {
-        val affected = affectedOf(frozen)
-        if (affected.isEmpty) return // nothing changed: a no-op
-        scanBuckets.foreach { sbs =>
-          if (!affected.subsetOf(sbs)) sys.error(
-            s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
-        }
-        commit(frozen, affected)
-      } finally frozen.unpersist()
-    }
-  }
-
-  /** Commit `out` (user columns + `_offset`/`_partition`/`_deleted`/
-    * `_bucket`) as the new content of the `affected` buckets: those
-    * buckets' CDC tombstones are preserved (late-data fencing) unless the
+    * The frame is evaluated ONCE: a local checkpoint (not a cache, so
+    * per-statement frames don't pin the CacheManager) freezes it. It is
+    * lazy, so the affected-bucket collect — which reads every partition —
+    * fills its blocks, and the write job's every read of the frame (the
+    * rewrite set, the key-uniqueness guard, the tombstone re-insert
+    * anti-join) reads them. So a nondeterministic value is computed once,
+    * and nothing the write job runs re-evaluates the statement. Every exit
+    * path releases the blocks, a failed evaluation included.
+    *
+    * The rewrite set commits as the new content of the affected buckets:
+    * their CDC tombstones are preserved (late-data fencing) unless the
     * statement re-inserted the key, and the commit validates against
-    * `t.meta` so a concurrent committer CONFLICTS, never clobbers.
-    * The epoch key is [[IceLite.uniqueEpoch]]'s: never folded into the
-    * epoch high-water mark, so concurrent DML statements can't mask each
-    * other.
+    * `t.meta` so a concurrent committer CONFLICTS, never clobbers. The
+    * epoch key is [[IceLite.uniqueEpoch]]'s: never folded into the epoch
+    * high-water mark, so concurrent DML statements can't mask each other.
     *
     * `introducesKeys`: true for statements that can put a NEW key into a
     * bucket (MERGE inserts, key-reassigning UPDATE). Those — and only
     * those — need (a) the key-uniqueness guard: a per-key window over the
     * rewrite set (collisions are bucket-local by the layout invariant,
-    * and `out` fully covers the affected buckets) fails the statement
-    * BEFORE the commit if two live rows would share a key (the
+    * and the rewrite set fully covers the affected buckets) fails the
+    * statement BEFORE the commit if two live rows would share a key (the
     * one-live-row-per-key invariant every other operator assumes); and
     * (b) the tombstone re-insert anti-join — a statement that cannot mint
     * keys cannot collide with a tombstoned key (live and tombstoned key
     * sets are disjoint), so both steps are skipped entirely then.
     */
-  private def commitRewrite(spark: SparkSession, t: IceLiteScan, out: DataFrame,
-      affected: Set[Int], opName: String, introducesKeys: Boolean,
-      newSchema: Option[IceLite.Schema]): Unit = {
+  private def rewrite(spark: SparkSession, t: IceLiteScan, opName: String,
+      stmt: DataFrame, scanBuckets: Option[Set[Int]], introducesKeys: Boolean,
+      newSchema: Option[IceLite.Schema] = None): Unit = {
     val keyName = t.key.name
-    val guarded =
-      if (!introducesKeys) out
-      else {
-        val dupMsg = s"$opName: two live rows would share key `$keyName` " +
-          "after this statement (an INSERT or key reassignment collides " +
-          "with an existing live key) — key uniqueness violation"
-        val wk = Window.partitionBy(col(keyName))
-        out.withColumn("__kc", count(lit(1)).over(wk))
-          // filter (not a dropped projection — column pruning would erase
-          // it): evaluated during the write, aborts before any commit
-          .filter(when(col("__kc") > 1,
-            assert_true(lit(false), lit(dupMsg)).isNotNull)
-            .otherwise(lit(true)))
-          .drop("__kc")
+    val frozen = stmt.localCheckpoint(eager = false)
+    try {
+      val affected = frozen.filter(col("__changed"))
+        .select(explode(array(col("__oldb"), col("__newb"))).as("b"))
+        .filter(col("b").isNotNull)
+        .distinct().collect().map(_.getInt(0)).toSet
+      if (affected.isEmpty) return // nothing changed: a no-op
+      scanBuckets.foreach { sbs =>
+        if (!affected.subsetOf(sbs)) sys.error(
+          s"internal: pruning unsound — affected $affected ⊄ scanned $sbs")
       }
-    val tombs0 = IceLite.readInternal(spark, t.dir, Some(t.meta.version),
-        Some(affected))
-      .filter(col("_deleted"))
-    // one cheap existence probe (bucket-pruned scan, pushed `_deleted`
-    // filter) gates BOTH the tombstone union and the re-insert anti-join:
-    // tombstones only ever come from CDC deletes, so most DML statements
-    // touch buckets holding none — and the anti-join is expensive out of
-    // proportion (it re-evaluates the statement's whole merge dataflow a
-    // second time inside the write job to produce `out`'s key column)
-    val haveTombs = tombs0.select(col(keyName)).limit(1).count() > 0L
-    val withTombs =
-      if (!haveTombs) guarded
-      else {
-        val tombs1 = (if (introducesKeys)
-            tombs0.join(out.select(col(keyName)), Seq(keyName), "left_anti")
-          else tombs0)
-          .withColumn("_bucket", Salt.bucket(col(keyName), t.numBuckets))
-        // atomic evolution: tombstones were read under the pre-statement
-        // schema — null-fill the statement's new columns, as any
-        // post-evolution read of old files would
-        val tombs = newSchema.fold(tombs1)(s =>
-          s.fields.filterNot(f => tombs1.columns.contains(f.name))
-            .foldLeft(tombs1)((df, f) =>
-              df.withColumn(f.name, lit(null).cast(f.dataType))))
-        guarded.unionByName(tombs.select(out.columns.map(col): _*))
-      }
-    // one file per rewritten bucket (not one per task per bucket): DML
-    // statements must not crowd buckets into needing compaction
-    IceLite.replaceBuckets(t.dir, IceLite.uniqueEpoch(opName), opName, t.meta,
-      withTombs.repartition(col("_bucket")), affected, newSchema)
+      val out = frozen.filter(col("__keep") && col("__newb").isInCollection(affected))
+        .select(t.attrs.map(a => col(a.name)) ++ Seq(col("_offset"),
+          col("_partition"), lit(false).as("_deleted"),
+          col("__newb").as("_bucket")): _*)
+      val guarded =
+        if (!introducesKeys) out
+        else {
+          val dupMsg = s"$opName: two live rows would share key `$keyName` " +
+            "after this statement (an INSERT or key reassignment collides " +
+            "with an existing live key) — key uniqueness violation"
+          val wk = Window.partitionBy(col(keyName))
+          out.withColumn("__kc", count(lit(1)).over(wk))
+            // filter (not a dropped projection — column pruning would erase
+            // it): evaluated during the write, aborts before any commit
+            .filter(when(col("__kc") > 1,
+              assert_true(lit(false), lit(dupMsg)).isNotNull)
+              .otherwise(lit(true)))
+            .drop("__kc")
+        }
+      val tombs0 = IceLite.readInternal(spark, t.dir, Some(t.meta.version),
+          Some(affected))
+        .filter(col("_deleted"))
+      val tombs1 = (if (introducesKeys)
+          tombs0.join(out.select(col(keyName)), Seq(keyName), "left_anti")
+        else tombs0)
+        .withColumn("_bucket", Salt.bucket(col(keyName), t.numBuckets))
+      // atomic evolution: tombstones were read under the pre-statement
+      // schema — null-fill the statement's new columns, as any
+      // post-evolution read of old files would
+      val tombs = newSchema.fold(tombs1)(s =>
+        s.fields.filterNot(f => tombs1.columns.contains(f.name))
+          .foldLeft(tombs1)((df, f) =>
+            df.withColumn(f.name, lit(null).cast(f.dataType))))
+      // one file per rewritten bucket (not one per task per bucket): DML
+      // statements must not crowd buckets into needing compaction
+      IceLite.replaceBuckets(t.dir, IceLite.uniqueEpoch(opName), opName,
+        t.meta, guarded.unionByName(tombs.select(out.columns.map(col): _*))
+          .repartition(col("_bucket")), affected, newSchema)
+    } finally PlanBridge.releaseCheckpoint(frozen)
   }
 
   // ------------------------------------------------------------ UPDATE
@@ -499,18 +420,14 @@ object SqlMerge {
         when(hit, cc(e).cast(t.attrs(j).dataType)).otherwise(old))
         .getOrElse(old)
     }
-    // repeatability bar for the two-evaluation path: the WHERE and (when
-    // the key moves) the key assignment must be deterministic — other
-    // assignment values are only ever evaluated once, in the write pass
+    // moved rows need their NEW bucket read too: no scan pruning
+    val scanBuckets = if (keyReassigned) None
+      else Salt.bucketsPinnedBy(cond, t.key, t.numBuckets)
     rewrite(spark, t, "sqlupdate",
-      b => marked(pinnedTarget(spark, t, b), t, t.attrs.indices.map(finalValue),
-        keep = lit(true), changed = hit, Salt.bucket(cc(t.key), t.numBuckets)),
-      // moved rows need their NEW bucket read too: no scan pruning
-      scanBuckets = if (keyReassigned) None
-        else Salt.bucketsPinnedBy(cond, t.key, t.numBuckets),
-      repeatable = repeatableExpr(cond) &&
-        (!keyReassigned || assigns.get(0).forall(repeatableExpr)),
-      pass2Pruned = true, introducesKeys = keyReassigned)
+      marked(pinnedTarget(spark, t, scanBuckets), t,
+        t.attrs.indices.map(finalValue), keep = lit(true), changed = hit,
+        Salt.bucket(cc(t.key), t.numBuckets)),
+      scanBuckets, introducesKeys = keyReassigned)
   }
 
   // ------------------------------------------------------------ DELETE
@@ -523,19 +440,19 @@ object SqlMerge {
   def executeDelete(spark: SparkSession, delete: DeleteFromTable): Unit = {
     val t = target(delete.table)
     val hit = coalesce(cc(delete.condition), lit(false))
+    val scanBuckets =
+      Salt.bucketsPinnedBy(delete.condition, t.key, t.numBuckets)
     rewrite(spark, t, "sqldelete",
-      b => marked(pinnedTarget(spark, t, b), t, t.attrs.map(cc),
+      marked(pinnedTarget(spark, t, scanBuckets), t, t.attrs.map(cc),
         keep = !hit, changed = hit, Salt.bucket(cc(t.key), t.numBuckets)),
-      scanBuckets = Salt.bucketsPinnedBy(delete.condition, t.key, t.numBuckets),
-      repeatable = repeatableExpr(delete.condition),
-      pass2Pruned = true, introducesKeys = false)
+      scanBuckets, introducesKeys = false)
   }
 }
 
 /** Base for the three DML command nodes: executes eagerly like every SQL
-  * DML, re-executing on commit conflict (the statement's read is
-  * repeatable — a conflict only means a concurrent committer changed an
-  * affected bucket first).
+  * DML, re-executing on commit conflict (each attempt reads the current
+  * version afresh — a conflict only means a concurrent committer changed
+  * an affected bucket first).
   */
 sealed trait SqlDmlCommand extends LeafRunnableCommand {
   protected def executeOnce(spark: SparkSession): Unit

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** DataFrame ⇄ LogicalPlan bridge.
   *
@@ -51,6 +52,15 @@ object PlanBridge {
       qe.toRdd, Option(declaredSchema).getOrElse(df.schema),
       isStreaming = true)
   }
+
+  /** Free the blocks of a frame `localCheckpoint` returned, now.
+    * `Dataset.unpersist` only drops CacheManager entries, so it leaves
+    * them to the ContextCleaner, which frees them when a driver GC
+    * collects the RDD.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.asInstanceOf[classic.Dataset[_]].logicalPlan.asInstanceOf[LogicalRDD]
+      .rdd.unpersist(blocking = false)
 
   /** Block until every event posted so far has reached the session's
     * listeners (`LiveListenerBus` is `private[spark]`), so a profiler

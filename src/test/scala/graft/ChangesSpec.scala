@@ -1,9 +1,11 @@
 package graft
 
+import graft.functions.Salt
 import graft.icelite.IceLite
 import graft.model.ChangeEvent
-import graft.operators.{Changes, Merge}
+import graft.operators.{Changes, Maintenance, Merge, SchemaEvolution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Incremental CDC read + SparkSessionExtensions registration. */
 class ChangesSpec extends SparkTestBase {
@@ -85,6 +87,98 @@ class ChangesSpec extends SparkTestBase {
     val updText = Changes.between(spark, table, v1)
       .filter(col("change_type") === "update").head().getAs[String]("text")
     assert(updText == "v2")
+  }
+
+  /** A SQL-registered `(url, v, tag)` table: `v` holds field id 2, the
+    * event-time column, and each row's `_offset` is its `v`.
+    */
+  private def sqlTable(name: String, nBuckets: Int,
+      rows: Seq[(String, Long, String)]): String = {
+    val dir = tmpDir(name)
+    IceLite.create(dir, StructType(Seq(
+      StructField("url", StringType, nullable = false),
+      StructField("v", LongType, nullable = true),
+      StructField("tag", StringType, nullable = true))), nBuckets)
+    appendRows(dir, "app.1", rows)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    spark.sql(s"CREATE TABLE $name USING icelite OPTIONS (path '$dir')")
+    dir
+  }
+
+  private def appendRows(dir: String, epoch: String,
+      rows: Seq[(String, Long, String)]): Unit = {
+    val m = IceLite.load(dir)
+    val df = rows.toDF("url", "v", "tag")
+      .withColumn("_offset", col("v"))
+      .withColumn("_partition", lit(0))
+      .withColumn("_deleted", lit(false))
+      .withColumn("_bucket", Salt.bucket(col("url"), m.numBuckets))
+    IceLite.commit(dir, epoch, "append",
+      newFiles = IceLite.stageFiles(dir, epoch, df, m.currentSchemaId))
+  }
+
+  private def diff(dir: String, from: Int): Set[(String, String)] =
+    Changes.between(spark, dir, from).select(col("url"), col("change_type"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  test("SQL edits that keep the stored position are reported: an UPDATE " +
+      "and a MERGE WHEN MATCHED THEN UPDATE that keeps the event time") {
+    val dir = sqlTable("chg_sql", 4,
+      Seq(("a", 1L, "x"), ("b", 2L, "x"), ("c", 3L, "x")))
+    val v1 = IceLite.currentVersion(dir)
+    spark.sql("UPDATE chg_sql SET tag = 'y' WHERE url = 'a'")
+    assert(diff(dir, v1) == Set(("a", "update")))
+    assert(Changes.between(spark, dir, v1).head().getAs[String]("tag") == "y")
+    val v2 = IceLite.currentVersion(dir)
+    Seq(("b", "z")).toDF("u", "nt").createOrReplaceTempView("chg_src")
+    spark.sql("""
+      MERGE INTO chg_sql tg USING chg_src s ON tg.url = s.u
+      WHEN MATCHED THEN UPDATE SET tg.tag = s.nt
+    """)
+    assert(diff(dir, v2) == Set(("b", "update")))
+    assert(diff(dir, v1) == Set(("a", "update"), ("b", "update")))
+  }
+
+  test("a compaction-only delta reports nothing") {
+    val dir = sqlTable("chg_compact", 2, Seq(("k0", 0L, "x")))
+    (1 to 5).foreach(i => appendRows(dir, s"app.${i + 1}",
+      Seq((s"k$i", i.toLong, "x"))))
+    val v1 = IceLite.currentVersion(dir)
+    assert(Maintenance.compact(spark, dir, "compact.1",
+      maxFilesPerBucket = 1) > 0)
+    assert(IceLite.load(dir).manifests.map(_.path).toSet !=
+      IceLite.loadVersion(dir, v1).manifests.map(_.path).toSet)
+    assert(diff(dir, v1).isEmpty)
+  }
+
+  test("a widen ALTER (v long -> double) then an UPDATE of one key " +
+      "reports only that key") {
+    val urls = (0 until 12).map(i => s"w$i")
+    val dir = sqlTable("chg_widen", 2, urls.map(u => (u, 7L, "x")))
+    val v1 = IceLite.currentVersion(dir)
+    SchemaEvolution(dir,
+      """{"widenColumn":{"name":"v","type":"double"}}""", "alt.1")
+    // a fresh catalog entry sees the widened schema
+    spark.sql(s"CREATE TABLE chg_widen2 USING icelite OPTIONS (path '$dir')")
+    try spark.sql("UPDATE chg_widen2 SET tag = 'y' WHERE url = 'w3'")
+    finally spark.sql("DROP TABLE chg_widen2")
+    // the rewritten bucket holds other keys, read as long before and as
+    // double after: none of them is an update
+    assert(urls.count(u => Salt.bucketOfValue(u, 2) ==
+      Salt.bucketOfValue("w3", 2)) > 1)
+    assert(diff(dir, v1) == Set(("w3", "update")))
+  }
+
+  test("an UPDATE that only sets a column added after the older " +
+      "snapshot is reported") {
+    val dir = sqlTable("chg_added", 2, Seq(("a", 1L, "x"), ("b", 2L, "x")))
+    val v1 = IceLite.currentVersion(dir)
+    SchemaEvolution(dir,
+      """{"addColumn":{"name":"score","type":"long"}}""", "alt.1")
+    spark.sql(s"CREATE TABLE chg_added2 USING icelite OPTIONS (path '$dir')")
+    try spark.sql("UPDATE chg_added2 SET score = 5 WHERE url = 'a'")
+    finally spark.sql("DROP TABLE chg_added2")
+    assert(diff(dir, v1) == Set(("a", "update")))
   }
 
   test("extract_text is SQL-callable after registration") {

@@ -163,6 +163,15 @@ class IceLiteSourceSpec extends SparkTestBase {
     // idempotent restart with nothing new: no extra rows
     drain()
     assert(spark.read.parquet(out).count() == 17)
+    // a SQL UPDATE keeps the row's stored position: still streamed
+    spark.sql(s"CREATE TABLE ice_dstream USING icelite OPTIONS (path '$dir')")
+    try spark.sql(
+      "UPDATE ice_dstream SET text = 'edited' WHERE url = 'https://t.example.com/1'")
+    finally spark.sql("DROP TABLE ice_dstream")
+    drain()
+    assert(spark.read.parquet(out).filter(col("change_type") === "update")
+      .select("url", "text").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq == Seq(("https://t.example.com/1", "edited")))
   }
 
   test("scan substitution: SQL reads keep whole-stage codegen end-to-end " +

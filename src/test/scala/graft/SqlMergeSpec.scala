@@ -485,14 +485,14 @@ class SqlMergeSpec extends SparkTestBase {
     assert(state(dir) === Map("c" -> (1L, "x"), "b" -> (2L, "x")))
   }
 
-  test("full-table (unpruned) UPDATE takes the two-pass path: correct " +
-      "result, only hit buckets rewritten; a nondeterministic WHERE " +
-      "falls back to the single-evaluation checkpoint path") {
+  test("full-table (unpruned) UPDATE on a non-key column rewrites only " +
+      "the hit buckets; a nondeterministic WHERE updates every row") {
     val urls = (0 until 32).map(i => s"f$i")
     val (t, dir) = mkTable(8, urls.map(u => (u, u.drop(1).toLong, "x", false)))
     val before = IceLite.load(dir)
     // hits rows 30,31 only — WHERE on a NON-key column, so no pruning:
-    // the two-pass probe must still narrow the rewrite to their buckets
+    // the affected-bucket collect must still narrow the rewrite to their
+    // buckets
     spark.sql(s"UPDATE $t SET tag = 'big' WHERE v >= 30")
     val after = IceLite.load(dir)
     val changed = (0 until 8).filter { b =>
@@ -504,13 +504,13 @@ class SqlMergeSpec extends SparkTestBase {
     assert(changed == hitBuckets)
     assert(state(dir)("f30") == (30L, "big") && state(dir)("f31") == (31L, "big"))
     assert(state(dir)("f0") == (0L, "x"))
-    // nondeterministic WHERE (rand() < 2 is always true but not
-    // repeatable): must route through the checkpoint path and update all
+    // nondeterministic WHERE (rand() < 2 is always true): the frozen
+    // frame's one evaluation must update all
     spark.sql(s"UPDATE $t SET tag = 'all' WHERE rand() < 2")
     assert(state(dir).values.forall(_._2 == "all"))
   }
 
-  test("two-pass merge on a NON-key condition with an unrelated insert " +
+  test("MERGE on a NON-key condition with an unrelated insert " +
       "key: a matched-but-unchanged row outside the affected buckets " +
       "must not resurface as a spurious INSERT") {
     val (t, dir) = mkTable(4, Seq(("a", 1L, "x", false), ("b", 2L, "x", false)))
@@ -521,7 +521,7 @@ class SqlMergeSpec extends SparkTestBase {
     val zb = (0 until 64).map(i => s"z$i")
       .find(u => bucketOf(u) == bucketOf("a")).get
     // s1 matches a AND fires (affected = {bucket(a)}); s2 matches b with
-    // NO firing clause — if pass 2 pruned the target scan to affected
+    // NO firing clause — if the write pruned the target scan to affected
     // buckets, s2 would look unmatched and wrongly insert zb INTO an
     // affected bucket
     Seq((1L, 1, "ign"), (2L, 0, zb)).toDF("mv", "fire", "u")
@@ -532,7 +532,53 @@ class SqlMergeSpec extends SparkTestBase {
       WHEN NOT MATCHED THEN INSERT (url, v, tag) VALUES (s.u, s.mv, 'ins')
     """)
     assert(state(dir) === Map("a" -> (1L, "upd"), "b" -> (2L, "x")),
-      "spurious insert from pruned pass-2 target scan")
+      "spurious insert from a target scan pruned to the affected buckets")
+  }
+
+  test("each statement evaluates its inputs once and releases its " +
+      "checkpoints on every exit path") {
+    val calls = spark.sparkContext.longAccumulator("sqlmerge_udf_calls")
+    spark.udf.register("counted", (s: String) => { calls.add(1); s })
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def counting(body: => Unit): Long = {
+      val before = persisted()
+      calls.reset()
+      body
+      assert(persisted().subsetOf(before), "a statement checkpoint outlived it")
+      calls.sum
+    }
+    val urls = (0 until 24).map(i => s"c$i")
+    val (t, dir) = mkTable(8, urls.map(u => (u, 1L, "x", false)))
+    // full-table UPDATE (WHERE on a non-key column): once per target row
+    assert(counting(spark.sql(
+      s"UPDATE $t SET tag = 'y' WHERE counted(tag) IS NOT NULL")) == 24)
+    assert(state(dir).values.forall(_._2 == "y"))
+    // key-pinned MERGE whose source key goes through the UDF: the bucket
+    // probe and the join read one frozen source, once per source row
+    Seq(("c1", 10L), ("c2", 20L), ("new", 30L)).toDF("u", "nv")
+      .createOrReplaceTempView("src_cnt")
+    assert(counting(spark.sql(s"""
+      MERGE INTO $t tg USING (SELECT counted(u) AS u, nv FROM src_cnt) s
+      ON tg.url = s.u
+      WHEN MATCHED THEN UPDATE SET tg.v = s.nv
+      WHEN NOT MATCHED THEN INSERT (url, v, tag) VALUES (s.u, s.nv, 'ins')
+    """)) == 3)
+    assert(state(dir)("c1") == (10L, "y") && state(dir)("new") == (30L, "ins"))
+    // the no-op and the failing exits release their checkpoints too
+    val v0 = IceLite.load(dir).version
+    counting(spark.sql(s"""
+      MERGE INTO $t tg USING (SELECT counted(u) AS u, nv FROM src_cnt) s
+      ON tg.url = s.u WHEN MATCHED AND s.nv < 0 THEN DELETE
+    """))
+    Seq(("c1", 1L), ("c1", 2L)).toDF("u", "nv")
+      .createOrReplaceTempView("src_cnt_dup")
+    counting(intercept[Exception](spark.sql(s"""
+      MERGE INTO $t tg USING src_cnt_dup s ON tg.url = s.u
+      WHEN MATCHED THEN UPDATE SET tg.v = s.nv
+    """)))
+    counting(intercept[Exception](spark.sql(
+      s"UPDATE $t SET url = 'c2' WHERE url = 'c1'")))
+    assert(IceLite.load(dir).version == v0)
   }
 
   test("no-op merge (no clause fires) commits nothing") {

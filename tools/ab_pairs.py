@@ -12,10 +12,14 @@ and the change first on odd k, and appends both result lines to the log
 (one JSON object per run). The summary
 gives, per workload and end-to-end metric of the change's BENCHMARK.json,
 each side's median and quartiles, the pairs the change won (ties count for
-neither side), and whether a gain holds by the benchmark's rule: the change
+neither side), whether a gain holds by the benchmark's rule (the change
 wins at least nine tenths of the pairs, and the medians differ by more than
-the parent's interquartile range. It also counts runs whose exit code, failed
-operations or output checks were not clean.
+the parent's interquartile range), and the no-regression verdict against the
+metric's `bound`: WORSE when the change median is worse than the parent's by
+more than the bound, unresolved when either side's IQR/median is wider than
+the bound (unless every change run beats every parent run), ok otherwise. It
+also counts runs whose exit code, failed operations or output checks were not
+clean.
 
 Build the parent checkout with `git clone` of the parent commit; both sides
 compile into their own `.bench_build/`.
@@ -51,6 +55,27 @@ def gain_holds(parent, change, better):
     if better == "lower":
         gap = -gap
     return wins(parent, change, better) * 10 >= 9 * len(parent) and gap > q3 - q1
+
+
+def verdict(parent, change, better, bound):
+    """The no-regression verdict for one metric: 'WORSE' when the change
+    median is worse than the parent median by more than `bound` (a
+    fraction of the parent median); else 'unresolved' when either side's
+    spread (IQR / median) is wider than `bound`, unless every change run
+    beats every parent run; else 'ok'."""
+    def spread(xs):
+        q1, m, q3 = quartiles(xs)
+        return (q3 - q1) / abs(m) if m else float("inf")
+    mp, mc = median(parent), median(change)
+    worse = mc - mp if better == "lower" else mp - mc
+    if worse > bound * abs(mp):
+        return "WORSE"
+    if max(spread(parent), spread(change)) > bound:
+        beats_all = (max(change) < min(parent) if better == "lower"
+                     else min(change) > max(parent))
+        if not beats_all:
+            return "unresolved"
+    return "ok"
 
 
 def run_once(checkout, workload, seed, seconds):
@@ -98,7 +123,8 @@ def summarize(runs, end_to_end):
                 f"change {qc[1]:10.3f} [{qc[0]:.3f}, {qc[2]:.3f}]  "
                 f"change/parent {qc[1] / qp[1] if qp[1] else float('nan'):.3f}  "
                 f"wins {wins(p, c, better)}/{len(ks)}  "
-                f"gain rule {'HOLDS' if gain_holds(p, c, better) else 'no'}")
+                f"gain rule {'HOLDS' if gain_holds(p, c, better) else 'no'}  "
+                f"no-regression {verdict(p, c, better, m['bound'])}")
         kinds = sorted({kind for k in done for s in ("parent", "change")
                         for kind in side[(k, s)].get("op_p50_ms_by_kind", {})})
         for kind in kinds:

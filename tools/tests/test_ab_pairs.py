@@ -47,5 +47,32 @@ class GainRuleTest(unittest.TestCase):
         self.assertFalse(ab_pairs.gain_holds(self.parent, change, "higher"))
 
 
+class VerdictTest(unittest.TestCase):
+    parent = [100, 102, 98, 101, 99]  # IQR/median 0.03
+
+    def test_ok_inside_the_bound(self):
+        change = [110, 112, 108, 111, 109]  # 9% worse, bound 25%
+        self.assertEqual(ab_pairs.verdict(self.parent, change, "lower", 0.25), "ok")
+
+    def test_worse_beyond_the_bound_in_either_direction(self):
+        slower = [130, 131, 129, 130, 128]
+        self.assertEqual(ab_pairs.verdict(self.parent, slower, "lower", 0.25), "WORSE")
+        fewer = [70, 71, 69, 70, 72]
+        self.assertEqual(ab_pairs.verdict(self.parent, fewer, "higher", 0.25), "WORSE")
+        # a better change is never WORSE
+        self.assertEqual(ab_pairs.verdict(self.parent, fewer, "lower", 0.25), "ok")
+
+    def test_unresolved_when_a_spread_exceeds_the_bound(self):
+        wide = [60, 100, 140, 90, 110]  # IQR/median 0.2
+        self.assertEqual(ab_pairs.verdict(self.parent, wide, "lower", 0.15), "unresolved")
+        self.assertEqual(ab_pairs.verdict(wide, self.parent, "lower", 0.15), "unresolved")
+        self.assertEqual(ab_pairs.verdict(self.parent, wide, "lower", 0.25), "ok")
+
+    def test_wide_change_beating_every_parent_run_is_ok(self):
+        wide_better = [50, 70, 90, 60, 80]  # IQR/median 0.29, all < 98
+        self.assertEqual(ab_pairs.verdict(self.parent, wide_better, "lower", 0.15), "ok")
+        self.assertEqual(ab_pairs.verdict(self.parent, wide_better, "higher", 0.15), "WORSE")
+
+
 if __name__ == "__main__":
     unittest.main()
