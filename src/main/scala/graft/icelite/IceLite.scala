@@ -475,9 +475,11 @@ object IceLite {
       case None => m.files
     }
     val outStruct = StructType(target.struct.fields ++ internalFields)
+    // an empty local relation, not an empty RDD: Catalyst folds a join or
+    // union with it away (Merge's first load has no join left to run)
     if (wanted.isEmpty) {
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outStruct)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), outStruct)
     }
     val bySchema = wanted.groupBy(_.schemaId).toSeq.sortBy(_._1)
     val parts = bySchema.map { case (sid, fs) =>

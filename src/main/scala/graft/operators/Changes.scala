@@ -32,15 +32,17 @@ object Changes {
     * immutable, so an identical `ManifestRef.path` in both versions proves
     * the bucket's content is byte-identical — no key in it can have a
     * changed winner tuple, so it can contribute no diff row. Both snapshot
-    * scans and the current-row attach therefore read ONLY buckets whose
-    * manifest ref differs: O(changed buckets) per delta instead of two
+    * scans therefore read ONLY buckets whose manifest ref differs, and the
+    * newer scan also carries the rows emitted for inserts and updates (no
+    * third read): O(changed buckets) per delta instead of two
     * full table scans (the streaming change source calls this per
     * micro-batch — at 10^5 files per snapshot the unpruned form was the
     * scale-killer the round-5 review flagged). The key→bucket layout
     * invariant (a key's rows live only in `Salt.bucket(key, numBuckets)`,
-    * and `numBuckets` is fixed at `create`) makes pruning the attach scan
-    * safe too. Every version that holds files lists them in per-bucket
-    * manifests, so the ref diff sees every changed bucket.
+    * and `numBuckets` is fixed at `create`) makes pruning per bucket
+    * sound: a key's older and newer rows meet in one bucket. Every version
+    * that holds files lists them in per-bucket manifests, so the ref diff
+    * sees every changed bucket.
     */
   def between(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Option[Int] = None): DataFrame = {
@@ -56,40 +58,40 @@ object Changes {
     // id: a rename between the two snapshots must not break the diff (the
     // read path reconciles each version to ITS OWN schema's names)
     val content = mTo.currentSchema.fields.filterNot(f => hasMap(f.dataType))
-    def keyed(m: IceLite.Metadata, p: String, hashed: Seq[Column]) = {
+    def keyed(m: IceLite.Metadata, p: String, hashed: Seq[Column],
+        carried: Seq[Column]) = {
       val s = m.currentSchema
       val tsName = s.fields.find(_.id == Merge.versionFieldId)
         .getOrElse(sys.error(s"version field missing in v${m.version}")).name
       // each value's null flag too: xxhash64 skips nulls, so (null, x) and
       // (x, null) would otherwise hash alike
       IceLite.readInternal(spark, dir, Some(m.version), Some(buckets))
-        .select(col(s.fields.head.name).as(s"${p}_key"),
+        .select(Seq(col(s.fields.head.name).as(s"${p}_key"),
           col(tsName).as(s"${p}_ts"), col("_offset").as(s"${p}_off"),
           col("_partition").as(s"${p}_part"), col("_deleted").as(s"${p}_del"),
-          xxhash64(hashed.flatMap(c => Seq(c, c.isNull)): _*).as(s"${p}_hash"))
+          xxhash64(hashed.flatMap(c => Seq(c, c.isNull)): _*).as(s"${p}_hash")) ++
+          carried: _*)
     }
     val a = keyed(mFrom, "a", content.map(f =>
       mFrom.currentSchema.fields.find(_.id == f.id)
-        .fold(lit(null))(g => col(g.name)).cast(f.dataType)))
-    val b = keyed(mTo, "b", content.map(f => col(f.name)))
-    val joined = a.join(b, col("a_key") === col("b_key"), "full_outer")
+        .fold(lit(null))(g => col(g.name)).cast(f.dataType)), Nil)
+    // the newer side carries its row: the output of inserts and updates
+    val rest = mTo.currentSchema.fields.tail.map(_.name)
+    val b = keyed(mTo, "b", content.map(f => col(f.name)),
+      rest.map(n => col(n).as(s"b_row_$n")))
     val aLive = col("a_key").isNotNull && !col("a_del")
     val bLive = col("b_key").isNotNull && !col("b_del")
     val same =
       col("a_ts") <=> col("b_ts") && col("a_off") <=> col("b_off") &&
         col("a_part") <=> col("b_part") && col("a_hash") === col("b_hash")
-    val changed = joined
+    a.join(b, col("a_key") === col("b_key"), "full_outer")
       .withColumn("change_type",
         when(!aLive && bLive, lit("insert"))
           .when(aLive && !bLive, lit("delete"))
           .when(aLive && bLive && !same, lit("update")))
       .filter(col("change_type").isNotNull)
-      .select(coalesce(col("b_key"), col("a_key")).as(key), col("change_type"))
-    // attach the newer snapshot's full row for inserts/updates — pruned to
-    // the same changed buckets (every changed key lives in one of them, by
-    // the layout invariant above)
-    val current = IceLite.read(spark, dir, Some(to), Some(buckets))
-    changed.join(current, Seq(key), "left")
+      .select(Seq(coalesce(col("b_key"), col("a_key")).as(key),
+        col("change_type")) ++ rest.map(n => when(bLive, col(s"b_row_$n")).as(n)): _*)
   }
 
   private def hasMap(t: DataType): Boolean = t match {

@@ -14,6 +14,11 @@ import org.apache.spark.sql.types.BinaryType
   */
 object Equivalence {
 
+  /** Each side re-rooted on its own RDD: over a `dropDuplicates(cols)`
+    * input, Spark 4.1's `exceptAll` rewrite leaves its `ReplicateRows`
+    * referencing the pre-dedup attributes and fails with
+    * INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; a leaf has no such attributes.
+    */
   private def normalize(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.sortBy(_.name).map { f =>
       f.dataType match {
@@ -21,7 +26,8 @@ object Equivalence {
         case _ => col(f.name)
       }
     }
-    df.select(cols.toIndexedSeq: _*)
+    val n = df.select(cols.toIndexedSeq: _*)
+    n.sparkSession.createDataFrame(n.rdd, n.schema)
   }
 
   /** Empty iff a ≡ b (as multisets of normalized rows). Each diff row is

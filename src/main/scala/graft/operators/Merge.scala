@@ -1,10 +1,9 @@
 package graft.operators
 
-import graft.functions.Salt
+import graft.functions.{ExtractTextExpression, Salt}
 import graft.icelite.IceLite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Key-partitioned, bucketed, copy-on-write MERGE INTO (the heart of the
   * engine — BASELINE.json north_star "apply key-partitioned MERGE INTO an
@@ -33,6 +32,12 @@ import org.apache.spark.sql.types._
   *    (Zipf-head domain) spreads over `lanes` tasks while every bucket
   *    still gets at most `lanes` files. Storage bucketing
   *    itself stays UNSALTED so layout is stable (SURVEY.md §4.2).
+  *    `extract_text` runs after that shuffle, on the writer tasks, and only
+  *    for rows the batch wins.
+  *  - **One dataflow.** A first load, a replay segment and a micro-batch
+  *    all run the same conditional merge. A read of buckets holding no
+  *    files is an empty local relation, so Catalyst removes the join and a
+  *    first load is one pass from scan to committed files.
   *  - **Exactly-once.** Data files are staged invisible, then published by
   *    one atomic metadata commit keyed by `epochKey`; a replayed epoch is a
   *    no-op before any work happens.
@@ -71,9 +76,10 @@ object Merge {
     * op ∈ {I,U,D} (ALTERs are handled by SchemaEvolution before this).
     * `deduped` = Some when `changes` is already one winner per url and the
     * caller counted it; otherwise the dedup's own size check counts it.
-    * Merge runs no Spark action besides the write. Returns the table's
-    * metadata after this epoch: the commit's, or the loaded one when the
-    * epoch was already committed.
+    * Only the buckets the batch's winners hash to are read and replaced,
+    * also on a first load. Merge runs no Spark action besides the write.
+    * Returns the table's metadata after this epoch: the commit's, or the
+    * loaded one when the epoch was already committed.
     */
   def apply(spark: SparkSession, tableDir: String, changes: DataFrame,
       epochKey: String, nSalts: Int = 4,
@@ -93,7 +99,7 @@ object Merge {
     }
     // Winner rows in physical-table shape, resolved by field id so the merge
     // survives renames; extension fields (id > 5) are promoted out of the
-    // `extra` map; `text` is computed by the frozen extractor.
+    // `extra` map. `text` stays null here: it is extracted after the shuffle.
     val isDelete = col("op") === "D"
     val valueCols = schema.fields.map { f =>
       f.id match {
@@ -102,10 +108,7 @@ object Merge {
           (if (id <= 2) src // url / warc_ts survive on tombstones
            else when(isDelete, lit(null).cast(f.dataType)).otherwise(src))
             .cast(f.dataType).as(f.name)
-        case `textFieldId` =>
-          when(isDelete, lit(null).cast(StringType))
-            .otherwise(graft.functions.ExtractTextExpression
-              .extract_text(col("html"))).as(f.name)
+        case `textFieldId` => lit(null).cast(f.dataType).as(f.name)
         case _ =>
           when(isDelete, lit(null).cast(f.dataType))
             .otherwise(element_at(col("extra"), f.name).cast(f.dataType))
@@ -126,7 +129,7 @@ object Merge {
     //  (b) crowding: a bucket holding more rows than one healthy output
     //      file should split into several.
     // A CONSTANT lane count instead multiplies parquet writer inits by
-    // nSalts for every commit (a 20k-event CTAS paid 1.6 s opening 256
+    // nSalts for every commit (a 20k-event first load paid 1.6 s opening 256
     // writers — the dominant fixed cost bounding scaling efficiency, and
     // 4x the small files every commit feeds to compaction).
     def effectiveSalts(bucketsWritten: Int, rows: Long): Int = {
@@ -137,44 +140,17 @@ object Merge {
       math.max(1, math.min(nSalts, math.max(engage, crowd)))
     }
 
-    // Initial-load fast path (CTAS-style): merging into an EMPTY table has
-    // no matched side — no bucket pruning to compute, no carry-forward join.
-    // One single pass from scan to committed files (no cache, no stats
-    // action): this is the 10^10-event full-replay bootstrap, where an
-    // extra materialization of the whole corpus would double the cost.
-    if (pre.files.isEmpty) {
-      // extract_text runs AFTER the salted shuffle: the exchange then
-      // carries only the html payload, not html+text (~40% fewer shuffle
-      // bytes), and the extraction CPU lands on the (salt-balanced)
-      // writer tasks
-      val textField = schema.fields.find(_.id == textFieldId)
-      val preShuffleCols = schema.fields.collect {
-        case f if f.id != textFieldId =>
-          valueCols(schema.fields.indexOf(f))
-      }
-      val rows = winners.select(preShuffleCols ++ internals: _*)
-        .withColumn("_bucket", Salt.bucket(col(urlName), nBuckets))
-      val ctasSalts = effectiveSalts(nBuckets, applied)
-      val salted = rows.repartition(
-        col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(ctasSalts.toLong)))
-      val withText = textField match {
-        case Some(tf) =>
-          salted
-            .withColumn(tf.name, when(col("_deleted"), lit(null).cast(StringType))
-              .otherwise(graft.functions.ExtractTextExpression
-                .extract_text(col(schema.fields.find(_.id == 3)
-                  .map(_.name).getOrElse("html")))))
-            .select((schema.fields.map(f => col(f.name)) ++
-              IceLite.internalFields.map(f => col(f.name)) :+
-              col("_bucket")): _*)
-        case None => salted
-      }
-      return IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
-        withText, (0 until nBuckets).toSet)
-    }
-
-    val newRows = winners.select(valueCols ++ internals: _*)
-    // only the affected storage buckets (a tiny local set) are read
+    // extract_text reads the winner's html: the stored html column, or the
+    // envelope's, carried under `__html`, when the table dropped html
+    val textName = schema.fields.find(_.id == textFieldId).map(_.name)
+    val htmlName = schema.fields.find(_.id == 3).fold("__html")(_.name)
+    val carried =
+      if (textName.nonEmpty && htmlName == "__html") Seq(htmlName) else Nil
+    val newRows = winners.select(
+      valueCols ++ internals ++ carried.map(col("html").as(_)): _*)
+    // only the affected storage buckets (a tiny local set) are read; with
+    // none of their files in the table the read is an empty local relation,
+    // and Catalyst drops the join (a first load is a scan-to-write pass)
     val existing = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
 
     // conditional merge: newer (event_time, _offset, _partition) wins —
@@ -186,26 +162,36 @@ object Merge {
     val e = existing.select(existing.columns.map(n => col(n).as(s"e_$n")): _*)
     val cVer = struct(col(s"c_$verName"), col("c__offset"), col("c__partition"))
     val eVer = struct(col(s"e_$verName"), col("e__offset"), col("e__partition"))
-    val changeWins = col(s"e_$urlName").isNull || (cVer > eVer)
+    val fresh =
+      col(s"c_$urlName").isNotNull && (col(s"e_$urlName").isNull || cVer > eVer)
     val outCols = (schema.fields.map(_.name) ++
       IceLite.internalFields.map(_.name)).map { n =>
-      when(col(s"c_$urlName").isNotNull && changeWins, col(s"c_$n"))
-        .otherwise(col(s"e_$n")).as(n)
+      when(fresh, col(s"c_$n")).otherwise(col(s"e_$n")).as(n)
     }
     val merged = c.join(e, col(s"c_$urlName") === col(s"e_$urlName"), "full_outer")
-      .select(outCols: _*)
+      .select(outCols ++ carried.map(n => col(s"c_$n").as(n)) :+
+        fresh.as("__fresh"): _*)
       .withColumn("_bucket", Salt.bucket(col(urlName), nBuckets))
 
     // salted write: crowded buckets spread over salt lanes, ≤ lanes files
     // each (lane count adaptive: rewritten rows ≈ affected buckets' prior
     // content + applied changes; `applied` underestimates, so the engage
     // term — which needs no row count — carries small rewrites)
-    val mergeSalts = effectiveSalts(affected.size, applied)
+    val lanes = effectiveSalts(affected.size, applied)
     val salted = merged.repartition(
-      col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(mergeSalts.toLong)))
+      col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(lanes.toLong)))
+    // extract_text runs AFTER the salted shuffle and only for rows the batch
+    // wins: the exchange carries the html payload, not html+text, the
+    // extraction CPU lands on the salt-balanced writer tasks, and a losing
+    // (late or re-delivered) event is never extracted
+    val withText = textName.fold(salted)(t => salted.withColumn(t,
+      when(col("__fresh") && !col("_deleted"),
+        ExtractTextExpression.extract_text(col(htmlName)))
+        .otherwise(col(t))))
     // validated against `pre`: the merged content was computed from its
     // bucket files — a concurrent commit into an affected bucket means
     // those rows are stale and the commit must conflict, not clobber
-    IceLite.replaceBuckets(tableDir, epochKey, "merge", pre, salted, affected)
+    IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
+      withText.drop("__fresh" +: carried: _*), affected)
   }
 }

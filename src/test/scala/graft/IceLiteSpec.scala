@@ -28,6 +28,30 @@ class IceLiteSpec extends SparkTestBase {
     assert(got.columns.toSeq == Seq("url", "warc_ts", "html", "text", "lang"))
   }
 
+  test("a read of no files plans an empty local relation (Catalyst folds " +
+      "joins and unions with it away)") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val dir = tmpDir("ice_empty")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    val staged = IceLite.stageFiles(dir, "e1",
+      mkRows(10).filter(col("_bucket") =!= 3), 1)
+    IceLite.commit(dir, "e1", "merge", staged, (0 until 4).toSet)
+    val none = tmpDir("ice_none")
+    IceLite.create(none, Model.pagesSchema, 4)
+    // a table without files, and buckets without files in a table with some
+    Seq(IceLite.readInternal(spark, none),
+      IceLite.readInternal(spark, dir, buckets = Some(Set(3)))).foreach { df =>
+      df.queryExecution.optimizedPlan match {
+        case l: LocalRelation => assert(l.data.isEmpty)
+        case other => fail(s"not an empty LocalRelation:\n$other")
+      }
+      assert(df.columns.toSeq == Model.pagesSchema.fieldNames.toSeq ++
+        IceLite.internalFields.map(_.name))
+    }
+    assert(IceLite.readInternal(spark, dir, buckets = Some(Set(0, 1, 2, 3)))
+      .count() == staged.map(_.rows).sum)
+  }
+
   test("epoch-keyed commits are idempotent (exactly-once replay)") {
     val dir = tmpDir("ice2")
     IceLite.create(dir, Model.pagesSchema, 4)
@@ -382,11 +406,12 @@ class IceLiteSpec extends SparkTestBase {
       deleteRate = 0.1)
     val ledger = tmpDir("rows_ledger")
     graft.sources.Ledger.synthesize(spark, cfg, ledger)
-    // replay: its single segment takes Merge's CTAS path
+    // replay: its single segment is a first load into an empty table
     val table = tmpDir("rows_replay")
     graft.operators.Replay.full(spark, ledger, table, nBuckets = 4)
     checkRows(table, IceLite.currentVersion(table))
-    // pipeline: the first batch is a CTAS, every later one a merge
+    // pipeline: the first batch loads the empty table, every later one
+    // merges into stored rows
     val work = tmpDir("rows_pipe")
     graft.streaming.Pipeline.runToCompletion(spark, graft.streaming.Pipeline
       .Config(ledger, s"$work/pages", s"$work/cp", s"$work/lin", s"$work/met",

@@ -116,7 +116,7 @@ class PipelineSpec extends SparkTestBase {
     // lineage and metrics rows equal an uninterrupted run's: the restarted
     // epoch 2 finds its table commit done and must still report the same
     // counts; no metrics row may carry a -1 sentinel (epoch 0 lands in an
-    // empty table, Merge's CTAS path)
+    // empty table, a first load)
     val clean = tmpDir("pl3_clean")
     Pipeline.runToCompletion(spark, pipeCfg(clean, ledger))
     def rows(w: String, t: String, cols: String*) =

@@ -3,7 +3,7 @@ package graft
 import graft.functions.TextExtract
 import graft.icelite.IceLite
 import graft.model.ChangeEvent
-import graft.operators.Replay
+import graft.operators.{Equivalence, Merge, Replay, SchemaEvolution}
 import graft.sources.Ledger
 import graft.util.Det
 
@@ -68,6 +68,7 @@ class ReplaySpec extends SparkTestBase {
     val (fallback, fallbackStats) =
       Dedup.latestPerKeyAdaptive(events, nBuckets = 8, maxBroadcastKeys = 0)
     assert(bcastStats == fallbackStats && bcastStats.buckets.nonEmpty)
+    assert(Equivalence.diff(bcast.drop("extra"), fallback.drop("extra")).isEmpty)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("url"), col("warc_ts"), col("offset"), col("partition"),
         col("op"), md5(col("html")), col("lang")).collect().toSet
@@ -114,6 +115,75 @@ class ReplaySpec extends SparkTestBase {
       Seq(ev(3, "I", 4000, "<p>back</p>")).toDF(), "b3")
     val rows = IceLite.read(spark, table).collect()
     assert(rows.length == 1 && rows(0).getString(3) == "back")
+  }
+
+  private def event(off: Long, url: String, ts: Long, body: String) =
+    ChangeEvent(0, off, "I", url, new java.sql.Timestamp(ts),
+      body.getBytes("UTF-8"), "en", null, Map.empty)
+
+  test("a merge into a table that dropped html extracts text from the " +
+      "event's html, into an empty and into a non-empty table") {
+    import spark.implicits._
+    val u = (i: Int) => s"https://nohtml.example.com/$i"
+    Seq(false, true).foreach { stored =>
+      val table = tmpDir("nohtml")
+      IceLite.create(table, graft.model.Model.pagesSchema, 4)
+      if (stored) Merge(spark, table, Seq(event(0, u(0), 5000, "<p>zero</p>")).toDF(), "b0")
+      SchemaEvolution(table, """{"dropColumn":{"name":"html"}}""", "drop-html")
+      // u(0) arrives late: it loses to a stored row and wins in an empty table
+      val batch = event(1, u(0), 100, "<p>late</p>") +:
+        (2 to 7).map(i => event(i, u(i), 1000, s"<p>page $i</p>"))
+      Merge(spark, table, batch.toDF(), "b1")
+      val got = IceLite.read(spark, table)
+      assert(got.columns.toSeq == Seq("url", "warc_ts", "text", "lang"))
+      val want = batch.map(e => e.url -> TextExtract.extract(e.html)).toMap ++
+        (if (stored) Map(u(0) -> TextExtract.extract("<p>zero</p>".getBytes("UTF-8")))
+         else Map.empty)
+      assert(got.collect().map(r => r.getString(0) -> r.getString(2)).toMap == want,
+        s"stored rows: $stored")
+    }
+  }
+
+  test("one merge dataflow: into buckets holding no files Catalyst removes " +
+      "the join; into stored rows the join stays") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.PlanBridge
+    val table = tmpDir("onedataflow")
+    IceLite.create(table, graft.model.Model.pagesSchema, 4)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
+    // the node names of the one Spark execution a Merge runs: its write
+    def mergePlan(ts: Long, epoch: String): Seq[String] = {
+      val batch = (1 to 6).map(i =>
+        event(i, s"https://flow.example.com/$i", ts, s"<p>$i at $ts</p>")).toDF()
+      val r = batch.select(Merge.batchStatsCols(col("url"), 4): _*).head()
+      val stats = Merge.BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
+      PlanBridge.waitForListeners(spark)
+      plans.clear()
+      Merge(spark, table, batch, epoch, deduped = Some(stats))
+      PlanBridge.waitForListeners(spark)
+      assert(plans.size == 1, s"$epoch: one execution")
+      nodes(plans.peek())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val first = mergePlan(1000, "b1")
+      assert(!first.exists(_.contains("Join")), first)
+      val second = mergePlan(2000, "b2")
+      assert(second.exists(_.contains("Join")), second)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(IceLite.read(spark, table).select("text").as[String].collect().toSet ==
+      (1 to 6).map(i => s"$i at 2000").toSet)
   }
 
   test("generator is deterministic and partitioning-independent") {

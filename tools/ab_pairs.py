@@ -4,15 +4,16 @@
     python3 tools/ab_pairs.py --parent <parent checkout> [--change <checkout>]
         [--workload ingest --workload table_serve] [--pairs 10] [--seed 101]
         [--log runs.jsonl]
-    python3 tools/ab_pairs.py --summarize runs.jsonl
+    python3 tools/ab_pairs.py --summarize runs.jsonl [more.jsonl ...]
 
 Pair k runs `perfbench/run.py --seed <seed + k> --trace 0` for the
 benchmark's `run_seconds` once in each checkout, the parent first on even k
 and the change first on odd k, and appends both result lines to the log
-(one JSON object per run). The summary
-gives, per workload and end-to-end metric of the change's BENCHMARK.json,
-each side's median and quartiles, the pairs the change won (ties count for
-neither side), whether a gain holds by the benchmark's rule (the change
+(one JSON object per run). A pair is keyed by its seed, so logs of
+batches with different `--seed`s pool into one summary (a seed run twice
+keeps its last pair). The summary gives, per workload and end-to-end
+metric of the change's BENCHMARK.json, each side's median and quartiles,
+the pairs the change won (ties count for neither side), whether a gain holds by the benchmark's rule (the change
 wins at least nine tenths of the pairs, and the medians differ by more than
 the parent's interquartile range), and the no-regression verdict against the
 metric's `bound`: WORSE when the change median is worse than the parent's by
@@ -101,8 +102,8 @@ def run_once(checkout, workload, seed, seconds):
 def summarize(runs, end_to_end):
     out = []
     for w in sorted({r["workload"] for r in runs}):
-        pairs = sorted({r["pair"] for r in runs if r["workload"] == w})
-        side = {(r["pair"], r["side"]): r for r in runs if r["workload"] == w}
+        pairs = sorted({r["seed"] for r in runs if r["workload"] == w})
+        side = {(r["seed"], r["side"]): r for r in runs if r["workload"] == w}
         done = [k for k in pairs if (k, "parent") in side and (k, "change") in side]
         bad = {s: sum(1 for k in done if side[(k, s)]["exit"] != 0
                       or side[(k, s)]["failed"] != 0 or not side[(k, s)]["correct"])
@@ -146,13 +147,17 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=101)
     ap.add_argument("--log", default="ab_pairs.jsonl")
-    ap.add_argument("--summarize", metavar="LOG", help="only summarise a log")
+    ap.add_argument("--summarize", metavar="LOG", nargs="+",
+                    help="only summarise these logs, pooled")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
     if a.summarize:
-        with open(a.summarize) as f:
-            print(summarize([json.loads(l) for l in f if l.strip()], bench["end_to_end"]))
+        runs = []
+        for log in a.summarize:
+            with open(log) as f:
+                runs += [json.loads(l) for l in f if l.strip()]
+        print(summarize(runs, bench["end_to_end"]))
         return
     if not a.parent:
         ap.error("--parent is required unless --summarize is given")

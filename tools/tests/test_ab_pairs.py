@@ -74,5 +74,47 @@ class VerdictTest(unittest.TestCase):
         self.assertEqual(ab_pairs.verdict(self.parent, wide_better, "higher", 0.15), "WORSE")
 
 
+class SummarizeTest(unittest.TestCase):
+    end_to_end = [{"name": "op_p50_ms", "better": "lower", "bound": 0.25}]
+
+    @staticmethod
+    def batch(seed, pairs, parent_ms, change_ms):
+        """The runs `--seed <seed> --pairs <pairs>` logs: pair k has seed + k."""
+        return [{"workload": "ingest", "pair": k, "seed": seed + k, "side": side,
+                 "exit": 0, "failed": 0, "correct": True,
+                 "metrics": {"op_p50_ms": ms}}
+                for k in range(pairs)
+                for side, ms in (("parent", parent_ms), ("change", change_ms))]
+
+    def test_batches_with_different_seeds_pool_their_pairs(self):
+        runs = self.batch(101, 4, 100.0, 90.0) + self.batch(201, 6, 100.0, 110.0)
+        out = ab_pairs.summarize(runs, self.end_to_end)
+        self.assertIn("ingest: 10 pairs", out)
+        self.assertIn("wins 4/10", out)
+
+    def test_summarize_reads_several_logs(self):
+        import json
+        import subprocess
+        import tempfile
+        logs = []
+        for seed, pairs in ((101, 4), (201, 6)):
+            f = tempfile.NamedTemporaryFile("w", suffix=".jsonl", delete=False)
+            f.write("".join(json.dumps(r) + "\n"
+                            for r in self.batch(seed, pairs, 100.0, 90.0)))
+            f.close()
+            logs.append(f.name)
+        try:
+            tools = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+            out = subprocess.run(
+                [sys.executable, os.path.join(tools, "ab_pairs.py"),
+                 "--change", os.path.dirname(tools), "--summarize"] + logs,
+                capture_output=True, text=True, check=True).stdout
+        finally:
+            for log in logs:
+                os.unlink(log)
+        self.assertIn("ingest: 10 pairs", out)
+        self.assertIn("wins 10/10", out)
+
+
 if __name__ == "__main__":
     unittest.main()
