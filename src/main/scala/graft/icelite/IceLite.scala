@@ -618,7 +618,8 @@ object IceLite {
     * (task, bucket) into a per-call staging dir; the files of SUCCESSFUL
     * task attempts move into `data/` as
     * `<epoch>-<token>-b<bucket>-<n>.parquet`, then the staging dir is
-    * deleted, also when the job fails. Nothing is visible until `commit`
+    * deleted, also when the job fails (once its last running task ended,
+    * see `BucketFileWriter.write`). Nothing is visible until `commit`
     * publishes the entries; a killed driver leaves orphans (staging dir
     * included) for `Maintenance.gcOrphans`.
     *

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Batch dedup: one winning event per key (SURVEY.md §2.4).
+/** Dedup: one winning event per key (SURVEY.md §2.4), for replay segments
+  * and streaming micro-batches alike.
   *
   * Semantics (BASELINE.json north_star): events are deduplicated by
   * `(url, warc_ts, event-offset)` and the LATEST event per url wins, under
@@ -36,31 +37,36 @@ object Dedup {
       .select(col("_w.*"))
   }
 
-  /** Winning event per url, payload-light variant for HIGH-DUPLICATION
-    * replays (a full binlog replay sees every historical version of every
-    * url — 10–100+ events per key), where [[latestPerKey]] would funnel
-    * the whole payload (html, ~KB/row) through a SortAggregate buffer.
+  /** Winning event per url, payload-light variant: a full binlog replay
+    * sees every historical version of every url (10–100+ events per key),
+    * where [[latestPerKey]] would funnel the whole payload (html, ~KB/row)
+    * through a SortAggregate buffer. A micro-batch takes the same path, so
+    * streaming and replay pick winners by one rule.
     * Same result as [[latestPerKey]] (identical win order; wire
     * duplicates are byte-identical copies, so either copy is the same
     * row).
     *
-    * Size-checked for batch replays: the winner set
-    * `(url → max (warc_ts, offset, partition))` is computed over four
-    * pruned fixed-width columns, checkpointed, and counted; when it fits
-    * (`maxBroadcastKeys`) the events are LEFT SEMI joined against an
-    * EXPLICIT broadcast of it — payloads are filtered in place, never
-    * sorted or shuffled before the merge. Otherwise falls back to the
+    * Size-checked: the winner set `(url → max (warc_ts, offset,
+    * partition))` is computed over pruned fixed-width columns, locally
+    * checkpointed, and counted; when it fits (`maxBroadcastKeys`) the
+    * events are LEFT SEMI joined against an EXPLICIT broadcast of it —
+    * payloads are filtered in place, never sorted or shuffled before the
+    * merge. Otherwise falls back to the
     * single-pass [[latestPerKey]] partial aggregation (whose shuffle is
     * already bounded by distinct keys per map task).
     *
     * Returns the winners and their [[Merge.BatchStats]] over `nBuckets`
-    * storage buckets, from the one job the size check runs over the
-    * checkpointed winner table — so the stats cost no extra job on either
-    * branch. Merge sizes the salted write from the winner count and
+    * storage buckets, per source partition, from the one job the size
+    * check runs over the winner table — so the stats cost no extra job on
+    * either branch. The winner table carries a delete flag as the last
+    * component of its version struct: equal `(warc_ts, offset, partition)`
+    * means byte-identical wire copies, so the flag never reorders distinct
+    * events. Merge sizes the salted write from the winner count and
     * prunes its read to the buckets: lane count should track per-bucket
     * volume and reducer parallelism, not a constant (a constant 4 salts
     * made a 20k-event CTAS open 256 parquet writers — 1.6 s of pure fixed
-    * cost, the dominant Amdahl term in the replay).
+    * cost, the dominant Amdahl term in the replay). A micro-batch's
+    * lineage and metrics read the per-partition winner and delete counts.
     *
     * Why explicit: the winner keys are FLATTENED to scalar columns (a
     * struct-typed join key is not hash-join-able — Catalyst would force a
@@ -71,21 +77,27 @@ object Dedup {
     */
   def latestPerKeyAdaptive(events: DataFrame, nBuckets: Int,
       maxBroadcastKeys: Long = 4000000L): (DataFrame, Merge.BatchStats) = {
-    val ver = struct(col("warc_ts"), col("offset"), col("partition"))
+    val ver = struct(col("warc_ts"), col("offset"), col("partition"),
+      (col("op") === "D").as("deleted"))
     // localCheckpoint, NOT cache(): cache() registers the frame in the
     // session-wide CacheManager, which holds it strongly — a per-batch
     // replay merge would leak one cached DataFrame per batch for the
     // session lifetime. Checkpoint blocks are owned by the RDD and freed
     // by the ContextCleaner as soon as the returned plan is unreferenced.
-    // Eager by default, so the stats job and the broadcast build both read
-    // the materialized blocks instead of re-running the aggregation.
+    // Lazy: the stats job fills the blocks, and the broadcast build reads
+    // them instead of re-running the aggregation.
     val winners = events.groupBy(col("url")).agg(max(ver).as("_ver"))
       .select(col("url").as("_wurl"), col("_ver.warc_ts").as("_wts"),
-        col("_ver.offset").as("_woff"), col("_ver.partition").as("_wpart"))
-      .localCheckpoint()
-    val r = winners.select(Merge.batchStatsCols(col("_wurl"), nBuckets): _*)
-      .collect().head
-    val stats = Merge.BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
+        col("_ver.offset").as("_woff"), col("_ver.partition").as("_wpart"),
+        col("_ver.deleted").as("_wdel"))
+      .localCheckpoint(eager = false)
+    val rows = winners.groupBy(col("_wpart"))
+      .agg(count_if(col("_wdel")).as("deletes"),
+        Merge.batchStatsCols(col("_wurl"), nBuckets): _*)
+      .collect()
+    val stats = Merge.BatchStats(rows.flatMap(_.getSeq[Int](2)).toSet,
+      rows.map(_.getLong(3)).sum,
+      rows.map(r => r.getInt(0) -> (r.getLong(3), r.getLong(1))).toMap)
     if (stats.winners <= maxBroadcastKeys) {
       // null-safe equality (<=>): a winning event with a NULL version
       // component must still match itself, exactly as latestPerKey keeps

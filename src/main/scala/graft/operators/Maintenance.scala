@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   *    bucket per epoch; thousands of epochs → small-file explosion. Rewrite
   *    buckets whose file count exceeds a threshold into one file set.
   *  - [[expireTombstones]]: deletes are retained as tombstones so a delete
-  *    masks later-arriving OLDER events. Once the event-time watermark has
-  *    passed a tombstone's warc_ts by more than the source's maximum
-  *    disorder, no masked event can still arrive — the tombstone is dead
-  *    weight and can be dropped.
+  *    masks later-arriving OLDER events. Once the newest applied event
+  *    time has passed a tombstone's warc_ts by more than the source's
+  *    maximum disorder, no masked event can still arrive — the tombstone
+  *    is dead weight and can be dropped.
   *  - [[expireSnapshots]]: every commit keeps superseded data files
   *    reachable for time travel; expiration deletes metadata versions older
   *    than the retained window plus any data file only they reference.
@@ -73,7 +73,10 @@ object Maintenance {
   /** Drop tombstones whose event time is older than `olderThan`.
     * CONTRACT: only safe when `olderThan` is at least the source's maximum
     * event-time disorder behind the newest applied event — a masked late
-    * arrival after that would resurrect a deleted url.
+    * arrival after that would resurrect a deleted url. No watermark
+    * enforces the bound: the pipeline keeps no streaming state and merges
+    * an event however late it arrives, so the bound is the source's own
+    * (for the synthetic ledger, `Ledger.Config.outOfOrderLagMs`).
     */
   def expireTombstones(spark: SparkSession, dir: String, epochKey: String,
       olderThan: java.sql.Timestamp): Long = IceLite.retryOnConflict {

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *    The "which rows might match" question is answered by metadata
   *    (O(buckets) on the driver), not by a 100 TB scan.
   *  - **Dedup before join.** The change side entering the join is one row
-  *    per url (post `Dedup.latestPerKey`), so the merge join's change side
-  *    is bounded by distinct keys per batch, not by event volume.
+  *    per url (post `Dedup.latestPerKeyAdaptive`, for replay segments and
+  *    micro-batches alike), so the merge join's change side is bounded by
+  *    distinct keys per batch, not by event volume.
   *  - **Late data is a merge CONDITION, not an assumption.** A change
   *    applies only if its `(warc_ts, offset, partition)` exceeds the stored
   *    row's; deletes leave tombstones so a later-arriving OLDER event can
@@ -45,10 +46,12 @@ import org.apache.spark.sql.functions._
 object Merge {
 
   /** What a caller that already deduplicated a batch to one winner per
-    * url knows about it: the storage buckets the winners hash to, and how
-    * many winners there are.
+    * url knows about it: the storage buckets the winners hash to, how
+    * many winners there are, and per source partition, its winners and
+    * how many of them are deletes.
     */
-  case class BatchStats(buckets: Set[Int], winners: Long)
+  case class BatchStats(buckets: Set[Int], winners: Long,
+      partitions: Map[Int, (Long, Long)] = Map.empty)
 
   /** The aggregates a [[BatchStats]] is built from, over a batch's winners:
     * the one rule for which buckets a batch rewrites.
@@ -89,11 +92,9 @@ object Merge {
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
 
-    // the batch-replay entrance sees the FULL version history per url —
-    // use the payload-light winner-filter dedup there; streaming
-    // micro-batches arrive deduped (low duplication, one-pass max_by in
-    // Pipeline)
-    val (winners, BatchStats(affected, applied)) = deduped match {
+    // a replay segment arrives raw (the FULL version history per url);
+    // a micro-batch arrives as Pipeline's winners of the same dedup
+    val (winners, BatchStats(affected, applied, _)) = deduped match {
       case Some(stats) => (changes, stats)
       case None => Dedup.latestPerKeyAdaptive(changes, nBuckets)
     }

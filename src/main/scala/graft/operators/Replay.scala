@@ -30,8 +30,7 @@ object Replay {
     }
     val raw = Ledger.scan(spark, ledgerDir)
     dlqDir.foreach { dq =>
-      IceLite.append(spark, dq, s"$epochPrefix.dlq",
-        Validate.invalid(raw).dropDuplicates("partition", "offset"))
+      IceLite.append(spark, dq, s"$epochPrefix.dlq", Validate.invalid(raw))
     }
     val events = Validate.valid(raw)
     // total order across partitions: (offset, partition) lexicographic —

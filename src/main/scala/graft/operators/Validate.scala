@@ -24,10 +24,11 @@ object Validate {
   def valid(events: DataFrame): DataFrame = events.filter(isValid)
 
   /** Invalid events in the sidecar `_dlq` shape (FIXTURES.md §B.3):
-    * source position + a raw rendering + the reason.
+    * source position + a raw rendering + the reason, one row per position
+    * (wire copies of a malformed event are identical).
     */
   def invalid(events: DataFrame): DataFrame =
-    events.filter(!isValid).select(
+    events.filter(!isValid).dropDuplicates("partition", "offset").select(
       col("partition"), col("offset"),
       to_json(struct(col("op"), col("url"), col("warc_ts"), col("lang"),
         col("alterJson"))).as("raw"),

@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -26,11 +26,14 @@ import org.apache.spark.util.{SerializableConfiguration, Utils}
 object BucketFileWriter {
 
   private val BucketCol = "_bucket"
+  private val SettleMs = 30000L
 
   /** Write `df` minus its `_bucket` column under `dir` as
     * `p<partition>-a<attempt>-b<bucket>.parquet`; returns `(path, bucket,
     * rows)` per file of each SUCCESSFUL task attempt. A null bucket fails
-    * the task with an error naming `epochKey`.
+    * the task with an error naming `epochKey`. A failed write throws only
+    * once no task of its job still runs (for at most `SettleMs`), so the
+    * caller can delete `dir` without a late task recreating it.
     */
   def write(df: DataFrame, dir: String,
       epochKey: String): Seq[(String, Int, Long)] = {
@@ -78,8 +81,30 @@ object BucketFileWriter {
       m.setRecordsWritten(out.map(_._3).sum)
       out.toArray
     }
-    SQLExecution.withNewExecutionId(ds.queryExecution) {
-      spark.sparkContext.runJob(ds.queryExecution.toRdd, task _).flatten.toSeq
-    }
+    val sc = spark.sparkContext
+    val tag = s"icelite-write-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try SQLExecution.withNewExecutionId(ds.queryExecution) {
+      sc.runJob(ds.queryExecution.toRdd, task _).flatten.toSeq
+    } catch {
+      case e: Throwable => awaitTasks(sc, tag); throw e
+    } finally sc.removeJobTag(tag)
+  }
+
+  /** Wait, at most `SettleMs`, until no task of a job tagged `tag` runs.
+    * A failed job's other tasks can outlive `runJob`'s throw (the kill
+    * interrupts them, but not uninterruptible work) and still open files
+    * under the job's directory. The listener bus is
+    * drained first, so the status store has seen every task the job
+    * launched before the failure.
+    */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val deadline = System.currentTimeMillis() + SettleMs
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    try sc.listenerBus.waitUntilEmpty(SettleMs)
+    catch { case _: java.util.concurrent.TimeoutException => }
+    while (running && System.currentTimeMillis() < deadline) Thread.sleep(10)
   }
 }

@@ -373,6 +373,47 @@ class IceLiteSpec extends SparkTestBase {
       .count() == 0, "no staged file or staging dir survives the failure")
   }
 
+  test("stageFiles: a write that fails while another task still stages a " +
+      "file leaves nothing under data/") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    val dir = tmpDir("iceslow")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    // partition 0 fails at once on a null _bucket; partition 1 stalls
+    // after the sort (the writer's own sort is redundant here), ignoring
+    // the kill's interrupt like a task in uninterruptible work, so its
+    // first file opens after the job failed
+    val stall = udf { (html: Array[Byte], p: Int) =>
+      val end = System.nanoTime() + 1500000000L
+      while (p == 1 && System.nanoTime() < end) {
+        try Thread.sleep(50) catch { case _: InterruptedException => }
+      }
+      html
+    }
+    val rows = mkRows(8).coalesce(2)
+      .withColumn("_bucket", when(spark_partition_id() === 0,
+        lit(null).cast(IntegerType)).otherwise(col("_bucket")))
+      .sortWithinPartitions("_bucket")
+      .withColumn("html", stall(col("html"), spark_partition_id()))
+    // both tasks of the write's job ended (tasks an earlier test left
+    // running belong to other stages)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.CountDownLatch(2)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) ended.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Exception](IceLite.stageFiles(dir, "slow.1", rows, 1))
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir, "data"))
+      .count() == 0, "no staged file or staging dir survives the failure")
+  }
+
   test("stageFiles never overwrites a staged file: two calls under one " +
       "epoch key leave the first call's files at their paths, byte for byte") {
     import java.nio.file.{Files, Paths}

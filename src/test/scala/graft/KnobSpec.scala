@@ -5,11 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** No engine knobs: environment variables are read only by the entry
   * mains that run the engine (`Bench`, `Verify`, `Demo`, `Profile`). A
   * library path that reads the environment is a setting no caller can
-  * see or test; engine settings are arguments or `Config` fields.
+  * see or test; engine settings are arguments or `Config` fields. The
+  * same source scan also keeps the engine free of cached Datasets.
   */
 class KnobSpec extends AnyFunSuite {
 
@@ -17,11 +19,13 @@ class KnobSpec extends AnyFunSuite {
     Set("Bench.scala", "Verify.scala", "Demo.scala", "Profile.scala")
       .map(n => Paths.get("graft", n))
   private val EnvRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
+  private val Cached = """\.cache\(\)|\.persist\(""".r
+  private val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
   /** (file under `root`, line number, line) of every non-comment line
-    * that reads the environment.
+    * that matches `pattern`.
     */
-  private def envReads(root: Path): Seq[(Path, Int, String)] = {
+  private def matches(pattern: Regex): Seq[(Path, Int, String)] = {
     val walk = Files.walk(root)
     val files =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
@@ -29,7 +33,7 @@ class KnobSpec extends AnyFunSuite {
     files.flatMap { f =>
       Files.readAllLines(f).asScala.zipWithIndex.collect {
         case (l, i) if !l.trim.matches("""(//|/?\*).*""") &&
-            EnvRead.findFirstIn(l).nonEmpty =>
+            pattern.findFirstIn(l).nonEmpty =>
           (root.relativize(f), i + 1, l.trim)
       }
     }
@@ -37,13 +41,21 @@ class KnobSpec extends AnyFunSuite {
 
   test("no environment read under src/main/scala outside the entry mains " +
       "(Bench, Verify, Demo, Profile)") {
-    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
     assert(Files.isDirectory(root), s"$root")
-    val reads = envReads(root)
+    val reads = matches(EnvRead)
     // the scan sees the reads it is meant to allow
     assert(reads.exists(_._1 == Paths.get("graft", "Bench.scala")))
     val knobs = reads.filterNot(r => entryMains(r._1))
     assert(knobs.isEmpty,
       knobs.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n"))
+  }
+
+  test("no Dataset is cached under src/main/scala: cache() and persist() " +
+      "pin the frame in the session-wide CacheManager for the session's " +
+      "life, while a local checkpoint is freed with its plan") {
+    assert(Files.isDirectory(root), s"$root")
+    val cached = matches(Cached)
+    assert(cached.isEmpty,
+      cached.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n"))
   }
 }

@@ -1,9 +1,15 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.icelite.IceLite
+import graft.model.ChangeEvent
 import graft.operators.{Equivalence, Replay}
 import graft.sources.Ledger
 import graft.streaming.Pipeline
+import graft.util.Det
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
@@ -49,11 +55,94 @@ class PipelineSpec extends SparkTestBase {
     val lineage = IceLite.read(spark, s"$work/_lineage")
     val metrics = IceLite.read(spark, s"$work/_metrics")
     assert(lineage.count() > 0 && metrics.count() > 0)
-    // wire duplicates are removed by the watermarked dedup BEFORE
-    // foreachBatch, so events_in counts each unique data event exactly once
-    val evIn = metrics.agg(sum("events_in")).head.getLong(0)
-    assert(evIn == cfg.nEvents - cfg.alterAt.size,
-      s"metrics events_in=$evIn == unique data events")
+  }
+
+  test("streaming == replay when event-time disorder is 4 hours") {
+    val cfg = Ledger.Config(seed = 13L, nEvents = 2400, nDomains = 40,
+      pagesPerDomain = 40, partitions = 2, segments = 4,
+      outOfOrderLagMs = 4 * 3600 * 1000)
+    val ledger = mkLedger("pl6_ledger", cfg)
+    val work = tmpDir("pl6_work")
+    Pipeline.runToCompletion(spark, pipeCfg(work, ledger))
+    assert(IceLite.read(spark, s"$work/_metrics").count() > 1, "several batches")
+    val batchTable = tmpDir("pl6_batch")
+    Replay.full(spark, ledger, batchTable, nBuckets = 8)
+    val d = Equivalence.diff(IceLite.read(spark, s"$work/pages"),
+      IceLite.read(spark, batchTable))
+    assert(d.isEmpty, s"diff rows: ${d.collect().take(5).mkString("\n")}")
+  }
+
+  /** Write `events` as one parquet file `name` into `ledger`, its mtime
+    * `k` seconds after the previous file's, so the file source reads the
+    * files in `k` order.
+    */
+  private def ledgerFile(ledger: String, name: String, k: Int,
+      events: Seq[ChangeEvent]): Unit = {
+    import spark.implicits._
+    val tmp = tmpDir("pl_file")
+    events.toDS().coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = Files.list(Paths.get(tmp)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val dst = Paths.get(ledger, name)
+    Files.move(part, dst)
+    dst.toFile.setLastModified(System.currentTimeMillis() - 3600000L + k * 1000L)
+  }
+
+  test("an ALTER a later batch re-delivers is a no-op: table and schema " +
+      "equal the replay's") {
+    val alterAt = 150L
+    val cfg = Ledger.Config(seed = 17L, nEvents = 400, nDomains = 10,
+      pagesPerDomain = 8, partitions = 1, duplicateRate = 0.0,
+      alterAt = Map(alterAt -> Ledger.addColumnJson("fetch_ms", "long")))
+    val cdf = Det.zipfCdf(cfg.nDomains, cfg.zipfSkew)
+    def ev(i: Long) = Ledger.makeEvent(cfg, cdf, i)
+    val ledger = tmpDir("pl7_ledger")
+    ledgerFile(ledger, "f0.parquet", 0, (0L until 200L).map(ev))
+    // the second file re-delivers the ALTER with newer events
+    ledgerFile(ledger, "f1.parquet", 1, ev(alterAt) +: (200L until 400L).map(ev))
+    val work = tmpDir("pl7_work")
+    Pipeline.runToCompletion(spark,
+      pipeCfg(work, ledger).copy(maxFilesPerTrigger = 1))
+    val batchTable = tmpDir("pl7_batch")
+    Replay.full(spark, ledger, batchTable, nBuckets = 8)
+    def schema(t: String) = IceLite.load(t).currentSchema
+    assert(schema(s"$work/pages") == schema(batchTable))
+    assert(schema(batchTable).fields.map(_.name).contains("fetch_ms"))
+    assert(Equivalence.diff(IceLite.read(spark, s"$work/pages"),
+      IceLite.read(spark, batchTable)).isEmpty)
+  }
+
+  test("a batch counts and covers the positions it delivers, also one an " +
+      "earlier batch delivered") {
+    val cfg = Ledger.Config(seed = 19L, nEvents = 20, nDomains = 4,
+      pagesPerDomain = 4, partitions = 1, duplicateRate = 0.0)
+    val cdf = Det.zipfCdf(cfg.nDomains, cfg.zipfSkew)
+    def ev(i: Long) = Ledger.makeEvent(cfg, cdf, i)
+    // a malformed event, for the dead-letter table
+    val bad = ChangeEvent(1, 0L, "U", null, new java.sql.Timestamp(0L), null,
+      null, null, Map.empty)
+    val ledger = tmpDir("pl8_ledger")
+    ledgerFile(ledger, "f0.parquet", 0, bad +: (0L until 10L).map(ev))
+    // file 2 re-delivers position 3 of file 1, and positions 12 and the
+    // malformed one twice
+    ledgerFile(ledger, "f1.parquet", 1,
+      Seq(ev(3), ev(12), bad, bad) ++ (10L until 15L).map(ev))
+    val work = tmpDir("pl8_work")
+    Pipeline.runToCompletion(spark, pipeCfg(work, ledger)
+      .copy(maxFilesPerTrigger = 1, dlqDir = Some(s"$work/_dlq")))
+    def rows(t: String, cols: String*) =
+      IceLite.read(spark, s"$work/$t").orderBy("epoch_id").select(cols.map(col): _*)
+        .collect().map(_.toSeq).toSeq
+    assert(rows("_metrics", "epoch_id", "events_in") ==
+      Seq(Seq(0L, 10L), Seq(1L, 6L)))
+    assert(rows("_lineage", "epoch_id", "partition", "min_offset", "max_offset") ==
+      Seq(Seq(0L, 0, 0L, 9L), Seq(1L, 0, 3L, 14L)))
+    // one dead-letter row per batch that delivered the malformed position
+    assert(IceLite.read(spark, s"$work/_dlq").count() == 2)
+    val batchTable = tmpDir("pl8_batch")
+    Replay.full(spark, ledger, batchTable, nBuckets = 8)
+    assert(Equivalence.diff(IceLite.read(spark, s"$work/pages"),
+      IceLite.read(spark, batchTable)).isEmpty)
   }
 
   test("lineage offset ranges cover each partition without gaps or overlaps") {
@@ -136,13 +225,15 @@ class PipelineSpec extends SparkTestBase {
       pagesPerDomain = 8, partitions = 2, segments = 4,
       duplicateRate = 0.08, deleteRate = 0.05)
     val ledger = mkLedger("pl5_ledger", cfg)
-    val wWm = tmpDir("pl5_wm")
-    Pipeline.runToCompletion(spark, pipeCfg(wWm, ledger))
-    // events_in is counted AFTER dedup: exactly the wire duplicates are
-    // dropped, batch boundaries notwithstanding
-    val evIn = IceLite.read(spark, s"$wWm/_metrics")
-      .agg(sum("events_in")).head.getLong(0)
-    assert(evIn == cfg.nEvents, "every unique event passed exactly once")
+    val work = tmpDir("pl5_work")
+    // one batch: events_in counts its distinct positions, so each wire
+    // duplicate collapses into the event it copies
+    Pipeline.runToCompletion(spark,
+      pipeCfg(work, ledger).copy(maxFilesPerTrigger = 1000))
+    val metrics = IceLite.read(spark, s"$work/_metrics")
+    assert(metrics.count() == 1, "one batch")
+    val evIn = metrics.agg(sum("events_in")).head.getLong(0)
+    assert(evIn == cfg.nEvents, "every unique event counted exactly once")
   }
 
   test("kill before any commit of a batch: restart replays it exactly once") {
