@@ -76,7 +76,8 @@ object Merge {
   val versionFieldId = 2
 
   /** Apply one change batch to the table. `changes` is envelope-shaped with
-    * op ∈ {I,U,D} (ALTERs are handled by SchemaEvolution before this).
+    * op ∈ {I,U,D} (ALTERs are handled by `Replay.applySlice`, which
+    * commits each one before or after this segment's merge).
     * `deduped` = Some when `changes` is already one winner per url and the
     * caller counted it; otherwise the dedup's own size check counts it.
     * Only the buckets the batch's winners hash to are read and replaced,
@@ -92,8 +93,8 @@ object Merge {
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
 
-    // a replay segment arrives raw (the FULL version history per url);
-    // a micro-batch arrives as Pipeline's winners of the same dedup
+    // `Replay.applySlice` passes winners and their stats; a caller without
+    // them passes raw events (the FULL version history per url)
     val (winners, BatchStats(affected, applied, _)) = deduped match {
       case Some(stats) => (changes, stats)
       case None => Dedup.latestPerKeyAdaptive(changes, nBuckets)

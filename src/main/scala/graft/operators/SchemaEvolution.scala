@@ -102,19 +102,12 @@ object SchemaEvolution {
     Schema(newSchemaId, fields)
   }
 
-  /** Programmatic addColumn (the SQL MERGE WITH SCHEMA EVOLUTION path):
-    * same metadata-only commit as the wire-format ALTER, with the column
-    * type rendered through its SQL DDL form (round-trips via
-    * [[parseType]]'s `DataType.fromDDL` fallback for complex types).
+  /** Whether an ALTER adds a column: no event before it carries a value
+    * for the new column, so `Replay.applySlice` commits it ahead of the
+    * merge of the segment that holds it.
     */
-  def addColumn(tableDir: String, name: String, dataType: DataType,
-      epochKey: String): Unit = {
-    val json = JsonMethods.compact(JsonMethods.render(JObject(
-      "addColumn" -> JObject(
-        "name" -> JString(name),
-        "type" -> JString(dataType.sql)))))
-    apply(tableDir, json, epochKey)
-  }
+  def addsColumn(alterJson: String): Boolean =
+    (JsonMethods.parse(alterJson) \ "addColumn").isInstanceOf[JObject]
 
   /** Apply an ALTER to the table as a metadata-only commit. */
   def apply(tableDir: String, alterJson: String, epochKey: String): Unit = {

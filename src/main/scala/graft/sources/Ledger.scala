@@ -123,18 +123,18 @@ object Ledger {
     sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Generate the full event sequence (base events + injected wire
-    * duplicates) as a Dataset. Duplicates replicate an earlier event
-    * byte-for-byte (same partition/offset/payload) — at-least-once wire.
+  /** Events at global indices `[lo, hi)` plus the wire duplicates
+    * re-delivered at those indices. A duplicate replicates an earlier event
+    * byte-for-byte (same partition/offset/payload), possibly one before
+    * `lo` — at-least-once wire.
     */
-  def events(spark: SparkSession, cfg: Config): Dataset[ChangeEvent] = {
+  private def indexRange(spark: SparkSession, cfg: Config, lo: Long,
+      hi: Long): Dataset[ChangeEvent] = {
     import spark.implicits._
     val cdf = Det.zipfCdf(cfg.nDomains, cfg.zipfSkew)
-    val base = spark.range(0, cfg.nEvents, 1,
-      math.max(1, spark.sparkContext.defaultParallelism))
-      .map(i => makeEvent(cfg, cdf, i))
-    val dups = spark.range(1, cfg.nEvents, 1,
-      math.max(1, spark.sparkContext.defaultParallelism))
+    val slices = math.max(1, spark.sparkContext.defaultParallelism)
+    val base = spark.range(lo, hi, 1, slices).map(i => makeEvent(cfg, cdf, i))
+    val dups = spark.range(math.max(1, lo), hi, 1, slices)
       .filter(i => Det.uniform(cfg.seed, i, 5) < cfg.duplicateRate)
       .map { i =>
         val back = 1 + Det.uniformInt(cfg.seed, i, 6, 64)
@@ -143,31 +143,24 @@ object Ledger {
     base.union(dups)
   }
 
+  /** The full event sequence (base events + injected wire duplicates) as
+    * a Dataset: the rows [[synthesize]] writes.
+    */
+  def events(spark: SparkSession, cfg: Config): Dataset[ChangeEvent] =
+    indexRange(spark, cfg, 0, cfg.nEvents)
+
   /** Write the ledger as `segments` parquet appends in global-index order so
-    * file mod-times reproduce stream order for the file source. Returns the
+    * file mod-times reproduce stream order for the file source; a
+    * duplicate lands in the segment of its re-delivery index. Returns the
     * ledger directory.
     */
   def synthesize(spark: SparkSession, cfg: Config, dir: String): String = {
-    import spark.implicits._
-    val cdf = Det.zipfCdf(cfg.nDomains, cfg.zipfSkew)
     val per = math.max(1L, (cfg.nEvents + cfg.segments - 1) / cfg.segments)
     var k = 0L
     while (k < cfg.segments && k * per < cfg.nEvents) {
       val lo = k * per
-      val hi = math.min(cfg.nEvents, lo + per)
-      val base = spark.range(lo, hi, 1,
-        math.max(1, spark.sparkContext.defaultParallelism))
-        .map(i => makeEvent(cfg, cdf, i))
-      // duplicates are injected into the segment of their *re-delivery*
-      // position i, replaying an earlier event (possibly a prior segment's).
-      val dups = spark.range(math.max(1, lo), hi, 1,
-        math.max(1, spark.sparkContext.defaultParallelism))
-        .filter(i => Det.uniform(cfg.seed, i, 5) < cfg.duplicateRate)
-        .map { i =>
-          val back = 1 + Det.uniformInt(cfg.seed, i, 6, 64)
-          makeEvent(cfg, cdf, math.max(0, i - back))
-        }
-      base.union(dups).toDF().write.mode("append").parquet(dir)
+      indexRange(spark, cfg, lo, math.min(cfg.nEvents, lo + per))
+        .toDF().write.mode("append").parquet(dir)
       k += 1
     }
     dir

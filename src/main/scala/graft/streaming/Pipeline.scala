@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.icelite.IceLite
 import graft.model.Model
-import graft.operators.{Dedup, Merge, SchemaEvolution, Validate}
+import graft.operators.{Replay, Validate}
 import graft.sources.Ledger
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,19 +21,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - BEFORE a batch runs, Structured Streaming writes the offsets WAL in
   *    `checkpointDir` — the source-side bookkeeping.
   *  - INSIDE the batch, every effect is an idempotent IceLite commit keyed
-  *    by a deterministic epoch key: the table merge, lineage append and
-  *    metrics append by the batch id (`stream.<epochId>`), each ALTER by
-  *    its ledger position (`stream.alter.<offset>-<partition>`, as in
-  *    `Replay.full`, so a re-delivered ALTER no-ops). A crash anywhere
-  *    between the two WALs re-runs the batch on restart; committed epochs
-  *    no-op, missing ones complete. No duplicates, no gaps.
+  *    by a deterministic epoch key. The batch is one slice of
+  *    `Replay.applySlice`, the replay's own routine: its first segment
+  *    merges as `stream.<epochId>`, a segment that a rename, drop or widen
+  *    opens as `stream.<epochId>.<k>`, and each ALTER commits by its
+  *    ledger position (`stream.alter.<offset>-<partition>`, so a
+  *    re-delivered ALTER no-ops). Lineage and metrics append by the batch
+  *    id (`stream.<epochId>`). A crash anywhere between the two WALs
+  *    re-runs the batch on restart; committed epochs no-op, missing ones
+  *    complete. No duplicates, no gaps.
   *  - ACROSS batches, the conditional merge is the dedup: an event the
   *    wire re-delivers never beats its stored copy (equal `(warc_ts,
   *    offset, partition)` is not fresher) and tombstones mask older
-  *    events, so no state store sits in front of it. A batch picks its
-  *    winners with the replay's `Dedup.latestPerKeyAdaptive`, and the
-  *    final table equals a replay's for any disorder and any batch
-  *    boundaries.
+  *    events, so no state store sits in front of it. A batch splits at
+  *    its ALTERs and picks each segment's winners exactly as a replay
+  *    does, so the final table equals a replay's for any disorder, any
+  *    ALTER kind and any batch boundaries.
   *
   * Input accounting is at-least-once, like a Kafka sink's records-read
   * counter: a batch's `events_in` counts the distinct `(partition,
@@ -41,8 +44,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * partition spans the positions it delivered, its winner counts
   * (`rows_applied`, `rows_upserted`, `rows_deleted`) are over those
   * events, and its dead-letter rows hold each malformed position it
-  * delivered once. A position a later batch re-delivers counts there
-  * again; the table is unaffected, because the merge rejects the copy.
+  * delivered once. The winner counts sum the batch's segments: a batch
+  * that a rename, drop or widen splits counts a url once per segment it
+  * wins in, as the replay's segments do; an add does not split it. A
+  * position a later batch re-delivers counts there again; the table is
+  * unaffected, because the merge rejects the copy.
   * Counts are a pure function of batch content, so a crashed batch's
   * rerun reports the same rows.
   */
@@ -81,9 +87,10 @@ object Pipeline {
       .start()
   }
 
-  /** One micro-batch: ALTERs first (in global order), then one conditional
-    * MERGE of the data events, then lineage + metrics sidecar commits —
-    * each an independently idempotent epoch.
+  /** One micro-batch: its slice of the ledger through
+    * `Replay.applySlice` (the replay's ALTER rule, winners and merge), then
+    * lineage + metrics sidecar commits — each an independently idempotent
+    * epoch.
     */
   def processBatch(spark: SparkSession, cfg: Config, df: DataFrame,
       epochId: Long): Unit = {
@@ -116,41 +123,38 @@ object Pipeline {
         collect_set(when(isAlter, struct(off, col("alterJson")))))
       .collect()
     val ranges = book.filter(_.getLong(3) > 0)
-
-    // 2. schema evolution, in ledger order, each ALTER keyed by its position
-    val alters = book.flatMap(r => r.getSeq[Row](4)
-      .map(a => (a.getLong(0), r.getInt(0), a.getString(1))))
-    alters.sortBy(a => (a._1, a._2)).foreach { case (o, p, json) =>
-      SchemaEvolution(cfg.tableDir, json, s"stream.alter.$o-$p")
-    }
+    val alters = book.toSeq.flatMap(r => r.getSeq[Row](4)
+      .map(a => ((a.getLong(0), r.getInt(0)), a.getString(1)))).sortBy(_._1)
     val eventsIn = ranges.map(_.getLong(3)).sum
-    if (eventsIn == 0) return // nothing to commit; replay-safe no-op
+    if (eventsIn == 0 && alters.isEmpty) return // replay-safe no-op
 
-    // 3. the replay's winners (their stats job is the dedup's own), then
-    //    the conditional merge, sized by those stats
-    val (winners, stats) = Dedup.latestPerKeyAdaptive(okEvents.filter(!isAlter),
-      IceLite.load(cfg.tableDir).numBuckets)
+    // 2. the replay's slice routine: segment 0 merges as stream.<epochId>,
+    //    the segments a rename, drop or widen opens as stream.<epochId>.<k>
     inject("beforeMerge")
-    val snapshotId = Merge(spark, cfg.tableDir, winners, s"stream.$epochId",
-      cfg.nSalts, Some(stats)).snapshotId
+    val segs = Replay.applySlice(spark, cfg.tableDir, okEvents, alters,
+      k => if (k == 0) s"stream.$epochId" else s"stream.$epochId.$k",
+      "stream.alter", cfg.nSalts)
     inject("afterMerge")
+    if (eventsIn == 0) return // an ALTER-only batch: nothing to report
 
-    // 4. lineage: one row per source partition of this batch; the
+    // 3. lineage: one row per source partition of this batch; the
     //    locally built frames are coalesced to one file per commit
     import spark.implicits._
+    val parts = segs.flatMap(_.partitions.toSeq)
+    def applied(p: Int) = parts.collect { case (`p`, (w, _)) => w }.sum
+    val snapshotId = IceLite.load(cfg.tableDir).snapshotId
     val lineageDf = ranges.map { r =>
-      (epochId, r.getInt(0), r.getLong(1), r.getLong(2),
-        stats.partitions.get(r.getInt(0)).fold(0L)(_._1), snapshotId,
-        new java.sql.Timestamp(System.currentTimeMillis()))
+      (epochId, r.getInt(0), r.getLong(1), r.getLong(2), applied(r.getInt(0)),
+        snapshotId, new java.sql.Timestamp(System.currentTimeMillis()))
     }.toSeq.toDF("epoch_id", "partition", "min_offset", "max_offset",
       "rows_applied", "snapshot_id", "commit_ts").coalesce(1)
     IceLite.append(spark, cfg.lineageDir, s"stream.$epochId", lineageDf)
     inject("afterLineage")
 
-    // 5. throughput metrics: one row per batch
-    val dels = stats.partitions.values.map(_._2).sum
+    // 4. throughput metrics: one row per batch
+    val dels = parts.map(_._2._2).sum
     val batchMs = (System.nanoTime() - t0) / 1000000L
-    val metricsDf = Seq((epochId, eventsIn, stats.winners - dels, dels,
+    val metricsDf = Seq((epochId, eventsIn, segs.map(_.winners).sum - dels, dels,
       batchMs, if (batchMs > 0) eventsIn * 1000.0 / batchMs else 0.0))
       .toDF("epoch_id", "events_in", "rows_upserted", "rows_deleted",
         "batch_ms", "events_per_sec").coalesce(1)

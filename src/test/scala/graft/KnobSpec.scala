@@ -11,7 +11,8 @@ import scala.util.matching.Regex
   * mains that run the engine (`Bench`, `Verify`, `Demo`, `Profile`). A
   * library path that reads the environment is a setting no caller can
   * see or test; engine settings are arguments or `Config` fields. The
-  * same source scan also keeps the engine free of cached Datasets.
+  * same source scan also keeps the engine free of cached Datasets and
+  * keeps every ALTER commit on the replay's slice routine.
   */
 class KnobSpec extends AnyFunSuite {
 
@@ -20,6 +21,9 @@ class KnobSpec extends AnyFunSuite {
       .map(n => Paths.get("graft", n))
   private val EnvRead = """\bsys\.env\b|\bSystem\.getenv\b""".r
   private val Cached = """\.cache\(\)|\.persist\(""".r
+  private val AlterCall = """\bSchemaEvolution(\.apply)?\(""".r
+  private val alterPath = Set("Replay.scala", "SchemaEvolution.scala")
+    .map(n => Paths.get("graft", "operators", n))
   private val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
   /** (file under `root`, line number, line) of every non-comment line
@@ -48,6 +52,18 @@ class KnobSpec extends AnyFunSuite {
     val knobs = reads.filterNot(r => entryMains(r._1))
     assert(knobs.isEmpty,
       knobs.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n"))
+  }
+
+  test("ALTERs commit only through Replay.applySlice: no call of " +
+      "SchemaEvolution(...) under src/main/scala outside Replay and " +
+      "SchemaEvolution, so a replay and a micro-batch share one ALTER rule") {
+    assert(Files.isDirectory(root), s"$root")
+    val calls = matches(AlterCall)
+    // the scan sees the call it is meant to allow
+    assert(calls.exists(_._1 == Paths.get("graft", "operators", "Replay.scala")))
+    val stray = calls.filterNot(c => alterPath(c._1))
+    assert(stray.isEmpty,
+      stray.map { case (f, n, l) => s"$f:$n: $l" }.mkString("\n"))
   }
 
   test("no Dataset is cached under src/main/scala: cache() and persist() " +

@@ -112,6 +112,73 @@ class PipelineSpec extends SparkTestBase {
       IceLite.read(spark, batchTable)).isEmpty)
   }
 
+  test("stream == replay when a batch holds an add, a rename, and a drop " +
+      "plus re-add of extension columns, for one batch and one per file") {
+    // one partition: the position is the offset. Extension columns:
+    // a (string) added at 10 and renamed to c at 30; b (string) added at 20
+    // and dropped at 40; a new b (int) added at 50
+    val alters = Seq(10L -> Ledger.addColumnJson("a", "string"),
+      20L -> Ledger.addColumnJson("b", "string"),
+      30L -> """{"renameColumn":{"from":"a","to":"c"}}""",
+      40L -> """{"dropColumn":{"name":"b"}}""",
+      50L -> Ledger.addColumnJson("b", "int"))
+    // `extra` under the names in force at position `off`
+    def extraAt(off: Long, url: String): Map[String, String] =
+      Seq((off > 10) -> ((if (off < 30) "a" else "c") -> s"$url@$off"),
+        (off > 20 && off < 40) -> ("b" -> s"old@$off"),
+        (off > 50) -> ("b" -> (off * 7).toString)).collect { case (true, kv) => kv }.toMap
+    def ev(off: Long, url: String, op: String = "U", ts: Long = -1L) =
+      ChangeEvent(0, off, op, url,
+        new java.sql.Timestamp(1000L * (if (ts < 0) off else ts)),
+        if (op == "D") null else s"<p>$url at $off</p>".getBytes("UTF-8"),
+        "en", null, extraAt(off, url))
+    def alter(off: Long) = ChangeEvent(0, off, "ALTER", null,
+      new java.sql.Timestamp(1000L * off), null, null, alters.toMap.apply(off),
+      Map.empty)
+    // each url's latest event falls in another schema span; u3's event at
+    // 61 is older in event time than its event at 44, and loses
+    val data = Seq(ev(1, "u0"), ev(2, "u5"), ev(3, "u1"), ev(5, "u2"),
+      ev(7, "u3"), ev(8, "u4"), ev(12, "u0"), ev(15, "u6"), ev(22, "u1"),
+      ev(25, "u1"), ev(33, "u2"), ev(44, "u3"), ev(47, "u6", "D"),
+      ev(52, "u7"), ev(57, "u4"), ev(61, "u3", ts = 5))
+    val all = (data ++ alters.map(a => alter(a._1))).sortBy(_.offset)
+    val ledger = tmpDir("pl9_ledger")
+    Seq(0L -> 15L, 15L -> 35L, 35L -> 55L, 55L -> 65L).zipWithIndex.foreach {
+      case ((lo, hi), k) => ledgerFile(ledger, s"f$k.parquet", k,
+        all.filter(e => e.offset >= lo && e.offset < hi))
+    }
+    val replayed = tmpDir("pl9_batch")
+    Replay.full(spark, ledger, replayed, nBuckets = 8)
+    val tables = replayed +: Seq(1000, 1).map { n =>
+      val work = tmpDir(s"pl9_work$n")
+      Pipeline.runToCompletion(spark, pipeCfg(work, ledger).copy(maxFilesPerTrigger = n))
+      s"$work/pages"
+    }
+
+    // oracle: the latest event per url; column c reads `a` before the
+    // rename, and the new b exists only after its add
+    def named(e: ChangeEvent, id: String): Option[String] = id match {
+      case "c" if e.offset > 10 => e.extra.get(if (e.offset < 30) "a" else "c")
+      case "b" if e.offset > 50 => e.extra.get("b")
+      case _ => None
+    }
+    val want = data.groupBy(_.url).values
+      .map(_.maxBy(e => (e.warc_ts.getTime, e.offset)))
+      .filter(_.op != "D")
+      .map(e => (e.url, named(e, "c").orNull, named(e, "b").orNull))
+      .toSet
+    tables.foreach { t =>
+      assert(IceLite.load(t).currentSchema.fields.map(_.name) ==
+        Seq("url", "warc_ts", "html", "text", "lang", "c", "b"), t)
+      val got = IceLite.read(spark, t).select("url", "c", "b").collect()
+        .map(r => (r.getString(0), r.getString(1), Option(r.get(2)).map(_.toString).orNull))
+        .toSet
+      assert(got == want, t)
+      val d = Equivalence.diff(IceLite.read(spark, t), IceLite.read(spark, replayed))
+      assert(d.isEmpty, s"$t diff rows: ${d.collect().take(5).mkString("\n")}")
+    }
+  }
+
   test("a batch counts and covers the positions it delivers, also one an " +
       "earlier batch delivered") {
     val cfg = Ledger.Config(seed = 19L, nEvents = 20, nDomains = 4,

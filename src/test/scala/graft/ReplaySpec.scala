@@ -186,6 +186,68 @@ class ReplaySpec extends SparkTestBase {
       (1 to 6).map(i => s"$i at 2000").toSet)
   }
 
+  test("a replay whose ALTERs only add columns commits one merge, with " +
+      "the rows of one merge per ALTER-delimited segment; a rename splits it") {
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    import graft.operators.Validate
+    val adds = Map(400L -> Ledger.addColumnJson("fetch_ms", "long"),
+      1100L -> Ledger.addColumnJson("crawl_id", "string"))
+    val rename = 800L -> """{"renameColumn":{"from":"lang","to":"language"}}"""
+    Seq(adds, adds + rename).foreach { alterAt =>
+      val cfg = Ledger.Config(seed = 5L, nEvents = 1500, nDomains = 12,
+        pagesPerDomain = 10, partitions = 3, segments = 2,
+        duplicateRate = 0.08, deleteRate = 0.08, alterAt = alterAt)
+      val ledger = tmpDir("addonly-ledger")
+      Ledger.synthesize(spark, cfg, ledger)
+      val table = tmpDir("addonly")
+      val merges = if (alterAt.contains(rename._1)) 2 else 1
+      assert(Replay.full(spark, ledger, table, nBuckets = 8) == merges)
+      // create, then each ALTER by position and each segment's merge
+      val ops = (1 to IceLite.currentVersion(table))
+        .map(IceLite.loadVersion(table, _).operation)
+      assert(ops == (if (merges == 1) Seq("create", "alter", "alter", "merge")
+        else Seq("create", "alter", "merge", "alter", "alter", "merge")), ops)
+
+      // by hand: one Merge per ALTER-delimited segment, the ALTER between
+      val byHand = tmpDir("addonly-segmented")
+      IceLite.create(byHand, graft.model.Model.pagesSchema, 8)
+      val events = Validate.valid(Ledger.scan(spark, ledger))
+        .filter(col("op") =!= "ALTER")
+      def pos(i: Long) = struct(lit(i / cfg.partitions), lit((i % cfg.partitions).toInt))
+      val g = struct(col("offset"), col("partition"))
+      val cuts = alterAt.keys.toSeq.sorted
+      (None +: cuts.map(Some(_))).zip(cuts.map(Some(_)) :+ None).zipWithIndex
+        .foreach { case ((lo, hi), k) =>
+          Merge(spark, byHand, events.filter(lo.fold(lit(true))(g > pos(_)) &&
+            hi.fold(lit(true))(g < pos(_))), s"seg.$k")
+          hi.foreach(i => SchemaEvolution(byHand, alterAt(i), s"alter.$i"))
+        }
+      assert(IceLite.load(table).currentSchema == IceLite.load(byHand).currentSchema)
+      val d = Equivalence.diff(IceLite.readInternal(spark, table),
+        IceLite.readInternal(spark, byHand))
+      assert(d.isEmpty, s"diff rows: ${d.collect().take(5).mkString("\n")}")
+      assert(IceLite.read(spark, table).filter(col("fetch_ms").isNotNull).count() > 0)
+    }
+  }
+
+  test("Ledger.events holds exactly the rows synthesize writes") {
+    import org.apache.spark.sql.functions.{col, to_json}
+    val cfg = Ledger.Config(seed = 3L, nEvents = 900, nDomains = 10,
+      pagesPerDomain = 6, partitions = 3, segments = 3, duplicateRate = 0.1,
+      deleteRate = 0.1, malformedRate = 0.05,
+      alterAt = Map(300L -> Ledger.addColumnJson("fetch_ms", "long")))
+    val ledger = Ledger.synthesize(spark, cfg, tmpDir("events-ledger"))
+    // exceptAll cannot compare maps: `extra` as JSON
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("extra", to_json(col("extra")))
+    val written = rows(Ledger.scan(spark, ledger))
+    val d = Equivalence.diff(rows(Ledger.events(spark, cfg).toDF()), written)
+    assert(d.isEmpty, s"diff rows: ${d.collect().take(5).mkString("\n")}")
+    assert(written.filter(col("op") === "ALTER").count() > 0)
+    assert(written.filter(col("url").isNull && col("op") =!= "ALTER").count() > 0)
+    assert(written.filter(col("extra") =!= "{}").count() > 0)
+  }
+
   test("generator is deterministic and partitioning-independent") {
     val cfg = Ledger.Config(seed = 99L, nEvents = 500, partitions = 4)
     val cdf = Det.zipfCdf(cfg.nDomains, cfg.zipfSkew)

@@ -18,8 +18,17 @@ object SparkTestBase {
     s
   }
 
+  /** One root per test JVM for every [[tmpDir]]; the forked JVM deletes
+    * it when the suite ends.
+    */
+  private lazy val root = {
+    val r = java.nio.file.Files.createTempDirectory("thorspark-test-")
+    sys.addShutdownHook(graft.icelite.IceLite.deleteRecursively(r))
+    r
+  }
+
   def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
 }
 
 trait SparkTestBase extends AnyFunSuite {

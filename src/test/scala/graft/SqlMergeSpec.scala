@@ -416,7 +416,8 @@ class SqlMergeSpec extends SparkTestBase {
     // ALTER-interpreter path: the new column must mint a FRESH id — the
     // old files store "ghost" under tagId, and a reused id would
     // reconcile it straight into 'extra'
-    SchemaEvolution.addColumn(dir, "extra", StringType, "add-extra")
+    SchemaEvolution(dir, """{"addColumn":{"name":"extra","type":"string"}}""",
+      "add-extra")
     val m = IceLite.load(dir)
     assert(m.currentSchema.fields.find(_.name == "extra").get.id != tagId)
     val r = IceLite.read(spark, dir).select(col("url"), col("extra")).head
