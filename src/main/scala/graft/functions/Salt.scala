@@ -12,10 +12,14 @@ import org.apache.spark.sql.functions._
   *
   *  - [[bucket]] — the STORAGE bucket: `pmod(xxhash64(url), nBuckets)`.
   *    Stable table layout; unsalted, so a key always lives in one bucket.
-  *  - the SHUFFLE key, built by `Merge`: the write is repartitioned on
-  *    `(_bucket, pmod(_offset, lanes))`, `lanes` ≤ `nSalts` sized by
-  *    `Merge.effectiveSalts`. Spreads a hot bucket's *write/compute* work
-  *    over up to `lanes` tasks without changing layout.
+  *  - the SHUFFLE key, built by `Merge`: the merge is repartitioned once
+  *    on `(_bucket, pmod(hash(url), lanes))`, `lanes` ≤ `nSalts` sized by
+  *    `Merge.effectiveSalts`, and picks each url's freshest row inside
+  *    that shuffle. Spreads a hot bucket's *write/compute* work over up to
+  *    `lanes` tasks without changing layout. The lane hash is murmur3
+  *    (`hash`), not the bucket's `xxhash64`: when `lanes` divides
+  *    `nBuckets`, an xxhash64 lane would be a function of the bucket, and
+  *    each bucket would land in a single lane.
   *
   * All expression composition (codegen'd builtins) — no UDF.
   */

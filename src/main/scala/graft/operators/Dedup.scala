@@ -42,9 +42,10 @@ object Dedup {
     * where [[latestPerKey]] would funnel the whole payload (html, ~KB/row)
     * through a SortAggregate buffer. A micro-batch takes the same path, so
     * streaming and replay pick winners by one rule.
-    * Same result as [[latestPerKey]] (identical win order; wire
-    * duplicates are byte-identical copies, so either copy is the same
-    * row).
+    * Same winners as [[latestPerKey]] (identical win order), but the
+    * broadcast branch keeps every wire copy of a winner: copies are
+    * byte-identical rows, and `Merge`'s per-url pick collapses them inside
+    * the shuffle it runs anyway, so no shuffle is spent on them here.
     *
     * Size-checked: the winner set `(url → max (warc_ts, offset,
     * partition))` is computed over pruned fixed-width columns, locally
@@ -106,8 +107,7 @@ object Dedup {
           col("url") <=> col("_wurl") && col("warc_ts") <=> col("_wts") &&
             col("offset") <=> col("_woff") &&
             col("partition") <=> col("_wpart"),
-          "left_semi")
-        .dropDuplicates("url"), stats)
+          "left_semi"), stats)
     } else {
       (latestPerKey(events), stats)
     }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{ExtractTextExpression, Salt}
 import graft.icelite.IceLite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Key-partitioned, bucketed, copy-on-write MERGE INTO (the heart of the
@@ -17,28 +18,30 @@ import org.apache.spark.sql.functions._
   *    of storage buckets; only those buckets' files are read and rewritten.
   *    The "which rows might match" question is answered by metadata
   *    (O(buckets) on the driver), not by a 100 TB scan.
-  *  - **Dedup before join.** The change side entering the join is one row
-  *    per url (post `Dedup.latestPerKeyAdaptive`, for replay segments and
-  *    micro-batches alike), so the merge join's change side is bounded by
-  *    distinct keys per batch, not by event volume.
+  *  - **Dedup before the pick.** The batch side entering the merge is one
+  *    row per url up to wire copies (post `Dedup.latestPerKeyAdaptive`, for
+  *    replay segments and micro-batches alike), so the merge's batch side
+  *    is bounded by distinct keys per batch, not by event volume; the pick
+  *    collapses the copies.
   *  - **Late data is a merge CONDITION, not an assumption.** A change
   *    applies only if its `(warc_ts, offset, partition)` exceeds the stored
   *    row's; deletes leave tombstones so a later-arriving OLDER event can
   *    never resurrect a deleted url. This makes the final table state
   *    independent of micro-batch boundaries — the batch↔streaming
   *    equivalence gate depends on it.
-  *  - **Salted write.** The output is repartitioned on
-  *    `(_bucket, pmod(_offset, lanes))` (`lanes` ≤ `nSalts`, see
-  *    `effectiveSalts`) before the bucket-file write: a hot bucket
-  *    (Zipf-head domain) spreads over `lanes` tasks while every bucket
-  *    still gets at most `lanes` files. Storage bucketing
-  *    itself stays UNSALTED so layout is stable (SURVEY.md §4.2).
-  *    `extract_text` runs after that shuffle, on the writer tasks, and only
-  *    for rows the batch wins.
+  *  - **One salted shuffle.** The batch's winners and the affected
+  *    buckets' stored rows are unioned and repartitioned once on
+  *    `(_bucket, pmod(hash(url), lanes))` (`lanes` ≤ `nSalts`, see
+  *    `effectiveSalts`); inside it a `row_number()` window keeps the
+  *    freshest row per url. No join: a hot bucket (Zipf-head domain)
+  *    spreads over `lanes` tasks while every bucket still gets at most
+  *    `lanes` files. Storage bucketing itself stays UNSALTED so layout is
+  *    stable (SURVEY.md §4.2). `extract_text` runs after that shuffle, on
+  *    the writer tasks, and only for rows the batch wins.
   *  - **One dataflow.** A first load, a replay segment and a micro-batch
   *    all run the same conditional merge. A read of buckets holding no
-  *    files is an empty local relation, so Catalyst removes the join and a
-  *    first load is one pass from scan to committed files.
+  *    files is an empty local relation, so Catalyst drops it from the
+  *    union and a first load is one pass from scan to committed files.
   *  - **Exactly-once.** Data files are staged invisible, then published by
   *    one atomic metadata commit keyed by `epochKey`; a replayed epoch is a
   *    no-op before any work happens.
@@ -75,30 +78,24 @@ object Merge {
     */
   val versionFieldId = 2
 
-  /** Apply one change batch to the table. `changes` is envelope-shaped with
-    * op ∈ {I,U,D} (ALTERs are handled by `Replay.applySlice`, which
-    * commits each one before or after this segment's merge).
-    * `deduped` = Some when `changes` is already one winner per url and the
-    * caller counted it; otherwise the dedup's own size check counts it.
-    * Only the buckets the batch's winners hash to are read and replaced,
-    * also on a first load. Merge runs no Spark action besides the write.
+  /** Apply one change batch to the table. `winners` is envelope-shaped with
+    * op ∈ {I,U,D}, one winning event per url up to byte-identical wire
+    * copies (`Dedup.latestPerKeyAdaptive`'s output; ALTERs are handled by
+    * `Replay.applySlice`, which commits each one before or after this
+    * segment's merge), and `stats` is what the dedup counted of them.
+    * Only the buckets the winners hash to are read and replaced, also on a
+    * first load. Merge runs no Spark action besides the write.
     * Returns the table's metadata after this epoch: the commit's, or the
     * loaded one when the epoch was already committed.
     */
-  def apply(spark: SparkSession, tableDir: String, changes: DataFrame,
-      epochKey: String, nSalts: Int = 4,
-      deduped: Option[BatchStats] = None): IceLite.Metadata = {
+  def apply(spark: SparkSession, tableDir: String, winners: DataFrame,
+      stats: BatchStats, epochKey: String, nSalts: Int): IceLite.Metadata = {
     val pre = IceLite.load(tableDir)
     if (pre.committedEpoch(epochKey)) return pre
     val schema = pre.currentSchema
     val nBuckets = pre.numBuckets
+    val affected = stats.buckets
 
-    // `Replay.applySlice` passes winners and their stats; a caller without
-    // them passes raw events (the FULL version history per url)
-    val (winners, BatchStats(affected, applied, _)) = deduped match {
-      case Some(stats) => (changes, stats)
-      case None => Dedup.latestPerKeyAdaptive(changes, nBuckets)
-    }
     // Winner rows in physical-table shape, resolved by field id so the merge
     // survives renames; extension fields (id > 5) are promoted out of the
     // `extra` map. `text` stays null here: it is extracted after the shuffle.
@@ -148,52 +145,49 @@ object Merge {
     val htmlName = schema.fields.find(_.id == 3).fold("__html")(_.name)
     val carried =
       if (textName.nonEmpty && htmlName == "__html") Seq(htmlName) else Nil
-    val newRows = winners.select(
-      valueCols ++ internals ++ carried.map(col("html").as(_)): _*)
+    val batch = winners.select(valueCols ++ internals ++
+      carried.map(col("html").as(_)) :+ lit(false).as("__stored"): _*)
     // only the affected storage buckets (a tiny local set) are read; with
     // none of their files in the table the read is an empty local relation,
-    // and Catalyst drops the join (a first load is a scan-to-write pass)
-    val existing = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
+    // and Catalyst drops it from the union (a first load is a scan-to-write
+    // pass)
+    val stored = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
+      .withColumn("__stored", lit(true))
 
-    // conditional merge: newer (event_time, _offset, _partition) wins —
-    // the event-time column resolved by field id (rename-safe)
+    // conditional merge: per url, the freshest (event_time, _offset,
+    // _partition) wins, a null component ranking lowest; on equal versions
+    // the stored row stays. The event-time column is resolved by field id
+    // (rename-safe). The window clusters by the salted shuffle's key, so
+    // the pick adds no exchange
     val verName = schema.fields.find(_.id == versionFieldId)
       .getOrElse(sys.error(s"version field id $versionFieldId missing"))
       .name
-    val c = newRows.select(newRows.columns.map(n => col(n).as(s"c_$n")): _*)
-    val e = existing.select(existing.columns.map(n => col(n).as(s"e_$n")): _*)
-    val cVer = struct(col(s"c_$verName"), col("c__offset"), col("c__partition"))
-    val eVer = struct(col(s"e_$verName"), col("e__offset"), col("e__partition"))
-    val fresh =
-      col(s"c_$urlName").isNotNull && (col(s"e_$urlName").isNull || cVer > eVer)
-    val outCols = (schema.fields.map(_.name) ++
-      IceLite.internalFields.map(_.name)).map { n =>
-      when(fresh, col(s"c_$n")).otherwise(col(s"e_$n")).as(n)
-    }
-    val merged = c.join(e, col(s"c_$urlName") === col(s"e_$urlName"), "full_outer")
-      .select(outCols ++ carried.map(n => col(s"c_$n").as(n)) :+
-        fresh.as("__fresh"): _*)
+    val freshest = Window.partitionBy(col("_bucket"), col("__lane"), col(urlName))
+      .orderBy(col(verName).desc_nulls_last, col("_offset").desc_nulls_last,
+        col("_partition").desc_nulls_last, col("__stored").desc)
+    // lane count adaptive: rewritten rows ≈ affected buckets' prior content
+    // + applied changes; `winners` underestimates, so the engage term —
+    // which needs no row count — carries small rewrites. The lane hash is
+    // murmur3, not the bucket's xxhash64 (see `Salt`)
+    val lanes = effectiveSalts(affected.size, stats.winners)
+    val picked = batch.unionByName(stored, allowMissingColumns = true)
       .withColumn("_bucket", Salt.bucket(col(urlName), nBuckets))
-
-    // salted write: crowded buckets spread over salt lanes, ≤ lanes files
-    // each (lane count adaptive: rewritten rows ≈ affected buckets' prior
-    // content + applied changes; `applied` underestimates, so the engage
-    // term — which needs no row count — carries small rewrites)
-    val lanes = effectiveSalts(affected.size, applied)
-    val salted = merged.repartition(
-      col("_bucket"), pmod(coalesce(col("_offset"), lit(0L)), lit(lanes.toLong)))
-    // extract_text runs AFTER the salted shuffle and only for rows the batch
-    // wins: the exchange carries the html payload, not html+text, the
-    // extraction CPU lands on the salt-balanced writer tasks, and a losing
-    // (late or re-delivered) event is never extracted
-    val withText = textName.fold(salted)(t => salted.withColumn(t,
-      when(col("__fresh") && !col("_deleted"),
+      .withColumn("__lane", pmod(hash(col(urlName)), lit(lanes)))
+      .repartition(col("_bucket"), col("__lane"))
+      .withColumn("__rank", row_number().over(freshest))
+      .filter(col("__rank") === 1)
+    // extract_text runs AFTER the shuffle and only for rows the batch wins:
+    // the exchange carries the html payload, not html+text, the extraction
+    // CPU lands on the salt-balanced writer tasks, and a losing (late or
+    // re-delivered) event is never extracted
+    val withText = textName.fold(picked)(t => picked.withColumn(t,
+      when(!col("__stored") && !col("_deleted"),
         ExtractTextExpression.extract_text(col(htmlName)))
         .otherwise(col(t))))
     // validated against `pre`: the merged content was computed from its
     // bucket files — a concurrent commit into an affected bucket means
     // those rows are stale and the commit must conflict, not clobber
     IceLite.replaceBuckets(tableDir, epochKey, "merge", pre,
-      withText.drop("__fresh" +: carried: _*), affected)
+      withText.drop(Seq("__lane", "__rank", "__stored") ++ carried: _*), affected)
   }
 }

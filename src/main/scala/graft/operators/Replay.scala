@@ -50,12 +50,12 @@ object Replay {
     }
     val events = Validate.valid(raw)
     // distinct: ALTER events can be wire-duplicated like any other event;
-    // a duplicate must not shift segment numbering or add empty epochs
+    // a duplicate must not shift segment numbering or add empty epochs.
+    // The collect holds every copy, so the driver drops them (no shuffle)
     val alters = events.filter(col("op") === "ALTER")
       .select(col("offset"), col("partition"), col("alterJson"))
-      .distinct()
       .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getString(2)))
-      .sortBy(_._1)
+      .distinct.sortBy(_._1)
     applySlice(spark, tableDir, events, alters, k => s"$epochPrefix.$k",
       s"$epochPrefix.alter", nSalts).size
   }
@@ -66,7 +66,7 @@ object Replay {
     */
   def applySlice(spark: SparkSession, tableDir: String, events: DataFrame,
       alters: Seq[((Long, Int), String)], mergeKey: Int => String,
-      alterPrefix: String, nSalts: Int): Seq[Merge.BatchStats] = {
+      alterPrefix: String, nSalts: Int = 4): Seq[Merge.BatchStats] = {
     val nBuckets = IceLite.load(tableDir).numBuckets
     val data = events.filter(col("op") =!= "ALTER")
     // total order across partitions: (offset, partition) lexicographic —
@@ -79,7 +79,7 @@ object Replay {
       val (winners, s) = Dedup.latestPerKeyAdaptive(data.filter(
         lo.fold(lit(true))(g > at(_)) && hi.fold(lit(true))(g < at(_))), nBuckets)
       if (s.winners > 0) {
-        Merge(spark, tableDir, winners, mergeKey(stats.size), nSalts, Some(s))
+        Merge(spark, tableDir, winners, s, mergeKey(stats.size), nSalts)
       }
       stats += s
     }

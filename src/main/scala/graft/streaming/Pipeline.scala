@@ -61,7 +61,6 @@ object Pipeline {
       lineageDir: String,
       metricsDir: String,
       nBuckets: Int = 32,
-      nSalts: Int = 4,
       maxFilesPerTrigger: Int = 8,
       /** dead-letter sidecar table for malformed events (None = drop) */
       dlqDir: Option[String] = None,
@@ -133,7 +132,7 @@ object Pipeline {
     inject("beforeMerge")
     val segs = Replay.applySlice(spark, cfg.tableDir, okEvents, alters,
       k => if (k == 0) s"stream.$epochId" else s"stream.$epochId.$k",
-      "stream.alter", cfg.nSalts)
+      "stream.alter")
     inject("afterMerge")
     if (eventsIn == 0) return // an ALTER-only batch: nothing to report
 

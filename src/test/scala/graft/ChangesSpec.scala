@@ -3,7 +3,7 @@ package graft
 import graft.functions.Salt
 import graft.icelite.IceLite
 import graft.model.ChangeEvent
-import graft.operators.{Changes, Maintenance, Merge, SchemaEvolution}
+import graft.operators.{Changes, Maintenance, SchemaEvolution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,12 +20,12 @@ class ChangesSpec extends SparkTestBase {
     val table = tmpDir("chg")
     IceLite.create(table, graft.model.Model.pagesSchema, 4)
     val u = (i: Int) => s"https://c.example.com/$i"
-    Merge(spark, table, Seq(
+    merge(table, Seq(
       ev(0, "I", u(1), 1000, "<p>one</p>"),
       ev(1, "I", u(2), 1000, "<p>two</p>"),
       ev(2, "I", u(3), 1000, "<p>three</p>")).toDF(), "b1")
     val v1 = IceLite.currentVersion(table)
-    Merge(spark, table, Seq(
+    merge(table, Seq(
       ev(3, "U", u(2), 2000, "<p>two-v2</p>"), // update
       ev(4, "D", u(3), 2000, ""),              // delete
       ev(5, "I", u(4), 2000, "<p>four</p>"),   // insert
@@ -50,14 +50,14 @@ class ChangesSpec extends SparkTestBase {
     val byBucket = urls.groupBy(u => graft.functions.Salt.bucketOfValue(u, 8))
     assert(byBucket.size >= 2, "fixture must span several buckets")
     val (tb, tUrls) = byBucket.maxBy(_._2.size)
-    Merge(spark, table, urls.zipWithIndex.map { case (u, i) =>
+    merge(table, urls.zipWithIndex.map { case (u, i) =>
       ev(i.toLong, "I", u, 1000, s"<p>v1-$i</p>") }.toDF(), "pb1")
     val v1 = IceLite.currentVersion(table)
     // second commit touches ONLY bucket tb: update + delete existing keys
     // of tb, insert a fresh key that hashes into tb
     val newUrl = (1000 to 4000).map(i => s"https://p.example.com/n$i")
       .find(u => graft.functions.Salt.bucketOfValue(u, 8) == tb).get
-    Merge(spark, table, Seq(
+    merge(table, Seq(
       ev(100, "U", tUrls.head, 2000, "<p>v2</p>"),
       ev(101, "I", newUrl, 2000, "<p>new</p>"),
       ev(102, "D", tUrls(1), 2000, "")).toDF(), "pb2")

@@ -131,7 +131,7 @@ class IceLiteSpec extends SparkTestBase {
       "(version resolved by field id)") {
     val dir = tmpDir("ice6")
     IceLite.create(dir, Model.pagesSchema, 4)
-    graft.operators.Merge(spark, dir,
+    merge(dir,
       env(Seq(("https://r.example.com/a", 1L, "I"),
         ("https://r.example.com/b", 2L, "I"))), "m.0")
     val vAfterFirst = IceLite.currentVersion(dir)
@@ -140,7 +140,7 @@ class IceLiteSpec extends SparkTestBase {
     // a merge into the NON-EMPTY renamed table must still apply the
     // (event_time, offset, partition) condition — round-1 bug: hard-coded
     // c_warc_ts/e_warc_ts blew up with unresolved columns here
-    graft.operators.Merge(spark, dir,
+    merge(dir,
       env(Seq(("https://r.example.com/a", 9L, "U"),
         ("https://r.example.com/c", 3L, "I"))), "m.1")
     val got = IceLite.read(spark, dir)
@@ -148,7 +148,7 @@ class IceLiteSpec extends SparkTestBase {
     assert(got.filter(col("url") === "https://r.example.com/a")
       .collect()(0).getTimestamp(1).getTime == 9000L)
     // stale update (older event time) must lose against the stored row
-    graft.operators.Merge(spark, dir,
+    merge(dir,
       env(Seq(("https://r.example.com/a", 4L, "U"))), "m.2")
     assert(IceLite.read(spark, dir)
       .filter(col("url") === "https://r.example.com/a")

@@ -36,7 +36,7 @@ class MaintenanceSpec extends SparkTestBase {
       import spark.implicits._
       val more = Ledger.events(spark, cfg.copy(seed = 78L)).toDF()
       (0 until extraBatches).foreach { k =>
-        graft.operators.Merge(spark, table,
+        merge(table,
           more.filter(col("offset") % extraBatches === k), s"extra-$k")
       }
     } finally {
@@ -172,7 +172,7 @@ class MaintenanceSpec extends SparkTestBase {
     // ... while a merge lands NEW rows into the same buckets
     import spark.implicits._
     val more = Ledger.events(spark, cfg.copy(seed = 99L, nEvents = 200)).toDF()
-    graft.operators.Merge(spark, table, more, "cfl-merge")
+    merge(table, more, "cfl-merge")
     val after = IceLite.read(spark, table).count()
     // the stale compaction must be REFUSED — its files lack the merge's rows
     intercept[CommitConflictException] {

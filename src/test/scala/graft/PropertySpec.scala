@@ -3,7 +3,7 @@ package graft
 import graft.functions.TextExtract
 import graft.icelite.IceLite
 import graft.model.ChangeEvent
-import graft.operators.{Dedup, Merge, Replay}
+import graft.operators.{Dedup, Replay}
 import graft.sources.Ledger
 import graft.util.Det
 import org.apache.spark.sql.functions.col
@@ -48,9 +48,9 @@ class PropertySpec extends SparkTestBase {
       val t1 = tmpDir("p1a"); val t2 = tmpDir("p1b")
       IceLite.create(t1, graft.model.Model.pagesSchema, 4)
       IceLite.create(t2, graft.model.Model.pagesSchema, 4)
-      Merge(spark, t1, events, "e1")
-      Merge(spark, t2, events, "e1")
-      Merge(spark, t2, events, "e2") // same batch again, NEW epoch
+      merge(t1, events, "e1")
+      merge(t2, events, "e1")
+      merge(t2, events, "e2") // same batch again, NEW epoch
       assert(stateOf(t1) == stateOf(t2))
     }
   }
@@ -63,11 +63,11 @@ class PropertySpec extends SparkTestBase {
       val one = tmpDir("p2one"); val two = tmpDir("p2two")
       IceLite.create(one, graft.model.Model.pagesSchema, 4)
       IceLite.create(two, graft.model.Model.pagesSchema, 4)
-      Merge(spark, one, events, "all")
+      merge(one, events, "all")
       import org.apache.spark.sql.functions._
       val g = col("offset") * cfg.partitions + col("partition")
-      Merge(spark, two, events.filter(g < cut), "b1")
-      Merge(spark, two, events.filter(g >= cut), "b2")
+      merge(two, events.filter(g < cut), "b1")
+      merge(two, events.filter(g >= cut), "b2")
       assert(stateOf(one) == stateOf(two), s"split at $cut diverged")
       events.unpersist()
     }

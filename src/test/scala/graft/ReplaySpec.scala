@@ -68,7 +68,11 @@ class ReplaySpec extends SparkTestBase {
     val (fallback, fallbackStats) =
       Dedup.latestPerKeyAdaptive(events, nBuckets = 8, maxBroadcastKeys = 0)
     assert(bcastStats == fallbackStats && bcastStats.buckets.nonEmpty)
-    assert(Equivalence.diff(bcast.drop("extra"), fallback.drop("extra")).isEmpty)
+    // the broadcast branch keeps each winner once per wire copy (the
+    // merge's per-url pick collapses the byte-identical copies)
+    val distinct = bcast.drop("extra").distinct()
+    assert(distinct.count() == bcastStats.winners)
+    assert(Equivalence.diff(distinct, fallback.drop("extra")).isEmpty)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("url"), col("warc_ts"), col("offset"), col("partition"),
         col("op"), md5(col("html")), col("lang")).collect().toSet
@@ -103,15 +107,15 @@ class ReplaySpec extends SparkTestBase {
         new java.sql.Timestamp(ts),
         if (op == "D") null else body.getBytes("UTF-8"), "en", null, Map.empty)
     // batch 1: insert @t=1000 then delete @t=3000
-    graft.operators.Merge(spark, table,
+    merge(table,
       Seq(ev(0, "I", 1000, "<p>one</p>"), ev(1, "D", 3000, "")).toDF(), "b1")
     assert(IceLite.read(spark, table).count() == 0, "deleted")
     // batch 2: a LATE update @t=2000 (older than the delete) must NOT resurrect
-    graft.operators.Merge(spark, table,
+    merge(table,
       Seq(ev(2, "U", 2000, "<p>late</p>")).toDF(), "b2")
     assert(IceLite.read(spark, table).count() == 0, "tombstone masks older event")
     // batch 3: a genuinely newer insert @t=4000 DOES revive the url
-    graft.operators.Merge(spark, table,
+    merge(table,
       Seq(ev(3, "I", 4000, "<p>back</p>")).toDF(), "b3")
     val rows = IceLite.read(spark, table).collect()
     assert(rows.length == 1 && rows(0).getString(3) == "back")
@@ -121,6 +125,72 @@ class ReplaySpec extends SparkTestBase {
     ChangeEvent(0, off, "I", url, new java.sql.Timestamp(ts),
       body.getBytes("UTF-8"), "en", null, Map.empty)
 
+  test("a winner delivered as two wire copies leaves one internal row per " +
+      "url, merged into empty and into stored buckets (tombstones included)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count}
+    val table = tmpDir("wirecopies")
+    IceLite.create(table, graft.model.Model.pagesSchema, 4)
+    val u = (i: Int) => s"https://copies.example.com/$i"
+    def ev(off: Long, op: String, i: Int, ts: Long) = ChangeEvent(0, off, op,
+      u(i), new java.sql.Timestamp(ts),
+      if (op == "D") null else s"<p>$i at $ts</p>".getBytes("UTF-8"), "en",
+      null, Map.empty)
+    def perUrl() = IceLite.readInternal(spark, table).groupBy(col("url"))
+      .agg(count("*").as("n")).as[(String, Long)].collect().toMap
+    val first = Seq(ev(0, "I", 0, 1000), ev(1, "I", 1, 1000), ev(2, "D", 2, 1000))
+    merge(table, (first ++ first).toDF(), "w1")
+    assert(perUrl() == (0 to 2).map(u(_) -> 1L).toMap)
+    // into stored rows: an update, a delete, a revival and a new url
+    val second = Seq(ev(3, "U", 0, 2000), ev(4, "D", 1, 2000),
+      ev(5, "I", 2, 2000), ev(6, "I", 3, 2000))
+    merge(table, (second ++ second).toDF(), "w2")
+    assert(perUrl() == (0 to 3).map(u(_) -> 1L).toMap)
+    assert(IceLite.read(spark, table).select("url", "text").as[(String, String)]
+      .collect().toMap == Seq(0, 2, 3).map(i => u(i) -> s"$i at 2000").toMap)
+  }
+
+  /** `dir` registered as the SQL table `name` while `body` runs. */
+  private def withSqlTable(name: String, dir: String)(body: => Unit): Unit = {
+    spark.sql(s"CREATE TABLE $name USING icelite OPTIONS (path '$dir')")
+    try body finally spark.sql(s"DROP TABLE $name")
+  }
+
+  test("a re-delivered event equal in (warc_ts, offset, partition) to a " +
+      "stored row that SQL UPDATE edited keeps the edit") {
+    import spark.implicits._
+    val table = tmpDir("redelivered")
+    IceLite.create(table, graft.model.Model.pagesSchema, 4)
+    val e = event(5, "https://edit.example.com/a", 1000, "<p>orig</p>")
+    merge(table, Seq(e).toDF(), "r1")
+    withSqlTable("redelivered_t", table) {
+      spark.sql("UPDATE redelivered_t SET lang = 'xx' " +
+        "WHERE url = 'https://edit.example.com/a'")
+    }
+    merge(table, Seq(e).toDF(), "r2") // the wire re-delivers the event
+    val rows = IceLite.read(spark, table, position = true)
+      .select("lang", "text", "_offset").as[(String, String, Option[Long])]
+      .collect()
+    assert(rows.toSeq == Seq(("xx", "orig", Some(5L))))
+  }
+
+  test("an event with the same warc_ts as a SQL-INSERTed row (null " +
+      "position) replaces it") {
+    import spark.implicits._
+    val table = tmpDir("sqlinserted")
+    IceLite.create(table, graft.model.Model.pagesSchema, 4)
+    withSqlTable("sqlinserted_t", table) {
+      spark.sql("INSERT INTO sqlinserted_t VALUES ('https://ins.example.com/a', " +
+        "timestamp_millis(1000), CAST('<p>sql</p>' AS BINARY), 'sql', 'de')")
+    }
+    merge(table, Seq(event(0, "https://ins.example.com/a", 1000,
+      "<p>event</p>")).toDF(), "i1")
+    val rows = IceLite.read(spark, table, position = true)
+      .select("lang", "text", "_offset").as[(String, String, Option[Long])]
+      .collect()
+    assert(rows.toSeq == Seq(("en", "event", Some(0L))))
+  }
+
   test("a merge into a table that dropped html extracts text from the " +
       "event's html, into an empty and into a non-empty table") {
     import spark.implicits._
@@ -128,12 +198,12 @@ class ReplaySpec extends SparkTestBase {
     Seq(false, true).foreach { stored =>
       val table = tmpDir("nohtml")
       IceLite.create(table, graft.model.Model.pagesSchema, 4)
-      if (stored) Merge(spark, table, Seq(event(0, u(0), 5000, "<p>zero</p>")).toDF(), "b0")
+      if (stored) merge(table, Seq(event(0, u(0), 5000, "<p>zero</p>")).toDF(), "b0")
       SchemaEvolution(table, """{"dropColumn":{"name":"html"}}""", "drop-html")
       // u(0) arrives late: it loses to a stored row and wins in an empty table
       val batch = event(1, u(0), 100, "<p>late</p>") +:
         (2 to 7).map(i => event(i, u(i), 1000, s"<p>page $i</p>"))
-      Merge(spark, table, batch.toDF(), "b1")
+      merge(table, batch.toDF(), "b1")
       val got = IceLite.read(spark, table)
       assert(got.columns.toSeq == Seq("url", "warc_ts", "text", "lang"))
       val want = batch.map(e => e.url -> TextExtract.extract(e.html)).toMap ++
@@ -145,7 +215,8 @@ class ReplaySpec extends SparkTestBase {
   }
 
   test("one merge dataflow: into buckets holding no files Catalyst removes " +
-      "the join; into stored rows the join stays") {
+      "the stored side of the union; into stored rows the union stays; " +
+      "either way one shuffle and no join") {
     import spark.implicits._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.SparkPlanInfo
@@ -170,17 +241,20 @@ class ReplaySpec extends SparkTestBase {
       val stats = Merge.BatchStats(r.getSeq[Int](0).toSet, r.getLong(1))
       PlanBridge.waitForListeners(spark)
       plans.clear()
-      Merge(spark, table, batch, epoch, deduped = Some(stats))
+      Merge(spark, table, batch, stats, epoch, nSalts = 4)
       PlanBridge.waitForListeners(spark)
       assert(plans.size == 1, s"$epoch: one execution")
-      nodes(plans.peek())
+      val ns = nodes(plans.peek())
+      assert(ns.count(_ == "Exchange") == 1, s"$epoch: one shuffle: $ns")
+      assert(!ns.exists(_.contains("Join")), s"$epoch: no join: $ns")
+      ns
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       val first = mergePlan(1000, "b1")
-      assert(!first.exists(_.contains("Join")), first)
+      assert(!first.contains("Union"), first)
       val second = mergePlan(2000, "b2")
-      assert(second.exists(_.contains("Join")), second)
+      assert(second.contains("Union"), second)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(IceLite.read(spark, table).select("text").as[String].collect().toSet ==
       (1 to 6).map(i => s"$i at 2000").toSet)
@@ -218,7 +292,7 @@ class ReplaySpec extends SparkTestBase {
       val cuts = alterAt.keys.toSeq.sorted
       (None +: cuts.map(Some(_))).zip(cuts.map(Some(_)) :+ None).zipWithIndex
         .foreach { case ((lo, hi), k) =>
-          Merge(spark, byHand, events.filter(lo.fold(lit(true))(g > pos(_)) &&
+          merge(byHand, events.filter(lo.fold(lit(true))(g > pos(_)) &&
             hi.fold(lit(true))(g < pos(_))), s"seg.$k")
           hi.foreach(i => SchemaEvolution(byHand, alterAt(i), s"alter.$i"))
         }
@@ -228,6 +302,24 @@ class ReplaySpec extends SparkTestBase {
       assert(d.isEmpty, s"diff rows: ${d.collect().take(5).mkString("\n")}")
       assert(IceLite.read(spark, table).filter(col("fetch_ms").isNotNull).count() > 0)
     }
+  }
+
+  test("a wire-duplicated ALTER does not shift segment numbering: a rename " +
+      "delivered twice splits a replay once") {
+    import spark.implicits._
+    val ledger = tmpDir("dupalter-ledger")
+    val rename = ChangeEvent(1, 3, "ALTER", null, new java.sql.Timestamp(3000),
+      null, null, """{"renameColumn":{"from":"lang","to":"language"}}""", Map.empty)
+    val events = (0 until 6).map(i =>
+      event(i, s"https://dupalter.example.com/${i % 3}", 1000L * i, s"<p>$i</p>"))
+    (events ++ Seq(rename, rename)).toDS().write.mode("overwrite").parquet(ledger)
+    val table = tmpDir("dupalter")
+    assert(Replay.full(spark, ledger, table, nBuckets = 4) == 2)
+    val ops = (1 to IceLite.currentVersion(table))
+      .map(IceLite.loadVersion(table, _).operation)
+    assert(ops == Seq("create", "merge", "alter", "merge"), ops)
+    assert(IceLite.load(table).committedEpoch("replay.1"))
+    assert(!IceLite.load(table).committedEpoch("replay.2"))
   }
 
   test("Ledger.events holds exactly the rows synthesize writes") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole sbt test JVM. */
@@ -34,4 +34,11 @@ object SparkTestBase {
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   def tmpDir(prefix: String): String = SparkTestBase.tmpDir(prefix)
+
+  /** Merge raw change events into `table` as the one epoch `epoch`: the
+    * replay's slice routine with no ALTERs (winner dedup, then the
+    * conditional merge; a batch without winners commits nothing).
+    */
+  def merge(table: String, events: DataFrame, epoch: String): Unit =
+    graft.operators.Replay.applySlice(spark, table, events, Nil, _ => epoch, "alter")
 }
