@@ -50,8 +50,9 @@ import org.json4s.jackson.JsonMethods
   *
   * Crash/race debris: a committer that dies (or loses the CAS) after
   * staging data files or manifests leaves unreachable orphans — never
-  * visible, reclaimed by maintenance. Metadata is read once per query from
-  * the driver.
+  * visible, reclaimed by maintenance. A load reads one file, the version's
+  * metadata; manifests are read per bucket, where that bucket's files are
+  * needed.
   */
 object IceLite {
 
@@ -73,6 +74,10 @@ object IceLite {
     */
   case class ManifestRef(path: String, bucket: Int, nFiles: Int)
 
+  /** One table version: its manifest list, schemas and epoch log. Holds
+    * no data-file list of its own; [[files]] and [[filesIn]] read the
+    * manifests that list them.
+    */
   case class Metadata(
       version: Int,
       snapshotId: Long,
@@ -83,19 +88,41 @@ object IceLite {
       numBuckets: Int,
       schemas: Seq[Schema],
       manifests: Seq[ManifestRef],
-      files: Seq[DataFileEntry],
       epochLog: Set[String],
       epochHwm: Map[String, Long],
       committedAtMs: Long) {
     def currentSchema: Schema = schemas.find(_.schemaId == currentSchemaId).get
 
+    /** Every live data file, read from all manifests on first use. A
+      * missing or corrupt manifest fails here, not at the load.
+      */
+    lazy val files: Seq[DataFileEntry] = manifests.flatMap(readManifest)
+
+    /** The live data files of `buckets`: reads only their manifests. */
+    def filesIn(buckets: Set[Int]): Seq[DataFileEntry] =
+      manifests.filter(r => buckets(r.bucket)).flatMap(readManifest)
+
     /** Live data-file count per bucket — the compaction-pressure signal.
-      * Driver-side and metadata-only (no storage listing): ingest commit
-      * results surface its max so a pipeline knows WHEN to schedule
-      * [[graft.operators.Maintenance.compactIfNeeded]].
+      * Read from the manifest list (no manifest, no storage listing):
+      * ingest commit results surface its max so a pipeline knows WHEN to
+      * schedule [[graft.operators.Maintenance.compactIfNeeded]].
       */
     def filesPerBucket: Map[Int, Int] =
-      files.groupBy(_.bucket).map { case (b, fs) => b -> fs.size }
+      manifests.map(r => r.bucket -> r.nFiles).toMap
+
+    /** The buckets whose content differs between this version and
+      * `other`: those whose [[ManifestRef]] differs, a bucket without one
+      * counting as empty. The one "bucket changed" rule. It is exact
+      * because a commit writes a new manifest for a bucket exactly when
+      * the bucket gains files, drops it exactly when it replaces the
+      * bucket and adds none, keeps every other ref by reference, and
+      * always gives data files new paths: refs differ iff file sets do.
+      */
+    def changedBuckets(other: Metadata): Set[Int] = {
+      val mine = manifests.map(r => r.bucket -> r.path).toMap
+      val theirs = other.manifests.map(r => r.bucket -> r.path).toMap
+      (mine.keySet ++ theirs.keySet).filter(b => mine.get(b) != theirs.get(b))
+    }
 
     /** True iff `key` was already committed. Numeric-suffixed keys
       * (`<prefix>.<n>`) are folded into a per-prefix HIGH-WATER MARK
@@ -214,7 +241,6 @@ object IceLite {
       jnum(o("version")).toInt, jnum(o("snapshotId")), jnum(o("parentSnapshotId")),
       jstr(o("epochKey")), jstr(o("operation")), jnum(o("currentSchemaId")).toInt,
       jnum(o("numBuckets")).toInt, schemas, manifests,
-      manifests.flatMap(readManifest),
       o("epochLog").asInstanceOf[JArray].arr.map(jstr).toSet,
       hwm,
       jnum(o("committedAtMs")))
@@ -244,7 +270,8 @@ object IceLite {
     ManifestRef(p.toString, bucket, files.size)
   }
 
-  private def readManifest(r: ManifestRef): Seq[DataFileEntry] = {
+  /** Bucket `r.bucket`'s data-file list, as `r` names it. */
+  private[graft] def readManifest(r: ManifestRef): Seq[DataFileEntry] = {
     val s = new String(Files.readAllBytes(Paths.get(r.path)),
       StandardCharsets.UTF_8)
     val o = JsonMethods.parse(s).asInstanceOf[JObject].obj.toMap
@@ -310,7 +337,7 @@ object IceLite {
     val m = Metadata(1, snapshotId = 1L, parentSnapshotId = 0L,
       epochKey = "create", operation = "create", currentSchemaId = 1,
       numBuckets = numBuckets, schemas = Seq(Schema(1, fields.toIndexedSeq)),
-      manifests = Nil, files = Nil, epochLog = Set("create"),
+      manifests = Nil, epochLog = Set("create"),
       epochHwm = Map.empty, committedAtMs = System.currentTimeMillis())
     require(catalog.tryPublish(dir, 1,
       toJson(m).getBytes(StandardCharsets.UTF_8)),
@@ -348,10 +375,13 @@ object IceLite {
     * clobbering the other committer's rows — the caller re-reads and
     * re-executes (Iceberg's serializable-isolation validation, same idea).
     *
-    * Metadata writes per commit: one manifest per TOUCHED bucket (touched =
-    * gaining or losing files this commit) + the manifest list — untouched
-    * buckets' manifests are carried by reference, so commit cost never
-    * scales with total live-file count.
+    * Metadata writes per commit: one manifest per bucket GAINING files
+    * this commit + the manifest list. A replaced bucket that gains none
+    * drops its ref; every other ref is carried by reference. Manifest
+    * reads per commit: one per bucket that gains files without being
+    * replaced (its kept files) — a merge replaces every bucket it writes
+    * and reads none. The conflict check compares refs only
+    * ([[Metadata.changedBuckets]]).
     */
   def commit(
       dir: String,
@@ -368,11 +398,8 @@ object IceLite {
       val cur = load(dir, catalog)
       if (cur.committedEpoch(epochKey)) return cur
       baseVersion.filter(_ != cur.version).foreach { bv =>
-        val base = loadVersion(dir, bv, catalog)
-        def replacedFiles(m: Metadata) =
-          m.files.filter(f => replacedBuckets.contains(f.bucket))
-            .map(_.path).toSet
-        if (replacedFiles(cur) != replacedFiles(base)) {
+        if (cur.changedBuckets(loadVersion(dir, bv, catalog))
+            .exists(replacedBuckets)) {
           throw new CommitConflictException(
             s"commit $epochKey based on v$bv replaces buckets " +
               s"modified by a concurrent commit (now v${cur.version}) — " +
@@ -386,23 +413,15 @@ object IceLite {
             s"schema id ${s.schemaId} already exists at v${cur.version} — " +
               "a concurrent ALTER won; re-derive the evolution")
         }
-      val keptFiles = cur.files.filterNot(f => replacedBuckets.contains(f.bucket))
-      val keptByBucket = keptFiles.groupBy(_.bucket)
       val newByBucket = newFiles.groupBy(_.bucket)
-      val refByBucket = cur.manifests.map(r => r.bucket -> r).toMap
-      // buckets whose file list changes this commit: gaining files, or
-      // replaced while holding files
-      val touched = newByBucket.keySet ++
-        replacedBuckets.intersect(cur.files.map(_.bucket).toSet)
-      val manifests2 = (keptByBucket.keySet ++ newByBucket.keySet)
-        .toSeq.sorted.map { b =>
-          refByBucket.get(b) match {
-            case Some(ref) if !touched.contains(b) => ref // by reference
-            case _ => // touched: (re)write
-              writeManifest(dir, b,
-                keptByBucket.getOrElse(b, Nil) ++ newByBucket.getOrElse(b, Nil))
-          }
-        }
+      // by reference: every bucket neither replaced nor gaining files
+      val kept = cur.manifests.filterNot(r =>
+        replacedBuckets(r.bucket) || newByBucket.contains(r.bucket))
+      val written = newByBucket.toSeq.map { case (b, fs) =>
+        writeManifest(dir, b,
+          (if (replacedBuckets(b)) Nil else cur.filesIn(Set(b))) ++ fs)
+      }
+      val manifests2 = (kept ++ written).sortBy(_.bucket)
       val schemas = newSchema match {
         case Some(s) => cur.schemas :+ s
         case None => cur.schemas
@@ -425,7 +444,6 @@ object IceLite {
         numBuckets = cur.numBuckets,
         schemas = schemas,
         manifests = manifests2,
-        files = keptFiles ++ newFiles,
         epochLog = log2,
         epochHwm = hwm2,
         committedAtMs = System.currentTimeMillis())
@@ -470,10 +488,7 @@ object IceLite {
     val m = version.map(loadVersion(dir, _, catalog))
       .getOrElse(load(dir, catalog))
     val target = m.currentSchema
-    val wanted = buckets match {
-      case Some(bs) => m.files.filter(f => bs.contains(f.bucket))
-      case None => m.files
-    }
+    val wanted = buckets.fold(m.files)(m.filesIn)
     val outStruct = StructType(target.struct.fields ++ internalFields)
     // an empty local relation, not an empty RDD: Catalyst folds a join or
     // union with it away (Merge's first load has no join left to run)
@@ -552,9 +567,10 @@ object IceLite {
     */
   private def write(dir: String, epochKey: String, df: DataFrame,
       replaceAll: Boolean, catalog: Catalog): Unit = {
-    if (!exists(dir, catalog)) create(dir, df.schema, numBuckets = 1, catalog)
-    if (hasEpoch(dir, epochKey, catalog)) return
-    val m = load(dir, catalog)
+    val m =
+      if (exists(dir, catalog)) load(dir, catalog)
+      else create(dir, df.schema, numBuckets = 1, catalog)
+    if (m.committedEpoch(epochKey)) return
     val keyName = m.currentSchema.fields.head.name
     val staged = stageFiles(dir, epochKey,
       df.withColumn("_offset", lit(null).cast(LongType))

@@ -26,23 +26,18 @@ object Changes {
   /** Changes from `fromVersion` to `toVersion` (default: current).
     * change_type ∈ {insert, update, delete}.
     *
-    * BUCKET-PRUNED via manifest-ref diff: a commit replaces manifests only
-    * for the buckets it touches and carries every other bucket's manifest
-    * BY REFERENCE (IceLite commit invariant); manifests and data files are
-    * immutable, so an identical `ManifestRef.path` in both versions proves
-    * the bucket's content is byte-identical — no key in it can have a
-    * changed winner tuple, so it can contribute no diff row. Both snapshot
-    * scans therefore read ONLY buckets whose manifest ref differs, and the
-    * newer scan also carries the rows emitted for inserts and updates (no
-    * third read): O(changed buckets) per delta instead of two
-    * full table scans (the streaming change source calls this per
-    * micro-batch — at 10^5 files per snapshot the unpruned form was the
-    * scale-killer the round-5 review flagged). The key→bucket layout
-    * invariant (a key's rows live only in `Salt.bucket(key, numBuckets)`,
-    * and `numBuckets` is fixed at `create`) makes pruning per bucket
-    * sound: a key's older and newer rows meet in one bucket. Every version
-    * that holds files lists them in per-bucket manifests, so the ref diff
-    * sees every changed bucket.
+    * BUCKET-PRUNED: both snapshot scans read ONLY the buckets
+    * [[IceLite.Metadata.changedBuckets]] names (the one "bucket changed"
+    * rule, the commit's conflict check uses it too): an unchanged bucket's
+    * content is byte-identical in both versions, so no key in it can have
+    * a changed winner tuple or contribute a diff row. The newer scan also
+    * carries the rows emitted for inserts and updates (no third read):
+    * O(changed buckets) per delta instead of two full table scans (the
+    * streaming change source calls this per micro-batch). The key→bucket
+    * layout invariant (a key's rows live only in
+    * `Salt.bucket(key, numBuckets)`, and `numBuckets` is fixed at
+    * `create`) makes pruning per bucket sound: a key's older and newer
+    * rows meet in one bucket.
     */
   def between(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Option[Int] = None): DataFrame = {
@@ -50,10 +45,7 @@ object Changes {
     val mFrom = IceLite.loadVersion(dir, fromVersion)
     val mTo = IceLite.loadVersion(dir, to)
     val key = mTo.currentSchema.fields.head.name
-    val fromRefs = mFrom.manifests.map(r => r.bucket -> r.path).toMap
-    val toRefs = mTo.manifests.map(r => r.bucket -> r.path).toMap
-    val buckets = (fromRefs.keySet ++ toRefs.keySet)
-      .filter(b => fromRefs.get(b) != toRefs.get(b))
+    val buckets = mTo.changedBuckets(mFrom)
     // key, event-time and content columns resolved PER VERSION by field
     // id: a rename between the two snapshots must not break the diff (the
     // read path reconciles each version to ITS OWN schema's names)

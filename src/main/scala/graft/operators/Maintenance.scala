@@ -41,7 +41,7 @@ object Maintenance {
     if (m.committedEpoch(epochKey)) return 0
     val crowded = m.filesPerBucket.filter(_._2 > maxFilesPerBucket).keySet
     if (crowded.isEmpty) return 0
-    val rows = IceLite.readInternal(spark, dir, buckets = Some(crowded))
+    val rows = IceLite.readInternal(spark, dir, Some(m.version), Some(crowded))
       .withColumn("_bucket",
         graft.functions.Salt.bucket(col(m.currentSchema.fields.head.name),
           m.numBuckets))
@@ -92,7 +92,7 @@ object Maintenance {
     // one aggregation action finds how many tombstones expire AND which
     // buckets hold them — only THOSE buckets are read back and rewritten
     // (at 100 TB a handful of buckets age out per run, not the whole table)
-    val stats = withBucket(IceLite.readInternal(spark, dir))
+    val stats = withBucket(IceLite.readInternal(spark, dir, Some(m.version)))
       .filter(expired)
       .agg(count(lit(1)).as("n"), collect_set(col("_bucket")).as("bks"))
       .collect()(0)
@@ -100,23 +100,34 @@ object Maintenance {
     if (dropped == 0) return 0L
     val touched = stats.getSeq[Int](1).toSet
     IceLite.replaceBuckets(dir, epochKey, "expire-tombstones", m,
-      withBucket(IceLite.readInternal(spark, dir, buckets = Some(touched)))
-        .filter(!expired).repartition(col("_bucket")),
+      withBucket(IceLite.readInternal(spark, dir, Some(m.version),
+        Some(touched))).filter(!expired).repartition(col("_bucket")),
       touched)
     dropped
   }
 
   /** Version `v`'s metadata, or None when it has expired: its metadata
-    * file is absent. Any other load failure (a corrupt manifest, a
-    * transient IO error) propagates. Both deleters below remove what no
-    * loaded version references, so a version that fails to load must
-    * abort them before anything is deleted — counted as expired, its live
-    * files would look unreachable.
+    * file is absent. Any other load failure (a corrupt metadata file, a
+    * transient IO error) propagates and aborts both deleters below before
+    * anything is deleted: counted as expired, its live files would look
+    * unreachable. The load reads no manifest; [[listedFiles]] does.
     */
   private def liveVersion(dir: String, v: Int): Option[IceLite.Metadata] =
     if (graft.icelite.FileCatalog.versionExists(dir, v))
       Some(IceLite.loadVersion(dir, v))
     else None
+
+  /** Every manifest `versions` name → the data-file paths it lists, read
+    * once per distinct manifest (manifests are shared by reference across
+    * versions). Both deleters below call this BEFORE their first delete,
+    * so a manifest that fails to read (missing, corrupt, a transient IO
+    * error) aborts them with nothing deleted, like a failed load.
+    */
+  private def listedFiles(versions: Seq[IceLite.Metadata])
+      : Map[String, Seq[String]] =
+    versions.flatMap(_.manifests).groupBy(_.path).map { case (p, rs) =>
+      p -> IceLite.readManifest(rs.head).map(_.path)
+    }
 
   /** Delete metadata versions older than the newest `keepVersions`, plus
     * every data file and manifest referenced ONLY by expired versions
@@ -128,35 +139,26 @@ object Maintenance {
     import java.nio.file.{Files, Paths}
     val current = IceLite.currentVersion(dir)
     val cutoff = current - math.max(1, keepVersions) + 1
-    val kept = (cutoff to current).flatMap(liveVersion(dir, _))
-    val keptFiles = kept.flatMap(_.files.map(_.path)).toSet
-    val keptManifests = kept.flatMap(_.manifests.map(_.path)).toSet
-    // LOAD every expired version before deleting anything: manifests are
-    // shared across versions, so deleting while iterating would break the
-    // loadVersion of an older expired version that references the same
-    // manifest
-    val expired = (1 until cutoff).flatMap { v =>
-      liveVersion(dir, v).map(m =>
-        (Paths.get(dir, "metadata", s"v$v.metadata.json"), m))
-    }
+    val (expired, kept) = (1 to current)
+      .flatMap(v => liveVersion(dir, v).map(v -> _)).partition(_._1 < cutoff)
+    val listed = listedFiles((expired ++ kept).map(_._2))
+    val keptManifests = kept.flatMap(_._2.manifests.map(_.path)).toSet
+    val keptFiles = keptManifests.flatMap(listed)
     // Deletion ORDER matters for crash safety: the expired v*.metadata.json
     // files are the only ENTRY POINTS to their manifests — delete them
     // FIRST, so a crash mid-expiry can only leave unreferenced manifests /
     // data files (invisible debris, swept by gcOrphans or the next run),
     // never a loadable-looking metadata file whose manifests are gone
-    // (that would permanently break versionAt/history walks: fromJson
-    // eagerly reads manifests, and later runs would skip-but-never-clean
-    // the stale file).
-    expired.foreach { case (mp, _) => Files.delete(mp) }
-    var dataDeleted = 0
-    expired.flatMap(_._2.files.map(_.path)).distinct.foreach { p =>
-      if (!keptFiles.contains(p) && Files.deleteIfExists(Paths.get(p))) {
-        dataDeleted += 1
-      }
+    // (its files would fail to read, and every later gcOrphans or expiry
+    // would abort on it)
+    expired.foreach { case (v, _) =>
+      Files.delete(Paths.get(dir, "metadata", s"v$v.metadata.json"))
     }
-    expired.flatMap(_._2.manifests.map(_.path)).distinct.foreach { p =>
-      if (!keptManifests.contains(p)) Files.deleteIfExists(Paths.get(p))
-    }
+    val doomed = expired.flatMap(_._2.manifests.map(_.path)).distinct
+      .filterNot(keptManifests)
+    val dataDeleted = doomed.flatMap(listed).distinct.filterNot(keptFiles)
+      .count(p => Files.deleteIfExists(Paths.get(p)))
+    doomed.foreach(p => Files.deleteIfExists(Paths.get(p)))
     (expired.size, dataDeleted)
   }
 
@@ -178,9 +180,8 @@ object Maintenance {
     // snapshot the reachable set BEFORE listing, so a commit landing
     // mid-GC can only make the listing stale toward deleting LESS
     val current = IceLite.currentVersion(dir)
-    val retained = (1 to current).flatMap(liveVersion(dir, _))
-    val reachable = (retained.flatMap(_.files.map(_.path)) ++
-      retained.flatMap(_.manifests.map(_.path))).toSet
+    val listed = listedFiles((1 to current).flatMap(liveVersion(dir, _)))
+    val reachable = listed.keySet ++ listed.values.flatten
     val cutoff = System.currentTimeMillis() - minAgeMs
     def newest(p: java.nio.file.Path): Long = {
       val w = Files.walk(p)

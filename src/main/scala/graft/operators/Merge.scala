@@ -147,11 +147,12 @@ object Merge {
       if (textName.nonEmpty && htmlName == "__html") Seq(htmlName) else Nil
     val batch = winners.select(valueCols ++ internals ++
       carried.map(col("html").as(_)) :+ lit(false).as("__stored"): _*)
-    // only the affected storage buckets (a tiny local set) are read; with
-    // none of their files in the table the read is an empty local relation,
-    // and Catalyst drops it from the union (a first load is a scan-to-write
-    // pass)
-    val stored = IceLite.readInternal(spark, tableDir, buckets = Some(affected))
+    // only the affected storage buckets (a tiny local set) are read, at
+    // `pre`, the version the commit validates against; with none of their
+    // files in the table the read is an empty local relation, and Catalyst
+    // drops it from the union (a first load is a scan-to-write pass)
+    val stored = IceLite.readInternal(spark, tableDir,
+      version = Some(pre.version), buckets = Some(affected))
       .withColumn("__stored", lit(true))
 
     // conditional merge: per url, the freshest (event_time, _offset,

@@ -215,6 +215,74 @@ class IceLiteSpec extends SparkTestBase {
     assert(IceLite.load(big).manifests.size == 8, "one manifest per bucket")
   }
 
+  test("a load reads one metadata file: with every manifest but bucket " +
+      "b's deleted, the version still loads and bucket b still reads") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val cfg = graft.sources.Ledger.Config(seed = 15L, nEvents = 600,
+      nDomains = 8, pagesPerDomain = 8, partitions = 2, segments = 2,
+      deleteRate = 0.1)
+    val ledger = tmpDir("onefile-ledger")
+    val table = tmpDir("onefile-table")
+    graft.sources.Ledger.synthesize(spark, cfg, ledger)
+    graft.operators.Replay.full(spark, ledger, table, nBuckets = 8)
+    val before = IceLite.load(table)
+    val b = before.manifests.head.bucket
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "_offset", "_partition", "_deleted").collect().toSet
+    val expected = rows(IceLite.readInternal(spark, table)
+      .filter(graft.functions.Salt.bucket(col("url"), 8) === b))
+    assert(expected.nonEmpty)
+    // destroy every manifest of every other bucket, in every version
+    val listing = Files.list(Paths.get(table, "metadata"))
+    val doomed = try listing.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("man-") && !n.endsWith(s"-b$b.json")
+    }.toList finally listing.close()
+    assert(doomed.nonEmpty)
+    doomed.foreach(Files.delete)
+    val m = IceLite.load(table)
+    assert(IceLite.currentVersion(table) == before.version &&
+      m.version == before.version)
+    assert(m.committedEpoch("replay.0") && !m.committedEpoch("replay.1"))
+    assert(m.filesPerBucket == before.filesPerBucket)
+    assert(rows(IceLite.readInternal(spark, table,
+      buckets = Some(Set(b)))) == expected)
+    // the other buckets' file lists are gone: reading them fails
+    intercept[java.nio.file.NoSuchFileException](m.files)
+  }
+
+  test("the conflict rule from both sides: a stale replaceBuckets " +
+      "conflicts when a concurrent commit emptied or filled one of its " +
+      "buckets, and rebases when it touched only other buckets") {
+    import graft.icelite.CommitConflictException
+    val dir = tmpDir("ice-rule")
+    IceLite.create(dir, Model.pagesSchema, 4)
+    // buckets 0 and 1 hold rows at the base; 2 and 3 are empty
+    val base = IceLite.replaceBuckets(dir, "e1", "merge", IceLite.load(dir),
+      mkRowsInBucket(2, 0).unionByName(mkRowsInBucket(2, 1)), Set(0, 1))
+    // a concurrent commit empties bucket 0
+    IceLite.commit(dir, "empty0", "delete", replacedBuckets = Set(0))
+    intercept[CommitConflictException] {
+      IceLite.replaceBuckets(dir, "stale0", "compact", base,
+        mkRowsInBucket(3, 0), Set(0))
+    }
+    // a concurrent commit fills bucket 3, empty at the base
+    IceLite.commit(dir, "fill3", "append",
+      IceLite.stageFiles(dir, "fill3", mkRowsInBucket(2, 3), 1))
+    intercept[CommitConflictException] {
+      IceLite.replaceBuckets(dir, "stale3", "merge", base,
+        mkRowsInBucket(1, 3), Set(3))
+    }
+    assert(IceLite.read(spark, dir).count() == 2 + 2)
+    // bucket 1 is as the base read it: the stale rewrite rebases
+    val m = IceLite.replaceBuckets(dir, "rebase1", "merge", base,
+      mkRowsInBucket(5, 1), Set(1))
+    assert(m.version == base.version + 3 && m.operation == "merge")
+    assert(m.filesPerBucket.keySet == Set(1, 3))
+    assert(IceLite.read(spark, dir).count() == 5 + 2)
+  }
+
   test("load refuses metadata of any format but icelite/2, naming it") {
     val dir = tmpDir("ice_fmt")
     IceLite.create(dir, Model.pagesSchema, 4)
